@@ -4,12 +4,14 @@ import java.io.{File, IOException, RandomAccessFile}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -37,7 +39,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - `seekToEnd=true` starts at the current EOF (the reference's
   *    `do_not_tail=false` default), else at byte 0;
   *  - `maxBytesPerTrigger` bounds each micro-batch (newline-floored),
-  *    the per-source admission valve for bursty producers.
+  *    the per-source admission valve for bursty producers;
+  *  - a micro-batch's byte range is read as several line-aligned
+  *    ranges, one input partition each, sized by Spark's own file-split
+  *    rule (the one `spark.read.text` follows), so a backlog drain
+  *    parses on every core while a live batch of a few hundred KB stays
+  *    one range. Rows across ranges have no defined order.
   *
   * Schema is a single `value: STRING`, feeding the same
   * [[LogSource.parse]] regex stage as every other source. The file
@@ -80,6 +87,46 @@ object FollowFile {
       hi = lo
     }
     from
+  }
+
+  /** Smallest position in `[pos, to]` that starts a line (just past a
+    * '\n', or `to`). `to` must itself start a line — a floored offset.
+    * Bytes past the file's current end (truncated since `to` was
+    * floored) count as no newline.
+    */
+  private[sources] def ceilToLineStart(raf: RandomAccessFile, pos: Long, to: Long): Long = {
+    val buf = new Array[Byte](8192)
+    val avail = math.min(to, raf.length())
+    var lo = pos - 1 // the byte before `pos` decides whether `pos` starts a line
+    while (lo < avail) {
+      val n = math.min(buf.length.toLong, avail - lo).toInt
+      raf.seek(lo)
+      raf.readFully(buf, 0, n)
+      var i = 0
+      while (i < n) {
+        if (buf(i) == '\n') return lo + i + 1
+        i += 1
+      }
+      lo += n
+    }
+    to
+  }
+
+  /** Cut `[from, end)` into contiguous ranges of about `split` bytes,
+    * each cut moved forward to the next line start, so every range
+    * holds whole lines. A line longer than `split` stays in one range.
+    */
+  private[sources] def lineRanges(raf: RandomAccessFile, from: Long, end: Long,
+                                  split: Long): Seq[(Long, Long)] = {
+    require(split > 0, s"split size must be positive, got $split")
+    val out = Seq.newBuilder[(Long, Long)]
+    var lo = from
+    while (lo < end) {
+      val cut = if (end - lo > split) ceilToLineStart(raf, lo + split, end) else end
+      out += ((lo, cut))
+      lo = cut
+    }
+    out.result()
   }
 }
 
@@ -184,7 +231,17 @@ class FollowFileMicroBatchStream(path: String, seekToEnd: Boolean,
     val e = end.asInstanceOf[FollowOffset]
     // epoch bump = reopened file: the readable content is [0, e.pos)
     val from = if (e.epoch > s.epoch) 0L else s.pos
-    if (e.pos > from) Array(FollowFilePartition(path, from, e.pos)) else Array.empty
+    if (e.pos <= from) return Array.empty
+    val split = FilePartition.maxSplitBytes(SparkSession.active, e.pos - from)
+    val ranges =
+      if (e.pos - from <= split) Seq((from, e.pos))
+      else try {
+        val raf = new RandomAccessFile(path, "r")
+        try lineRanges(raf, from, e.pos, split) finally raf.close()
+      } catch {
+        case _: IOException => Seq((from, e.pos)) // vanished: the reader reports it
+      }
+    ranges.map { case (lo, hi) => FollowFilePartition(path, lo, hi): InputPartition }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = new FollowFileReaderFactory
@@ -193,18 +250,28 @@ class FollowFileMicroBatchStream(path: String, seekToEnd: Boolean,
   override def stop(): Unit = ()
 }
 
-case class FollowFilePartition(path: String, start: Long, end: Long) extends InputPartition
+case class FollowFilePartition(path: String, start: Long, end: Long) extends InputPartition {
+  // the reader holds the whole range in one byte array
+  require(end - start <= FollowFilePartition.MaxBytes,
+    s"follow-file range [$start, $end) of $path is ${end - start} bytes, over the " +
+      s"${FollowFilePartition.MaxBytes}-byte limit of one read: lower " +
+      "spark.sql.files.maxPartitionBytes or set maxBytesPerTrigger")
+}
+
+object FollowFilePartition {
+  val MaxBytes: Long = Int.MaxValue - 8L // the largest array a JVM allocates
+}
 
 class FollowFileReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new FollowFileReader(partition.asInstanceOf[FollowFilePartition])
 }
 
-/** Reads the byte range `[start, end)` — one micro-batch's worth of
-  * appended lines, bounded by `maxBytesPerTrigger` when set. The range
-  * always ends on a line boundary (the offset was floored), so every
-  * emitted line is complete; a trailing '\r' is stripped (CRLF logs),
-  * matching Hadoop's line reader.
+/** Reads the byte range `[start, end)` — one line-aligned slice of a
+  * micro-batch's appended lines. The range starts and ends on a line
+  * boundary (the offset was floored, the cuts moved to line starts), so
+  * every emitted line is complete; a trailing '\r' is stripped (CRLF
+  * logs), matching Hadoop's line reader.
   */
 class FollowFileReader(p: FollowFilePartition) extends PartitionReader[InternalRow] {
   private val bytes: Array[Byte] = {

@@ -18,14 +18,22 @@ import graft.sources.LogSource
   *
   * Mapping to Spark primitives:
   *  - tail -f / ReOpen     -> FileStreamSource on a directory (new
-  *    data arrives as new files; checkpointed, replayable)
-  *  - throttle             -> maxFilesPerTrigger (bounds each batch)
+  *    data arrives as new files; checkpointed, replayable), or with
+  *    `follow` the FollowFile source on ONE growing file (checkpointed
+  *    byte offsets, reopen on truncation), which reads each
+  *    micro-batch as line-aligned byte ranges in parallel — a backlog
+  *    parses on every core, a small live batch stays one range
+  *  - batch bound          -> maxFilesPerTrigger (directory) or
+  *    followMaxBytes (follow-file); the reference's row throttle is
+  *    [[Throttle.streaming]]
   *  - tumbling/sliding     -> window(ts, size, slide) + watermark
   *    (event time), or window over the ingest timestamp
   *    (processing time, reference default when idx_of_ts_field < 0)
   *  - per-window SQL       -> foreachBatch: register batch as t0, run
   *    the user's SQL — the exact "snapshot table per window fire"
-  *    semantics of the reference's in-mem engine, except distributed
+  *    semantics of the reference's in-mem engine, except distributed.
+  *    As in any SQL table, t0's rows have no defined order: a query
+  *    whose output depends on row order needs an ORDER BY
   *  - sink table/raw/rawv  -> Formatters over the (small) SQL result
   *
   * State at 100 TB: the watermark bounds window state; the shuffle is
@@ -155,22 +163,6 @@ object TailStream {
       .start()
   }
 
-  /** Shared tail of the snapshot pipelines: rows already carrying a
-    * `window` struct are packed per (window, shard) under the event-time
-    * watermark, and in APPEND mode a (window, shard) group only reaches
-    * foreachBatch once the watermark passes the window end — i.e. once
-    * the window is complete. The batch then explodes the packed rows
-    * back and runs the user SQL once per closed window over its full
-    * snapshot, exactly the reference's per-window in-mem engine fire.
-    *
-    * Scale shape: buffering a window's rows is inherent to "arbitrary
-    * SQL over the complete window" (the reference holds the window in
-    * an in-memory database on one node); here the buffer lives in the
-    * state store sharded `shards` ways across executors, so no single
-    * task holds a hot window. Aggregations expressible as DataFrame
-    * aggs should prefer [[windowedAgg]], which keeps running partials
-    * instead of rows.
-    */
   /** A per-window view the snapshot runner registers: `tname` filters
     * the packed rows by their `_tname` tag (None = all rows), `cols`
     * restricts to that source's own columns.
@@ -178,6 +170,28 @@ object TailStream {
   private case class SnapshotView(name: String, tname: Option[String],
                                   cols: Seq[String])
 
+  /** Shared tail of the snapshot pipelines: rows already carrying a
+    * `window` struct are packed per (window, shard) under the event-time
+    * watermark, and in APPEND mode a (window, shard) group only reaches
+    * foreachBatch once the watermark passes the window end — i.e. once
+    * the window is complete. The batch caches those packed groups (one
+    * row per (window, shard) holding window_start, window_end and the
+    * `_rows` array), reads the closing windows off that small frame,
+    * and runs the user SQL once per closed window over its full
+    * snapshot, exactly the reference's per-window in-mem engine fire.
+    * Each view explodes only the selected window's groups, so a fire
+    * scans the rows of its window, not of the whole batch.
+    *
+    * Scale shape: buffering a window's rows is inherent to "arbitrary
+    * SQL over the complete window" (the reference holds the window in
+    * an in-memory database on one node); here the buffer lives in the
+    * state store sharded `shards` ways across executors, so no single
+    * task holds a hot window. Aggregations expressible as DataFrame
+    * aggs should prefer [[windowedAgg]], which keeps running partials
+    * instead of rows. A backlog drain from a followed file reads its
+    * first batch as several byte ranges, so the partial packing before
+    * the state shuffle runs on every core.
+    */
   private def runSnapshotOn(windowed: DataFrame, dataCols: Seq[String],
                             views: Seq[SnapshotView],
                             sql: String, format: String, checkpointDir: String,
@@ -192,29 +206,30 @@ object TailStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val flat = batch
-          .withColumn("window_start", unix_timestamp(col("window.start")))
-          .withColumn("window_end", unix_timestamp(col("window.end")))
-          .select(col("window_start"), col("window_end"), explode(col("_rows")).as("_r"))
-          .select(Seq(col("window_start"), col("window_end")) ++
-            dataCols.map(c => col(s"_r.$c").as(c)): _*)
+        // one cached row per (window, shard); rows explode per window
+        val packed = batch
+          .select(unix_timestamp(col("window.start")).as("window_start"),
+            unix_timestamp(col("window.end")).as("window_end"), col("_rows"))
           .persist()
         try {
           // one SQL fire per closed window, in window order; the set of
           // windows closing per trigger is small (trigger/slide bounded)
-          val wins = flat.select("window_start", "window_end").distinct()
+          val wins = packed.select("window_start", "window_end").distinct()
             .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
           wins.foreach { case (ws, we) =>
-            val w = flat.filter(col("window_start") === ws && col("window_end") === we)
+            val w = packed.filter(col("window_start") === ws && col("window_end") === we)
+              .select(col("window_start"), col("window_end"), explode(col("_rows")).as("_r"))
+              .select(Seq(col("window_start"), col("window_end")) ++
+                dataCols.map(c => col(s"_r.$c").as(c)): _*)
             views.foreach { v =>
               v.tname.map(t => w.filter(col("_tname") === t)).getOrElse(w)
                 .select((v.cols.filterNot(c => c == "window" || c == "_tname") :+
                   "window_start" :+ "window_end").map(col): _*)
                 .createOrReplaceTempView(v.name)
             }
-            sink(Formatters.format(flat.sparkSession.sql(sql), format, Some(sql)))
+            sink(Formatters.format(packed.sparkSession.sql(sql), format, Some(sql)))
           }
-        } finally { flat.unpersist(); () }
+        } finally { packed.unpersist(); () }
       }
       .start()
 

@@ -3,6 +3,7 @@ package graft.sources
 import java.io.RandomAccessFile
 import java.nio.file.{Files, StandardOpenOption}
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
@@ -131,6 +132,73 @@ class FollowFileSpec extends SparkSpec {
       assert(FollowFile.floorToLineEnd(raf, 0, 4) == 4)
       assert(FollowFile.floorToLineEnd(raf, 2, 3) == 2)
     } finally raf.close()
+  }
+
+  private def plan(f: java.io.File, start: FollowFile.FollowOffset,
+                   end: FollowFile.FollowOffset): Seq[FollowFilePartition] = {
+    SparkSession.setActiveSession(spark)
+    new FollowFileMicroBatchStream(f.getAbsolutePath, seekToEnd = false, maxBytesPerTrigger = None)
+      .planInputPartitions(start, end).toSeq.map(_.asInstanceOf[FollowFilePartition])
+  }
+
+  private def read(p: FollowFilePartition): Seq[String] = {
+    val r = new FollowFileReader(p)
+    val out = Seq.newBuilder[String]
+    while (r.next()) out += r.get().getUTF8String(0).toString
+    out.result()
+  }
+
+  test("a micro-batch splits into contiguous line-aligned ranges under a small split size (unit)") {
+    import FollowFile.FollowOffset
+    val f = Files.createTempFile("graft-split", ".log").toFile
+    // CRLF lines of 20 bytes; a 4,000-byte line in the middle is longer
+    // than the split size; a split of 19 bytes puts every nominal cut
+    // between a '\r' and its '\n'
+    val short = (0 until 200).map(i => f"line-$i%05d xxxxxxx")
+    val long = "L" * 4000
+    val lines = short.take(100) ++ Seq(long) ++ short.drop(100)
+    Files.write(f.toPath, lines.mkString("", "\r\n", "\r\n").getBytes("UTF-8"))
+    val end = f.length()
+    val bytes = Files.readAllBytes(f.toPath)
+    val from = 20L * 3 // a mid-file start, as a later micro-batch has
+    val whole = read(FollowFilePartition(f.getAbsolutePath, from, end))
+    assert(whole == lines.drop(3))
+    // the default split (openCostInBytes = 4 MB) keeps this batch whole
+    assert(plan(f, FollowOffset(0, from), FollowOffset(0, end)).size == 1)
+    val parts = withSplit(19)(plan(f, FollowOffset(0, from), FollowOffset(0, end)))
+    assert(parts.size > 100, parts.size)
+    // contiguous, covering [from, end) exactly
+    assert(parts.head.start == from && parts.last.end == end)
+    parts.zip(parts.tail).foreach { case (a, b) => assert(a.end == b.start, (a, b)) }
+    assert(parts.forall(p => p.end > p.start))
+    // every range starts right after a '\n'
+    parts.foreach(p => assert(bytes((p.start - 1).toInt) == '\n', p))
+    // CRLF stripped at every cut; the long line stays whole; the rows
+    // equal those of one single-range read, in order
+    val rows = parts.flatMap(read)
+    assert(rows == whole)
+    assert(rows.count(_ == long) == 1)
+    assert(parts.exists(p => read(p) == Seq(long)))
+    // epoch bump (truncation): the new file is read from byte 0
+    val reopened = withSplit(19)(plan(f, FollowOffset(0, end + 100), FollowOffset(1, end)))
+    assert(reopened.head.start == 0L && reopened.last.end == end)
+    assert(reopened.flatMap(read) == lines)
+  }
+
+  test("split ranges read the same rows as one range, end to end") {
+    val f = Files.createTempFile("graft-split-e2e", ".log").toFile
+    val lines = (1 to 400).map(i => f"2024-01-01 00:${i / 60 % 60}%02d:${i % 60}%02d INFO $i")
+    append(f, lines: _*)
+    val one = runOnce(f, Files.createTempDirectory("graft-split1").toFile, "fs1")
+    val many = withSplit(256)(runOnce(f, Files.createTempDirectory("graft-splitn").toFile, "fsn"))
+    assert(one.map(_._2) == (1 to 400).map(_.toLong))
+    assert(many == one)
+  }
+
+  test("a range over the one-read limit fails with a clear message") {
+    val e = intercept[IllegalArgumentException](
+      FollowFilePartition("/x.log", 0L, FollowFilePartition.MaxBytes + 1))
+    assert(e.getMessage.contains("spark.sql.files.maxPartitionBytes"), e.getMessage)
   }
 
   test("follow config flows through TailStream: windowed SQL over a growing file") {

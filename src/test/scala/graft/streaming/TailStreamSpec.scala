@@ -459,6 +459,93 @@ class TailStreamSpec extends SparkSpec {
     assert(out == Seq("1704067200,INFO,5,200"), out.toString)
   }
 
+  /** One AvailableNow run over fresh checkpoints; returns every sink
+    * block with the micro-batch that emitted it.
+    */
+  private def snapshotBlocks(start: (String, Trigger, String => Unit) => Unit): Seq[(String, String)] = {
+    val captured = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val ckpt = Files.createTempDirectory("graft-split-ckpt").toFile
+    start(ckpt.getAbsolutePath, Trigger.AvailableNow(), s =>
+      captured.add((spark.sparkContext.getLocalProperty("streaming.sql.batchId"), s)))
+    import scala.jdk.CollectionConverters._
+    captured.asScala.toSeq
+  }
+
+  /** 600 lines over three 60 s windows plus a line at 00:30:00, so one
+    * batch closes all three windows at once.
+    */
+  private def followLog(name: String, line: Int => String): java.io.File = {
+    val f = Files.createTempFile(name, ".log").toFile
+    Files.write(f.toPath, ((0 until 600).map(line) :+ line(1800))
+      .mkString("", "\n", "\n").getBytes("UTF-8"))
+    f
+  }
+
+  private def at(sec: Int): String = f"2024-01-01 00:${sec / 60}%02d:${sec % 60}%02d"
+
+  test("runSnapshot over a followed file: split ranges give byte-identical sink output") {
+    val levels = Seq("INFO", "WARN", "ERROR")
+    val f = followLog("graft-split-snap", i =>
+      s"${at(if (i < 600) i * 180 / 600 else i)} ${levels(i % 3)} ${i % 97}")
+    val cfg = TailStream.Config(
+      dir = f.getAbsolutePath, pattern = pattern, follow = true,
+      windowSizeSec = 60, tsField = Some("ts"), watermarkDelay = "0 seconds", format = "raw",
+      sql = Some("""SELECT window_start, level, count(*) AS n, sum(ms) AS s
+                    FROM t0 GROUP BY 1, 2 ORDER BY 1, 2"""))
+    def go(): Seq[(String, String)] = snapshotBlocks { (ckpt, trigger, sink) =>
+      TailStream.runSnapshot(spark, cfg, ckpt, sink, trigger, shards = 4)
+        .awaitTermination(60000)
+    }
+    import graft.sources.{FollowFile, FollowFileMicroBatchStream}
+    val ranges = withSplit(512) {
+      org.apache.spark.sql.SparkSession.setActiveSession(spark)
+      new FollowFileMicroBatchStream(f.getAbsolutePath, false, None)
+        .planInputPartitions(FollowFile.FollowOffset(0, 0), FollowFile.FollowOffset(0, f.length()))
+    }
+    assert(ranges.length > 10, ranges.length)
+    val single = go()
+    val split = withSplit(512)(go())
+    assert(split.map(_._2) == single.map(_._2))
+    // three windows, all closed by one batch
+    assert(single.size == 3, single.toString)
+    assert(single.map(_._1).distinct.size == 1, single.toString)
+    val q = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    single.foreach(b => q.add(b._2))
+    val rows = rawRows(q)
+    assert(rows.map(_.split(",")(2).toInt).sum == 600, rows.toString)
+    val errors = (0 until 200).filter(_ % 3 == 2)
+    assert(rows.head == s"1704067200,ERROR,${errors.size},${errors.map(_ % 97).sum}", rows.toString)
+  }
+
+  test("runMultiSnapshot over followed files: split ranges give byte-identical t0/t1 output") {
+    val patternB =
+      """(?P<ts__date>\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}) (?P<level__str>\w+) code=(?P<code__int>\d+)"""
+    val a = followLog("graft-split-ma", i => s"${at(if (i < 600) i * 180 / 600 else i)} INFO ${i % 50}")
+    val b = followLog("graft-split-mb", i => s"${at(if (i < 600) i * 180 / 600 else i)} WARN code=${200 + i % 5}")
+    val cfgs = Seq((a, pattern), (b, patternB)).map { case (f, p) =>
+      TailStream.Config(dir = f.getAbsolutePath, pattern = p, follow = true,
+        windowSizeSec = 60, tsField = Some("ts"), watermarkDelay = "0 seconds")
+    }
+    val sql = """SELECT 't0' AS src, window_start, count(*) AS n, sum(ms) AS s FROM t0 GROUP BY 2
+                 UNION ALL
+                 SELECT 't1', window_start, count(*), sum(code) FROM t1 GROUP BY 2
+                 ORDER BY 1, 2"""
+    def go(): Seq[(String, String)] = snapshotBlocks { (ckpt, trigger, sink) =>
+      TailStream.runMultiSnapshot(spark, cfgs, sql, "raw", ckpt, sink, trigger, shards = 4)
+        .awaitTermination(60000)
+    }
+    val single = go()
+    val split = withSplit(512)(go())
+    assert(split.map(_._2) == single.map(_._2))
+    val q = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    single.foreach(x => q.add(x._2))
+    val rows = rawRows(q)
+    // per window: 200 rows of each source, split back out by _tname
+    assert(rows.size == 6, rows.toString)
+    assert(rows.forall(_.split(",")(2) == "200"), rows.toString)
+    assert(rows.head == s"t0,1704067200,200,${(0 until 200).map(_ % 50).sum}", rows.toString)
+  }
+
   test("processing-time windows apply when no ts field is configured") {
     // the reference's idx_of_ts_field < 0 default: window over arrival time
     val s = spark
