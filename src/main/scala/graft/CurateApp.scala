@@ -41,7 +41,7 @@ object CurateApp {
     val docsDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(1).getOrElse("/tmp/graft_curated")
     val benchMod = args.lift(2).map(_.toInt).getOrElse(97)
-    val spark = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    val spark = GraftSession.get()
     val doCounts = sys.env.getOrElse("GRAFT_CURATE_COUNTS", "1") != "0"
     val t0 = System.nanoTime()
     val report = run(spark, docsDir, outDir, benchMod, doCounts)

@@ -23,7 +23,7 @@ object GateProbe {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
         "/root/testdata/sf0.1")
-    val s = GraftSession.get(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    val s = GraftSession.get()
     def sets(df: DataFrame): Map[Long, Set[Long]] =
       df.select(col("query_id").cast("long"), col("neighbor_id").cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(1)))

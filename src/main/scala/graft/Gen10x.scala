@@ -42,7 +42,7 @@ object Gen10x {
       else allFacts.toSet
     require(wanted.subsetOf(allFacts.toSet),
       s"Gen10x: unknown tables ${wanted -- allFacts}")
-    val spark = GraftSession.get("32")
+    val spark = GraftSession.get()
     def rd(t: String) = spark.read.parquet(s"$src/$t.parquet")
     def wr(df: DataFrame, t: String) =
       df.write.mode("overwrite").parquet(s"$dst/$t.parquet")

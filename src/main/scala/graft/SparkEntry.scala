@@ -326,8 +326,8 @@ object SparkEntry {
   /** The seeded-ANN rankings behind the gate queries, exposed
     * package-private at the EXACT shipped parameters: the probes and
     * specs that justify the pinned gate thresholds (GateProbe,
-    * RecallProbe, AnnRecallSpec) call THESE, so tuning a parameter
-    * here is the one and only knob — the measurement surfaces cannot
+    * AnnRecallSpec) call THESE, so tuning a parameter here is the
+    * one and only knob — the measurement surfaces cannot
     * silently drift from the driver gates (r17 review finding).
     */
   private[graft] object AnnRankings {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,35 +12,13 @@ object Verify {
     // make silent-default runs identifiable in harness logs: a missing
     // arg falls back to a local dataset, which must be visible, not tacit
     System.err.println(s"[verify] sfDir=$sfDir outDir=$outDir (args=${args.mkString(",")})")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // the same session Bench measures under (CBO, 64 MB broadcast, AQE);
     // SPARK_GRAFT_MASTER=local-cluster[2,8,3072] runs the whole gate
     // across REAL executor JVMs — the cheapest proof that every
     // TypedImperativeAggregate's serialize/merge/deserialize and every
     // broadcast survives a process boundary (local[n] keeps them all
-    // in-process). Executors need the graft classes and the JDK17
-    // module opens on their own command lines; the driver's sbt-side
-    // settings don't propagate.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .master(master)
-    val builder =
-      if (master.startsWith("local-cluster")) builder0
-        .config("spark.executor.extraClassPath",
-          new java.io.File("target/scala-2.13/classes").getAbsolutePath)
-        .config("spark.executor.extraJavaOptions",
-          org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptions())
-      else builder0
-    val spark = builder
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // reclaim reliable-checkpoint files (Caching.sealOver) when the
-      // sealed result is GC'd — same setting as GraftSession
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // in-process)
+    val spark = GraftSession.get()
     // SPARK_GRAFT_CHECKPOINT_DIR routes every sealed operator through
     // the RELIABLE checkpoint branch (Caching.sealOver's cluster-mode
     // path) instead of localCheckpoint — the full query surface then

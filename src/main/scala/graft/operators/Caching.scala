@@ -43,19 +43,25 @@ import org.apache.spark.sql.DataFrame
   * dir the sealed result is only as durable as its executors.
   */
 private[graft] object Caching {
-  /** Dev-only escape hatch for [[graft.PlanDump]] (r20, VERDICT item:
-    * the r19 "before" plans were 5-node post-checkpoint stubs): under
-    * `-Dgraft.seal.skip=1` the seal is a PASS-THROUGH — no checkpoint,
-    * caches dropped immediately — so `.explain` shows the full
-    * pre-seal lineage the query would otherwise truncate. Never set
-    * by Bench/Verify/production paths; plans dumped this way are for
-    * READING, not executing (an unsealed repartitionByRange consumed
-    * twice may sample different bounds).
+  private val unsealed = ThreadLocal.withInitial[Boolean](() => false)
+
+  /** Runs `body` with [[sealOver]] as a PASS-THROUGH on the calling
+    * thread: no checkpoint, cached inputs released at once, so a plan
+    * built inside shows the full pre-seal lineage instead of a
+    * `Scan ExistingRDD` stub. Only [[graft.Probe]]'s plan dump uses
+    * it; plans built this way are for READING, not executing (an
+    * unsealed repartitionByRange consumed twice may sample different
+    * bounds). Other threads, and this one once `body` returns, seal
+    * as usual.
     */
-  private def skipSeal: Boolean = sys.props.get("graft.seal.skip").contains("1")
+  def withoutSeals[A](body: => A): A = {
+    val prev = unsealed.get
+    unsealed.set(true)
+    try body finally unsealed.set(prev)
+  }
 
   def sealOver(result: DataFrame, cached: DataFrame*): DataFrame =
-    if (skipSeal) { cached.foreach { df => df.unpersist(); () }; result }
+    if (unsealed.get) { cached.foreach { df => df.unpersist(); () }; result }
     else try {
       val sc = result.sparkSession.sparkContext
       if (sc.getCheckpointDir.isDefined) {

@@ -253,7 +253,8 @@ object Graph {
     * building the weighted edge list (an aggregate the CALLER runs —
     * this operator takes edges as given); each iteration here is one
     * join + one dst-keyed aggregate, `iters` rounds sequenced by the
-    * driver (bounded, loud). Output: (id, rank) for every node.
+    * driver (bounded, loud). Output: (id, rank) for every node;
+    * edges with a null end are dropped.
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                weightCol: String, d: Double = 0.85, iters: Int = 3): DataFrame = {
@@ -262,10 +263,14 @@ object Graph {
     // persisted: THREE setup consumers read the edge projection
     // (nodes, outW, the share join) and on a corpus-derived graph its
     // lineage is the expensive part (t45 tokenizes the whole corpus,
-    // q38b aggregates lineitem)
+    // q38b aggregates lineitem). An edge with a null end joins no
+    // node: a null _dst would otherwise read as "no out-edge" in the
+    // rank join and count its source's whole rank as dangling mass
+    // while that source's real edges still contribute
     val e = edges.select(col(srcCol).cast("long").as("_src"),
       col(dstCol).cast("long").as("_dst"),
-      col(weightCol).cast("long").as("_w")).persist()
+      col(weightCol).cast("long").as("_w"))
+      .filter(col("_src").isNotNull && col("_dst").isNotNull).persist()
     val nodes = e.select(col("_src").as("id"))
       .unionByName(e.select(col("_dst").as("id"))).distinct().persist()
     val outW = e.groupBy(col("_src")).agg(sum(col("_w")).as("_ow"))

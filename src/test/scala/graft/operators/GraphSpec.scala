@@ -80,6 +80,14 @@ class GraphSpec extends SparkSpec {
     assert(got.keySet == Set(1L, 2L, 3L))
     assert(math.abs(got.values.sum - 1.0) < 1e-6, s"mass: ${got.values.sum}")
     assert(got(3L) > got(1L) && got(1L) == got(2L), got.toString)
+    // a null-dst edge out of 1 is dropped, not counted as 1's whole
+    // rank going dangling: mass stays 1 and the ranks are unchanged
+    val withNull = Seq((1L, Option(3L), 1L), (2L, Option(3L), 1L), (1L, None, 1L))
+      .toDF("src", "dst", "w")
+    val gotNull = Graph.pageRank(withNull, "src", "dst", "w", d = 0.85, iters = 3)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(math.abs(gotNull.values.sum - 1.0) < 1e-6, s"mass: ${gotNull.values.sum}")
+    assert(gotNull == got, gotNull.toString)
   }
 
   test("labelPropagation: two weight-tight cliques keep separate labels; min-label wins ties") {
