@@ -9,7 +9,8 @@ import graft.sinks.Formatters
 import graft.sources.LogSource
 
 /** The reference's whole pipeline (sql/squeryer.go:370-430) as one
-  * Structured Streaming builder:
+  * Structured Streaming builder, [[TailStream.start]], for any number of
+  * tailed sources:
   *
   * {{{
   * tail(dir) -> regex parse -> filter -> throttle -> window
@@ -29,11 +30,11 @@ import graft.sources.LogSource
   *  - tumbling/sliding     -> window(ts, size, slide) + watermark
   *    (event time), or window over the ingest timestamp
   *    (processing time, reference default when idx_of_ts_field < 0)
-  *  - per-window SQL       -> foreachBatch: register batch as t0, run
-  *    the user's SQL — the exact "snapshot table per window fire"
-  *    semantics of the reference's in-mem engine, except distributed.
-  *    As in any SQL table, t0's rows have no defined order: a query
-  *    whose output depends on row order needs an ORDER BY
+  *  - per-window SQL       -> one foreachBatch: register each source's
+  *    rows as t0..tN, run the user's SQL — the exact "snapshot table per
+  *    window fire" semantics of the reference's in-mem engine, except
+  *    distributed. As in any SQL table, t0's rows have no defined
+  *    order: a query whose output depends on row order needs an ORDER BY
   *  - sink table/raw/rawv  -> Formatters over the (small) SQL result
   *
   * State at 100 TB: the watermark bounds window state; the shuffle is
@@ -49,6 +50,10 @@ import graft.sources.LogSource
   * formatter, exactly as with any Spark foreachBatch sink.
   */
 object TailStream {
+
+  /** The SQL a run fires when its config gives none. */
+  val DefaultSql: String =
+    "SELECT window_start, window_end, count(*) AS n FROM t0 GROUP BY 1, 2 ORDER BY 1"
 
   final case class Config(
       dir: String,
@@ -83,8 +88,8 @@ object TailStream {
       followMaxBytes: Option[Long] = None)
 
   /** source → parse → filter → throttle, as an unbounded DataFrame.
-    * `tname` tags every row for the multi-source union (runMulti /
-    * runMultiSnapshot) — the tag rides through the throttle, which
+    * `tname` tags every row for the multi-source union ([[start]] with
+    * N > 1) — the tag rides through the throttle, which
     * keeps the full row schema.
     */
   def parsed(spark: SparkSession, cfg: Config,
@@ -128,132 +133,6 @@ object TailStream {
     }
   }
 
-  /** Full pipeline, INCREMENTAL flavor: each micro-batch's windowed
-    * rows are registered as table `t0` (flattened window bounds as
-    * window_start/window_end epoch seconds) and the user SQL runs over
-    * it; the result goes to `sink` formatted as table/raw/rawv.
-    *
-    * Under a continuous trigger a window spanning several micro-batches
-    * is reported once per batch, over that batch's rows only — a
-    * partial, incremental preview (useful as a low-latency tail).
-    * For the reference's fire-once-per-complete-window semantics use
-    * [[runSnapshot]]; for aggregations expressible as DataFrame aggs
-    * use [[windowedAgg]] (stateful, no row buffering).
-    *
-    * `checkpointDir` makes the stream restartable (the reference's
-    * seek-to-end tail has no such guarantee — this is strictly
-    * stronger).
-    */
-  def run(spark: SparkSession, cfg: Config, checkpointDir: String,
-          sink: String => Unit = s => if (s.nonEmpty) println(s),
-          trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery = {
-    val q = cfg.sql.getOrElse(
-      "SELECT window_start, window_end, count(*) AS n FROM t0 GROUP BY 1, 2 ORDER BY 1")
-    windowed(parsed(spark, cfg), cfg).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val flat = batch
-          .withColumn("window_start", unix_timestamp(col("window.start")))
-          .withColumn("window_end", unix_timestamp(col("window.end")))
-          .drop("window")
-        flat.createOrReplaceTempView("t0")
-        sink(Formatters.format(flat.sparkSession.sql(q), cfg.format, Some(q)))
-      }
-      .start()
-  }
-
-  /** A per-window view the snapshot runner registers: `tname` filters
-    * the packed rows by their `_tname` tag (None = all rows), `cols`
-    * restricts to that source's own columns.
-    */
-  private case class SnapshotView(name: String, tname: Option[String],
-                                  cols: Seq[String])
-
-  /** Shared tail of the snapshot pipelines: rows already carrying a
-    * `window` struct are packed per (window, shard) under the event-time
-    * watermark, and in APPEND mode a (window, shard) group only reaches
-    * foreachBatch once the watermark passes the window end — i.e. once
-    * the window is complete. The batch caches those packed groups (one
-    * row per (window, shard) holding window_start, window_end and the
-    * `_rows` array), reads the closing windows off that small frame,
-    * and runs the user SQL once per closed window over its full
-    * snapshot, exactly the reference's per-window in-mem engine fire.
-    * Each view explodes only the selected window's groups, so a fire
-    * scans the rows of its window, not of the whole batch.
-    *
-    * Scale shape: buffering a window's rows is inherent to "arbitrary
-    * SQL over the complete window" (the reference holds the window in
-    * an in-memory database on one node); here the buffer lives in the
-    * state store sharded `shards` ways across executors, so no single
-    * task holds a hot window. Aggregations expressible as DataFrame
-    * aggs should prefer [[windowedAgg]], which keeps running partials
-    * instead of rows. A backlog drain from a followed file reads its
-    * first batch as several byte ranges, so the partial packing before
-    * the state shuffle runs on every core.
-    */
-  private def runSnapshotOn(windowed: DataFrame, dataCols: Seq[String],
-                            views: Seq[SnapshotView],
-                            sql: String, format: String, checkpointDir: String,
-                            sink: String => Unit, trigger: Trigger,
-                            shards: Int): StreamingQuery =
-    windowed
-      .groupBy(col("window"),
-        pmod(xxhash64(dataCols.map(col): _*), lit(shards)).as("_shard"))
-      .agg(collect_list(struct(dataCols.map(col): _*)).as("_rows"))
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // one cached row per (window, shard); rows explode per window
-        val packed = batch
-          .select(unix_timestamp(col("window.start")).as("window_start"),
-            unix_timestamp(col("window.end")).as("window_end"), col("_rows"))
-          .persist()
-        try {
-          // one SQL fire per closed window, in window order; the set of
-          // windows closing per trigger is small (trigger/slide bounded)
-          val wins = packed.select("window_start", "window_end").distinct()
-            .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-          wins.foreach { case (ws, we) =>
-            val w = packed.filter(col("window_start") === ws && col("window_end") === we)
-              .select(col("window_start"), col("window_end"), explode(col("_rows")).as("_r"))
-              .select(Seq(col("window_start"), col("window_end")) ++
-                dataCols.map(c => col(s"_r.$c").as(c)): _*)
-            views.foreach { v =>
-              v.tname.map(t => w.filter(col("_tname") === t)).getOrElse(w)
-                .select((v.cols.filterNot(c => c == "window" || c == "_tname") :+
-                  "window_start" :+ "window_end").map(col): _*)
-                .createOrReplaceTempView(v.name)
-            }
-            sink(Formatters.format(packed.sparkSession.sql(sql), format, Some(sql)))
-          }
-        } finally { packed.unpersist(); () }
-      }
-      .start()
-
-  /** Full pipeline, COMPLETE-WINDOW flavor: the user SQL fires exactly
-    * once per window, over that window's full contents, when the
-    * event-time watermark closes it — the reference's window-snapshot
-    * semantics (squeryer.go window stage) made distributed. Requires
-    * `tsField` (completeness is only defined relative to a watermark).
-    */
-  def runSnapshot(spark: SparkSession, cfg: Config, checkpointDir: String,
-                  sink: String => Unit = s => if (s.nonEmpty) println(s),
-                  trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
-                  shards: Int = 32): StreamingQuery = {
-    require(cfg.tsField.isDefined,
-      "runSnapshot needs tsField: fire-once-per-complete-window is defined " +
-        "by the event-time watermark (use run() for processing-time tails)")
-    val q = cfg.sql.getOrElse(
-      "SELECT window_start, window_end, count(*) AS n FROM t0 GROUP BY 1, 2 ORDER BY 1")
-    val src = parsed(spark, cfg)
-    runSnapshotOn(windowed(src, cfg), src.columns.toSeq,
-      Seq(SnapshotView("t0", None, src.columns.toSeq)),
-      q, cfg.format, checkpointDir, sink, trigger, shards)
-  }
-
   /** The reference's multi-file SQL (JOIN across t0..tN inside one
     * window snapshot, squeryer.go:228) in its Spark-native form: a
     * watermarked stream-stream join. Each source parses and windows
@@ -288,133 +167,158 @@ object TailStream {
     l.join(r, joinCols)
   }
 
-  /** Per-window SQL over two joined tailed sources, INCREMENTAL
-    * flavor: the joined stream is registered as `t0` per micro-batch
-    * (window bounds flattened) and `sql` runs over it. Like [[run]],
-    * a window whose matches surface across several micro-batches is
-    * previewed per batch; [[runJoinSnapshot]] gives the fire-once
-    * complete-window form.
+  /** A view [[fire]] registers: `tname` keeps only the rows carrying
+    * that `_tname` tag (None = all rows), `cols` are the source's own
+    * columns.
     */
-  def runJoin(spark: SparkSession, left: Config, right: Config,
-              keys: Seq[String], sql: String, format: String,
-              checkpointDir: String,
-              sink: String => Unit = s => if (s.nonEmpty) println(s),
-              trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery =
-    joinedStreams(spark, left, right, keys).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val flat = batch
-          .withColumn("window_start", unix_timestamp(col("window.start")))
-          .withColumn("window_end", unix_timestamp(col("window.end")))
-          .drop("window")
-        flat.createOrReplaceTempView("t0")
-        sink(Formatters.format(flat.sparkSession.sql(sql), format, Some(sql)))
-      }
-      .start()
+  private case class View(name: String, tname: Option[String], cols: Seq[String])
 
-  /** The reference's FULL multi-file surface (squeryer.go:429
-    * "create multi table by metafield __tname"): N tailed sources,
-    * each registered per micro-batch as its own view t0..tN inside
-    * one window snapshot, and the user SQL free to join/union any of
-    * them. Spark-native form: every source parses with a `_tname`
-    * tag, the streams union by name (missing columns null-filled —
-    * sources keep their own schemas), window once, and foreachBatch
-    * splits the batch back into per-source views, each restricted to
-    * its own columns plus the flattened window bounds.
+  /** The reference's one pipeline (squeryer.go:370-430) for any number
+    * of tailed sources: merge them, window once, load each source as its
+    * own view t0..tN, run the SQL and sink the result. One source is
+    * simply N = 1.
     *
-    * The window/slide/watermark settings of the FIRST config govern
-    * all sources (the reference's WindowCfg is likewise global);
-    * each source keeps its own pattern, filter, throttle,
-    * seek-to-end (doNotTail/tailSince), and tsField name. One union
-    * stream means one checkpoint and one
-    * trigger clock for all tails, exactly like the reference's single
-    * merged window stage.
+    * Input side:
+    *  - `joinKeys = None`: every source parses on its own (pattern,
+    *    filter, throttle, seek-to-end, tsField name) and windows under
+    *    the FIRST config's window/slide/watermark (the reference's
+    *    WindowCfg is likewise global). With N > 1 each row is tagged
+    *    `_tname` = t<i> and the streams union by name (missing columns
+    *    null-filled), so all tails share one checkpoint and one trigger
+    *    clock, like the reference's single merged window stage — "create
+    *    multi table by metafield __tname" (squeryer.go:429). Each source
+    *    comes back as view t<i> restricted to its own columns. N = 1 adds
+    *    no tag and no union.
+    *  - `joinKeys = Some(keys)`: exactly two sources through
+    *    [[joinedStreams]], seen as one view t0.
+    *
+    * Output side, `snapshot = false` (INCREMENTAL): each micro-batch's
+    * rows fire the SQL once. A window whose rows span several
+    * micro-batches is reported once per batch, over that batch's rows
+    * only — a partial, incremental preview (useful as a low-latency
+    * tail).
+    *
+    * `snapshot = true` (COMPLETE WINDOW, needs `tsField` on every
+    * source): the SQL fires exactly once per window, over that window's
+    * full contents, when the event-time watermark closes it — the
+    * reference's window-snapshot semantics made distributed. Rows are
+    * packed per (window, shard) under the watermark, and in APPEND mode
+    * a (window, shard) group only reaches the batch once the watermark
+    * passes the window end. The batch caches those packed groups (one
+    * row per (window, shard) holding window_start, window_end and the
+    * `_rows` array), reads the closing windows off that small frame, and
+    * fires once per closed window, in window order; each view explodes
+    * only the selected window's groups, so a fire scans the rows of its
+    * window, not of the whole batch. A join feeds the same packing (two
+    * chained stateful operators — join state then window state, both
+    * watermark-bounded).
+    *
+    * Scale shape: buffering a window's rows is inherent to "arbitrary
+    * SQL over the complete window" (the reference holds the window in
+    * an in-memory database on one node); here the buffer lives in the
+    * state store sharded `shards` ways across executors, so no single
+    * task holds a hot window. Aggregations expressible as DataFrame aggs
+    * should prefer [[windowedAgg]], which keeps running partials instead
+    * of rows. A backlog drain from a followed file reads its first batch
+    * as several byte ranges, so the partial packing before the state
+    * shuffle runs on every core.
+    *
+    * The SQL (default [[DefaultSql]]) and the format come from the first
+    * config. `checkpointDir` makes the stream restartable (the
+    * reference's seek-to-end tail has no such guarantee — this is
+    * strictly stronger).
     */
-  def runMulti(spark: SparkSession, cfgs: Seq[Config], sql: String,
-               format: String, checkpointDir: String,
-               sink: String => Unit = s => if (s.nonEmpty) println(s),
-               trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery = {
-    require(cfgs.nonEmpty, "runMulti needs at least one source")
-    val win = cfgs.head
-    val parts = cfgs.zipWithIndex.map { case (c, i) =>
-      // route through parsed() so each source's throttle and
-      // seek-to-end (doNotTail/tailSince) config actually applies —
-      // only the WINDOW settings come from the first config
-      val src = parsed(spark, c, tname = Some(s"t$i"))
-      windowed(src, win.copy(tsField = c.tsField))
+  def start(spark: SparkSession, sources: Seq[Config], checkpointDir: String,
+            sink: String => Unit = s => if (s.nonEmpty) println(s),
+            trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
+            snapshot: Boolean = false, joinKeys: Option[Seq[String]] = None,
+            shards: Int = 32): StreamingQuery = {
+    require(sources.nonEmpty, "start needs at least one source")
+    require(!snapshot || sources.forall(_.tsField.isDefined),
+      "snapshot mode needs tsField on every source: fire-once-per-complete-window " +
+        "is defined by the event-time watermark (use incremental mode for " +
+        "processing-time tails)")
+    val (stream, views) = joinKeys match {
+      case Some(keys) =>
+        require(sources.size == 2, s"a join needs exactly 2 sources, got ${sources.size}")
+        val joined = joinedStreams(spark, sources(0), sources(1), keys)
+        (joined, Seq(View("t0", None, joined.columns.filterNot(_ == "window").toSeq)))
+      case None =>
+        def tag(i: Int): Option[String] = if (sources.size > 1) Some(s"t$i") else None
+        // each source keeps its own throttle and seek-to-end config;
+        // only the WINDOW settings come from the first config
+        val parts = sources.zipWithIndex.map { case (c, i) =>
+          windowed(parsed(spark, c, tname = tag(i)), sources.head.copy(tsField = c.tsField))
+        }
+        (parts.reduce(_.unionByName(_, allowMissingColumns = true)),
+          parts.zipWithIndex.map { case (p, i) =>
+            View(s"t$i", tag(i), p.columns.filterNot(c => c == "window" || c == "_tname").toSeq)
+          })
     }
-    // per-source data columns (minus the tag), for re-splitting below
-    val perTable = parts.map(_.columns.filterNot(_ == "_tname").toSeq)
-    val unioned = parts.reduce(_.unionByName(_, allowMissingColumns = true))
-    unioned.writeStream
+    val sql = sources.head.sql.getOrElse(DefaultSql)
+    val format = sources.head.format
+    val dataCols = stream.columns.filterNot(_ == "window").toSeq
+    val out =
+      if (!snapshot) stream
+      else stream
+        .groupBy(col("window"),
+          pmod(xxhash64(dataCols.map(col): _*), lit(shards)).as("_shard"))
+        .agg(collect_list(struct(dataCols.map(col): _*)).as("_rows"))
+    out.writeStream
+      .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val flat = batch
-          .withColumn("window_start", unix_timestamp(col("window.start")))
-          .withColumn("window_end", unix_timestamp(col("window.end")))
-          .drop("window")
-        perTable.zipWithIndex.foreach { case (cols, i) =>
-          flat.filter(col("_tname") === s"t$i")
-            .select((cols.filterNot(_ == "window") :+
-              "window_start" :+ "window_end").map(col): _*)
-            .createOrReplaceTempView(s"t$i")
+        if (!snapshot) fire(flatWindow(batch, dataCols), views, sql, format, sink)
+        else {
+          // one cached row per (window, shard); rows explode per window
+          val packed = flatWindow(batch, Seq("_rows")).persist()
+          try {
+            // the set of windows closing per trigger is small
+            // (trigger/slide bounded)
+            val wins = packed.select("window_start", "window_end").distinct()
+              .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+            wins.foreach { case (ws, we) =>
+              val w = packed.filter(col("window_start") === ws && col("window_end") === we)
+                .select(col("window_start"), col("window_end"), explode(col("_rows")).as("_r"))
+                .select(Seq(col("window_start"), col("window_end")) ++
+                  dataCols.map(c => col(s"_r.$c").as(c)): _*)
+              fire(w, views, sql, format, sink)
+            }
+          } finally { packed.unpersist(); () }
         }
-        sink(Formatters.format(flat.sparkSession.sql(sql), format, Some(sql)))
       }
       .start()
   }
 
-  /** Complete-window SQL over two joined tailed sources: the
-    * watermarked stream-stream join feeds the same append-mode
-    * window-packing stage as [[runSnapshot]] (two chained stateful
-    * operators — join state then window state, both watermark-bounded),
-    * so `sql` fires exactly once per window over all joined rows of
-    * that window.
+  /** The `window` struct as window_start/window_end epoch seconds,
+    * followed by the `rest` columns.
     */
-  def runJoinSnapshot(spark: SparkSession, left: Config, right: Config,
-                      keys: Seq[String], sql: String, format: String,
-                      checkpointDir: String,
-                      sink: String => Unit = s => if (s.nonEmpty) println(s),
-                      trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
-                      shards: Int = 32): StreamingQuery = {
-    val joined = joinedStreams(spark, left, right, keys)
-    val dataCols = joined.columns.filterNot(_ == "window").toSeq
-    runSnapshotOn(joined, dataCols, Seq(SnapshotView("t0", None, dataCols)),
-      sql, format, checkpointDir, sink, trigger, shards)
+  private def flatWindow(df: DataFrame, rest: Seq[String]): DataFrame =
+    df.select(Seq(unix_timestamp(col("window.start")).as("window_start"),
+      unix_timestamp(col("window.end")).as("window_end")) ++ rest.map(col): _*)
+
+  /** One SQL fire: register every view over `rows` (window bounds already
+    * flat), run the SQL and hand the formatted result to the sink.
+    */
+  private def fire(rows: DataFrame, views: Seq[View], sql: String, format: String,
+                   sink: String => Unit): Unit = {
+    views.foreach { v =>
+      v.tname.map(t => rows.filter(col("_tname") === t)).getOrElse(rows)
+        .select((v.cols :+ "window_start" :+ "window_end").map(col): _*)
+        .createOrReplaceTempView(v.name)
+    }
+    sink(Formatters.format(rows.sparkSession.sql(sql), format, Some(sql)))
   }
 
-  /** Complete-window form of [[runMulti]]: N tailed sources still
-    * become per-window views t0..tN, but the SQL fires exactly once
-    * per window — after the watermark closes it — over every source's
-    * full window contents. Same append-mode (window, shard) packing as
-    * [[runSnapshot]], with the `_tname` tag carried through the packed
-    * rows to split the snapshot back into per-source views.
+  /** [[start]] over one source in snapshot mode; the `tail` benchmark
+    * (perfbench) drives the loop through this signature.
     */
-  def runMultiSnapshot(spark: SparkSession, cfgs: Seq[Config], sql: String,
-                       format: String, checkpointDir: String,
-                       sink: String => Unit = s => if (s.nonEmpty) println(s),
-                       trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
-                       shards: Int = 32): StreamingQuery = {
-    require(cfgs.nonEmpty, "runMultiSnapshot needs at least one source")
-    require(cfgs.forall(_.tsField.isDefined),
-      "runMultiSnapshot needs tsField on every source (fire-once-per-" +
-        "complete-window is defined by the event-time watermark)")
-    val win = cfgs.head
-    val parts = cfgs.zipWithIndex.map { case (c, i) =>
-      // same per-source config routing as runMulti: throttle and
-      // seek-to-end apply per source, window settings are global
-      val src = parsed(spark, c, tname = Some(s"t$i"))
-      windowed(src, win.copy(tsField = c.tsField))
-    }
-    val views = parts.zipWithIndex.map { case (p, i) =>
-      SnapshotView(s"t$i", Some(s"t$i"), p.columns.filterNot(_ == "window").toSeq)
-    }
-    val unioned = parts.reduce(_.unionByName(_, allowMissingColumns = true))
-    runSnapshotOn(unioned, unioned.columns.filterNot(_ == "window").toSeq,
-      views, sql, format, checkpointDir, sink, trigger, shards)
-  }
+  def runSnapshot(spark: SparkSession, cfg: Config, checkpointDir: String,
+                  sink: String => Unit = s => if (s.nonEmpty) println(s),
+                  trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
+                  shards: Int = 32): StreamingQuery =
+    start(spark, Seq(cfg), checkpointDir, sink, trigger, snapshot = true, shards = shards)
 
   /** Continuous event-time windowed aggregation (update-mode state,
     * watermark-bounded) — the engine-native alternative to per-batch

@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Bench builds its own session (it is the benchmark harness and stays
   * as it is); every other main builds through GraftSession. This pins
   * the two against drift as source text: Bench's planner confs must
-  * be GraftSession's, and no third session builder may appear.
+  * be GraftSession's, and no third session builder may appear. The same
+  * source-text pins keep the tail loop to one pipeline: one streaming
+  * sink in TailStream and one session in TailApp.
   */
 class SessionDriftSpec extends AnyFunSuite {
   private val main = new File("src/main/scala")
@@ -35,5 +37,15 @@ class SessionDriftSpec extends AnyFunSuite {
       .filter(f => builder.findFirstIn(new String(Files.readAllBytes(f.toPath), "UTF-8")).nonEmpty)
       .map(_.getName).toSet
     assert(users == Set("Bench.scala", "GraftSession.scala"), users)
+  }
+
+  private def count(f: String, literal: String): Int =
+    new String(Files.readAllBytes(new File(main, f).toPath), "UTF-8").split(
+      java.util.regex.Pattern.quote(literal), -1).length - 1
+
+  test("TailStream has one writeStream and one foreachBatch; TailApp one session") {
+    assert(count("graft/streaming/TailStream.scala", ".writeStream") == 1)
+    assert(count("graft/streaming/TailStream.scala", ".foreachBatch") == 1)
+    assert(count("graft/TailApp.scala", "GraftSession.get()") == 1)
   }
 }

@@ -427,4 +427,131 @@ class TailAppCliSpec extends SparkSpec {
       assert(rootLevel == org.apache.logging.log4j.Level.WARN, rootLevel.toString)
     } finally spark.sparkContext.setLogLevel(prior.name())
   }
+
+  private def writeLog(f: java.io.File, lines: String*): java.io.File = {
+    Files.write(f.toPath, lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    f
+  }
+
+  private def logDir(lines: String*): java.io.File = {
+    val d = Files.createTempDirectory("graft-cli-form").toFile
+    writeLog(new java.io.File(d, "a.log"), lines: _*)
+    d
+  }
+
+  /** Every sink block of one `--once` CLI run over a fresh checkpoint. */
+  private def cliBlocks(args: String*): Seq[String] = {
+    spark.sparkContext
+    val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    TailApp.runCli((args ++ Seq("--checkpoint",
+      Files.createTempDirectory("graft-cli-form-ck").toString, "--once")).toArray,
+      sink = s => captured.add(s), stopSparkOnExit = false)
+    captured.toArray(Array.empty[String]).toSeq
+  }
+
+  /** Every sink block of one AvailableNow run started on TailStream directly. */
+  private def directBlocks(
+      start: (String, String => Unit, org.apache.spark.sql.streaming.Trigger) =>
+        org.apache.spark.sql.streaming.StreamingQuery): Seq[String] = {
+    val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    start(Files.createTempDirectory("graft-cli-form-dck").toString, s => captured.add(s),
+      org.apache.spark.sql.streaming.Trigger.AvailableNow()).awaitTermination(60000)
+    captured.toArray(Array.empty[String]).toSeq
+  }
+
+  private val codePattern =
+    """(?P<ts__date>\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2}) (?P<level__str>\w+) code=(?P<code__int>\d+)"""
+
+  test("--follow-file --snapshot (the benchmark's form) equals a direct runSnapshot") {
+    val f = writeLog(Files.createTempFile("graft-cli-follow", ".log").toFile,
+      "2024-01-01 00:00:10 INFO 5",
+      "2024-01-01 00:00:20 WARN 9",
+      "2024-01-01 00:01:10 INFO 3",
+      "not a log line",
+      "2024-01-01 00:30:00 INFO 1") // closes 00:00 and 00:01
+    val viaCli = cliBlocks("--follow-file", f.getAbsolutePath, "--pattern", pattern,
+      "--snapshot", "--ts-field", "ts", "--watermark", "0 seconds", "--format", "raw")
+    val cfg = streaming.TailStream.Config(dir = f.getAbsolutePath, pattern = pattern,
+      follow = true, tsField = Some("ts"), watermarkDelay = "0 seconds", format = "raw")
+    val direct = directBlocks((ckpt, sink, trigger) =>
+      streaming.TailStream.runSnapshot(spark, cfg, ckpt, sink, trigger))
+    assert(viaCli == direct, s"cli=$viaCli direct=$direct")
+    assert(viaCli == Seq(
+      "window_start, window_end, n\n" + "-" * 31 + "\n1704067200, 1704067260, 2\n\n",
+      "window_start, window_end, n\n" + "-" * 31 + "\n1704067260, 1704067320, 1\n\n"),
+      viaCli.toString)
+  }
+
+  /** Two dirs whose 00:00 INFO rows match on `level`; both sides also
+    * carry a 00:30 row, so the watermark closes window 00:00. */
+  private def joinDirs(): (java.io.File, java.io.File) = (
+    logDir("2024-01-01 00:00:10 INFO 5", "2024-01-01 00:00:20 WARN 9",
+      "2024-01-01 00:30:00 INFO 1"),
+    logDir("2024-01-01 00:00:30 INFO code=200", "2024-01-01 00:00:40 ERROR code=500",
+      "2024-01-01 00:30:00 INFO code=204"))
+
+  private val joinSql = "SELECT window_start, level, ms, code_1 FROM t0 ORDER BY window_start, level, ms"
+
+  private def joinArgs(l: java.io.File, r: java.io.File): Seq[String] = Seq(
+    "--dir", l.getAbsolutePath, "--pattern", pattern,
+    "--dir2", r.getAbsolutePath, "--pattern2", codePattern, "--join-keys", "level",
+    "--window", "60", "--ts-field", "ts", "--watermark", "0 seconds",
+    "--format", "raw", "--sql", joinSql)
+
+  private def joinCfgs(l: java.io.File, r: java.io.File): Seq[streaming.TailStream.Config] =
+    Seq((l, pattern), (r, codePattern)).map { case (d, p) =>
+      streaming.TailStream.Config(dir = d.getAbsolutePath, pattern = p, windowSizeSec = 60,
+        tsField = Some("ts"), watermarkDelay = "0 seconds", format = "raw", sql = Some(joinSql))
+    }
+
+  test("--dir --dir2 --join-keys equals a direct incremental join run") {
+    val (l, r) = joinDirs()
+    val viaCli = cliBlocks(joinArgs(l, r): _*)
+    val Seq(cl, cr) = joinCfgs(l, r)
+    val direct = directBlocks((ckpt, sink, trigger) =>
+      streaming.TailStream.start(spark, Seq(cl, cr), ckpt, sink, trigger,
+        joinKeys = Some(Seq("level"))))
+    assert(viaCli == direct, s"cli=$viaCli direct=$direct")
+    val rows = viaCli.flatMap(_.split("\n").drop(2)).filter(_.nonEmpty)
+    assert(rows.sorted == Seq("1704067200, INFO, 5, 200", "1704069000, INFO, 1, 204"),
+      viaCli.toString)
+  }
+
+  test("--dir --dir2 --join-keys --snapshot equals a direct complete-window join run") {
+    val (l, r) = joinDirs()
+    val viaCli = cliBlocks(joinArgs(l, r) :+ "--snapshot": _*)
+    val Seq(cl, cr) = joinCfgs(l, r)
+    val direct = directBlocks((ckpt, sink, trigger) =>
+      streaming.TailStream.start(spark, Seq(cl, cr), ckpt, sink, trigger,
+        snapshot = true, joinKeys = Some(Seq("level"))))
+    assert(viaCli == direct, s"cli=$viaCli direct=$direct")
+    // only window 00:00 closes; 00:30 stays open
+    assert(viaCli == Seq("window_start, level, ms, code_1\n" + "-" * 31 +
+      "\n1704067200, INFO, 5, 200\n\n"), viaCli.toString)
+  }
+
+  test("without --sql, two sources print the same header columns as one source") {
+    val a = logDir("2024-01-01 00:00:10 INFO 5", "2024-01-01 00:00:20 WARN 9")
+    val b = logDir("2024-01-01 00:00:30 WARN 4")
+    val common = Seq("--window", "60", "--ts-field", "ts", "--format", "raw")
+    def headers(blocks: Seq[String]): Seq[String] = blocks.map(_.split("\n").head).distinct
+    val one = cliBlocks(Seq("--dir", a.getAbsolutePath, "--pattern", pattern) ++ common: _*)
+    val two = cliBlocks(Seq("--dir", a.getAbsolutePath, "--pattern", pattern,
+      "--dir", b.getAbsolutePath, "--pattern", pattern) ++ common: _*)
+    assert(headers(one) == Seq("window_start, window_end, n"), one.toString)
+    assert(headers(two) == headers(one), s"one=$one two=$two")
+  }
+
+  test("--filter '' (and --filter2 '') means no filter, not a parse error") {
+    val a = logDir("2024-01-01 00:00:10 INFO 5", "2024-01-01 00:00:20 WARN 9")
+    val base = Seq("--dir", a.getAbsolutePath, "--pattern", pattern,
+      "--window", "60", "--ts-field", "ts", "--format", "raw")
+    val unfiltered = cliBlocks(base: _*)
+    assert(cliBlocks(base ++ Seq("--filter", ""): _*) == unfiltered)
+    assert(unfiltered.flatMap(_.split("\n").drop(2)).filter(_.nonEmpty) ==
+      Seq("1704067200, 1704067260, 2"), unfiltered.toString)
+    val (l, r) = joinDirs()
+    assert(cliBlocks(joinArgs(l, r) ++ Seq("--filter2", ""): _*) ==
+      cliBlocks(joinArgs(l, r): _*))
+  }
 }

@@ -211,7 +211,7 @@ class FollowFileSpec extends SparkSpec {
                     FROM t0 GROUP BY window_start ORDER BY window_start"""))
     val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     def go(): Unit = {
-      val q = TailStream.run(spark, cfg, ckpt.getAbsolutePath,
+      val q = TailStream.start(spark, Seq(cfg), ckpt.getAbsolutePath,
         sink = s => captured.add(s), trigger = Trigger.AvailableNow())
       q.awaitTermination(60000)
     }

@@ -126,7 +126,7 @@ class StdinSpoolSpec extends SparkSpec {
       sql = Some("""SELECT window_start, count(*) AS n, sum(ms) AS total_ms
                     FROM t0 GROUP BY window_start ORDER BY window_start"""))
     val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val q = TailStream.run(spark, cfg, ckpt.toString,
+    val q = TailStream.start(spark, Seq(cfg), ckpt.toString,
       sink = s => captured.add(s), trigger = Trigger.AvailableNow())
     q.awaitTermination(60000)
     // raw blocks carry the reference byte frame (header + dash rule,

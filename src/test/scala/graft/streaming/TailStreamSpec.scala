@@ -47,7 +47,7 @@ class TailStreamSpec extends SparkSpec {
       windowSizeSec = 60, tsField = Some("ts"), format = "raw",
       sql = Some("""SELECT window_start, count(*) AS n, sum(ms) AS total_ms
                     FROM t0 GROUP BY window_start ORDER BY window_start"""))
-    val q = TailStream.run(spark, cfg, ckpt.getAbsolutePath,
+    val q = TailStream.start(spark, Seq(cfg), ckpt.getAbsolutePath,
       sink = s => captured.add(s), trigger = Trigger.AvailableNow())
     q.awaitTermination(60000)
 
@@ -79,7 +79,7 @@ class TailStreamSpec extends SparkSpec {
       doNotTail = false, tailSince = Some(cutoff),
       sql = Some("""SELECT window_start, count(*) AS n, sum(ms) AS total_ms
                     FROM t0 GROUP BY window_start ORDER BY window_start"""))
-    val q = TailStream.run(spark, cfg, ckpt.getAbsolutePath,
+    val q = TailStream.start(spark, Seq(cfg), ckpt.getAbsolutePath,
       sink = s => captured.add(s), trigger = Trigger.AvailableNow())
     q.awaitTermination(60000)
 
@@ -102,7 +102,7 @@ class TailStreamSpec extends SparkSpec {
       sql = Some("SELECT count(*) AS n, sum(ms) AS total_ms FROM t0"))
     val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     def runOnce(): Unit = {
-      val q = TailStream.run(spark, cfg, ckpt.getAbsolutePath,
+      val q = TailStream.start(spark, Seq(cfg), ckpt.getAbsolutePath,
         sink = s => captured.add(s), trigger = Trigger.AvailableNow())
       q.awaitTermination(60000)
     }
@@ -137,10 +137,10 @@ class TailStreamSpec extends SparkSpec {
       windowSizeSec = 60, tsField = Some("ts"), watermarkDelay = "0 seconds",
       throttleMax = Some(1)))
     val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val q = TailStream.runMulti(spark, cfgs,
-      sql = """SELECT 't0' AS src, count(*) AS n FROM t0
-               UNION ALL SELECT 't1', count(*) FROM t1 ORDER BY src""",
-      format = "raw", checkpointDir = ckpt.getAbsolutePath,
+    val q = TailStream.start(spark, cfgs.map(_.copy(
+      sql = Some("""SELECT 't0' AS src, count(*) AS n FROM t0
+               UNION ALL SELECT 't1', count(*) FROM t1 ORDER BY src"""),
+      format = "raw")), checkpointDir = ckpt.getAbsolutePath,
       sink = s => captured.add(s), trigger = Trigger.AvailableNow())
     q.awaitTermination(60000)
     val out = rawRows(captured).toSeq
@@ -168,10 +168,10 @@ class TailStreamSpec extends SparkSpec {
       TailStream.Config(dir = dirs(1).getAbsolutePath, pattern = pattern,
         windowSizeSec = 60, tsField = Some("ts")))
     val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val q = TailStream.runMulti(spark, cfgs,
-      sql = """SELECT 't0' AS src, count(*) AS n FROM t0
-               UNION ALL SELECT 't1', count(*) FROM t1 ORDER BY src""",
-      format = "raw", checkpointDir = ckpt.getAbsolutePath,
+    val q = TailStream.start(spark, cfgs.map(_.copy(
+      sql = Some("""SELECT 't0' AS src, count(*) AS n FROM t0
+               UNION ALL SELECT 't1', count(*) FROM t1 ORDER BY src"""),
+      format = "raw")), checkpointDir = ckpt.getAbsolutePath,
       sink = s => captured.add(s), trigger = Trigger.AvailableNow())
     q.awaitTermination(60000)
     val out = rawRows(captured).toSeq
@@ -197,11 +197,12 @@ class TailStreamSpec extends SparkSpec {
       windowSizeSec = 60, tsField = Some("ts"))
     val cfgR = TailStream.Config(dir = dirR.getAbsolutePath, pattern = patternR,
       windowSizeSec = 60, tsField = Some("ts"))
-    val q = TailStream.runJoin(spark, cfgL, cfgR, keys = Seq("level"),
-      sql = """SELECT window_start, level, ms, code_1 FROM t0
-               ORDER BY window_start, level, ms""",
-      format = "raw", checkpointDir = ckpt.getAbsolutePath,
-      sink = s => captured.add(s), trigger = Trigger.AvailableNow())
+    val q = TailStream.start(spark, Seq(cfgL.copy(
+      sql = Some("""SELECT window_start, level, ms, code_1 FROM t0
+               ORDER BY window_start, level, ms"""),
+      format = "raw"), cfgR), checkpointDir = ckpt.getAbsolutePath,
+      sink = s => captured.add(s), trigger = Trigger.AvailableNow(),
+      joinKeys = Some(Seq("level")))
     q.awaitTermination(60000)
 
     val out = rawRows(captured).sorted
@@ -242,7 +243,7 @@ class TailStreamSpec extends SparkSpec {
 
     writeLog(dir, "a.log", "2024-01-01 00:00:10 INFO 5")
     val captured1 = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val q1 = TailStream.run(spark, cfg, ckpt.getAbsolutePath,
+    val q1 = TailStream.start(spark, Seq(cfg), ckpt.getAbsolutePath,
       sink = s => captured1.add(s), trigger = Trigger.AvailableNow())
     q1.awaitTermination(60000)
     assert(String.join("\n", captured1).contains("INFO, 5"))
@@ -250,7 +251,7 @@ class TailStreamSpec extends SparkSpec {
     // new file appears between runs; the old one must NOT be reprocessed
     writeLog(dir, "b.log", "2024-01-01 00:00:20 WARN 9")
     val captured2 = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val q2 = TailStream.run(spark, cfg, ckpt.getAbsolutePath,
+    val q2 = TailStream.start(spark, Seq(cfg), ckpt.getAbsolutePath,
       sink = s => captured2.add(s), trigger = Trigger.AvailableNow())
     q2.awaitTermination(60000)
     val out2 = String.join("\n", captured2)
@@ -334,11 +335,12 @@ class TailStreamSpec extends SparkSpec {
       windowSizeSec = 60, tsField = Some("ts"), watermarkDelay = "0 seconds")
     val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     def runOnce(): Unit = {
-      val q = TailStream.runJoinSnapshot(spark, cfgL, cfgR, keys = Seq("level"),
-        sql = """SELECT window_start, level, ms, code_1 FROM t0
-                 ORDER BY window_start, level, ms""",
-        format = "raw", checkpointDir = ckpt.getAbsolutePath,
-        sink = s => captured.add(s), trigger = Trigger.AvailableNow(), shards = 4)
+      val q = TailStream.start(spark, Seq(cfgL.copy(
+        sql = Some("""SELECT window_start, level, ms, code_1 FROM t0
+                 ORDER BY window_start, level, ms"""),
+        format = "raw"), cfgR), checkpointDir = ckpt.getAbsolutePath,
+        sink = s => captured.add(s), trigger = Trigger.AvailableNow(),
+        snapshot = true, joinKeys = Some(Seq("level")), shards = 4)
       q.awaitTermination(60000)
     }
     // the two sides of the 00:00 INFO match arrive in separate runs
@@ -381,14 +383,14 @@ class TailStreamSpec extends SparkSpec {
       TailStream.Config(dir = dirs(2).getAbsolutePath, pattern = patternC,
         windowSizeSec = 60, tsField = Some("ts")))
     val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val q = TailStream.runMulti(spark, cfgs,
-      sql = """SELECT t0.window_start, t0.level, t0.ms, t1.code, t2.host
+    val q = TailStream.start(spark, cfgs.map(_.copy(
+      sql = Some("""SELECT t0.window_start, t0.level, t0.ms, t1.code, t2.host
                FROM t0 JOIN t1 ON t0.window_start = t1.window_start
                         AND t0.level = t1.level
                        JOIN t2 ON t0.window_start = t2.window_start
                         AND t0.level = t2.level
-               ORDER BY t0.ms""",
-      format = "raw", checkpointDir = ckpt.getAbsolutePath,
+               ORDER BY t0.ms"""),
+      format = "raw")), checkpointDir = ckpt.getAbsolutePath,
       sink = s => captured.add(s), trigger = Trigger.AvailableNow())
     q.awaitTermination(60000)
     val out = rawRows(captured).toSeq
@@ -439,11 +441,12 @@ class TailStreamSpec extends SparkSpec {
         windowSizeSec = 60, tsField = Some("ts"), watermarkDelay = "0 seconds"))
     val captured = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     def runOnce(): Unit = {
-      val q = TailStream.runMultiSnapshot(spark, cfgs,
-        sql = """SELECT t0.window_start, t0.level, t0.ms, t1.code FROM t0
-                 JOIN t1 ON t0.level = t1.level ORDER BY t0.ms""",
-        format = "raw", checkpointDir = ckpt.getAbsolutePath,
-        sink = s => captured.add(s), trigger = Trigger.AvailableNow(), shards = 4)
+      val q = TailStream.start(spark, cfgs.map(_.copy(
+        sql = Some("""SELECT t0.window_start, t0.level, t0.ms, t1.code FROM t0
+                 JOIN t1 ON t0.level = t1.level ORDER BY t0.ms"""),
+        format = "raw")), checkpointDir = ckpt.getAbsolutePath,
+        sink = s => captured.add(s), trigger = Trigger.AvailableNow(),
+        snapshot = true, shards = 4)
       q.awaitTermination(60000)
     }
     // the two sides of the window-00:00 match arrive in SEPARATE runs
@@ -531,7 +534,8 @@ class TailStreamSpec extends SparkSpec {
                  SELECT 't1', window_start, count(*), sum(code) FROM t1 GROUP BY 2
                  ORDER BY 1, 2"""
     def go(): Seq[(String, String)] = snapshotBlocks { (ckpt, trigger, sink) =>
-      TailStream.runMultiSnapshot(spark, cfgs, sql, "raw", ckpt, sink, trigger, shards = 4)
+      TailStream.start(spark, cfgs.map(_.copy(sql = Some(sql), format = "raw")), ckpt, sink, trigger,
+        snapshot = true, shards = 4)
         .awaitTermination(60000)
     }
     val single = go()
@@ -544,6 +548,45 @@ class TailStreamSpec extends SparkSpec {
     assert(rows.size == 6, rows.toString)
     assert(rows.forall(_.split(",")(2) == "200"), rows.toString)
     assert(rows.head == s"t0,1704067200,200,${(0 until 200).map(_ % 50).sum}", rows.toString)
+  }
+
+  test("start over one source adds no _tname column, in either mode") {
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    val dirs = (0 to 1).map { i =>
+      val d = Files.createTempDirectory("graft-tname").toFile
+      writeLog(d, "a.log", s"2024-01-01 00:00:1$i INFO 5", "2024-01-01 00:30:00 INFO 1")
+      d
+    }
+    val cfgs = dirs.map(d => TailStream.Config(dir = d.getAbsolutePath, pattern = pattern,
+      windowSizeSec = 60, tsField = Some("ts"), watermarkDelay = "0 seconds"))
+    /** every attribute name the started query's analyzed plan outputs */
+    def planNames(sources: Seq[TailStream.Config], snapshot: Boolean): Seq[String] = {
+      val q = TailStream.start(spark, sources,
+        Files.createTempDirectory("graft-tname-ckpt").toString, sink = _ => (),
+        trigger = Trigger.AvailableNow(), snapshot = snapshot, shards = 4)
+      q.awaitTermination(60000)
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.analyzed
+      plan.collect { case n => n.output.map(_.name) }.flatten
+    }
+    for (snapshot <- Seq(false, true)) {
+      val one = planNames(cfgs.take(1), snapshot)
+      assert(one.contains("level") && !one.contains("_tname"), s"snapshot=$snapshot: $one")
+      assert(planNames(cfgs, snapshot).contains("_tname"), s"snapshot=$snapshot")
+    }
+  }
+
+  test("start rejects no sources, snapshot without tsField, and a join of other than 2 sources") {
+    val cfg = TailStream.Config(dir = "unused", pattern = pattern, tsField = Some("ts"))
+    def rejects(body: => Any): Unit = intercept[IllegalArgumentException](body)
+    rejects(TailStream.start(spark, Seq.empty, "unused"))
+    rejects(TailStream.start(spark, Seq.empty, "unused", snapshot = true))
+    rejects(TailStream.start(spark, Seq(cfg.copy(tsField = None)), "unused", snapshot = true))
+    rejects(TailStream.start(spark, Seq(cfg, cfg.copy(tsField = None)), "unused", snapshot = true))
+    rejects(TailStream.runSnapshot(spark, cfg.copy(tsField = None), "unused"))
+    for (n <- Seq(1, 3))
+      rejects(TailStream.start(spark, Seq.fill(n)(cfg), "unused", joinKeys = Some(Seq("level"))))
+    rejects(TailStream.start(spark, Seq(cfg, cfg.copy(tsField = None)), "unused",
+      joinKeys = Some(Seq("level"))))
   }
 
   test("processing-time windows apply when no ts field is configured") {
