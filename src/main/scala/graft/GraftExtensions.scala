@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{HeavyHittersAgg, MinHashAgg, RegexGroups, RollingHash, ShingleHashes, VecDot}
+import graft.functions.{HeavyHittersAgg, MinHashAgg, ParseAnyDate, RegexGroups, RollingHash, ShingleHashes, VecDot}
 
 /** Session-extension entry point: registers graft's native Catalyst
   * expressions as SQL functions, so `spark.sql` users get them without
@@ -12,7 +12,8 @@ import graft.functions.{HeavyHittersAgg, MinHashAgg, RegexGroups, RollingHash, S
   *
   * {{{
   * spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
-  * SELECT rolling_hash(text), vec_dot(a, b), regex_groups(line, '(\\d+)', 1) ...
+  * SELECT rolling_hash(text), vec_dot(a, b), regex_groups(line, '(\\d+)', 1),
+  *        parse_any_date(ts_text) ...
   * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -40,6 +41,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         val n = args(2).eval(null).asInstanceOf[Number].intValue()
         RegexGroups(args(0), pattern, n)
       }))
+
+    ext.injectFunction((
+      FunctionIdentifier("parse_any_date"),
+      info("parse_any_date",
+        "parse_any_date(str) - lenient timestamp: recognizes the layout once, parses once"),
+      (args: Seq[Expression]) => ParseAnyDate(args.head)))
 
     ext.injectFunction((
       FunctionIdentifier("shingle_hashes"),

@@ -484,6 +484,13 @@ object TailApp {
           "; each repeated source is a tailed directory")
       return (fromRepeatedFlags(a, seekEnd), None)
     }
+    // the second-source flags only mean something with --dir2; without
+    // it they would be ignored, so reject them as --config does
+    val orphans = if (a.contains("dir2")) Nil
+      else Seq("pattern2", "filter2", "join-keys").filter(a.contains)
+    require(orphans.isEmpty,
+      s"${orphans.map("--" + _).mkString(", ")} given without --dir2; " +
+        "they configure the second source of a join")
     // --stdin / --pipe <fifo>: spool the push-style input into a temp
     // directory and tail THAT — the reference's stdin/namedpipe sources
     // (source/stdin.go, source/namedpipe.go). With --once the spool is

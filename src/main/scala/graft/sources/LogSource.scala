@@ -11,11 +11,13 @@ import org.apache.spark.sql.types._
   * row; each input line is matched, non-matching lines are dropped,
   * and matched groups are converted to bool/int/float/date/str.
   *
-  * Here the same pattern syntax compiles to a plain-group Java regex
-  * plus one `regexp_extract` + `cast` column per field. Everything is
-  * built-in expressions, so parsing stays inside whole-stage codegen
-  * and scales as a narrow map over text partitions — no UDFs, no
-  * shuffle, linear at 100 TB.
+  * Here the same pattern syntax compiles to a plain-group Java regex,
+  * matched once per line by [[graft.functions.RegexGroups]] into a
+  * struct of all groups; each field is then a `cast` of its group, and
+  * `date` fields go through [[graft.functions.ParseAnyDate]]. Everything
+  * is a Catalyst expression with generated code, so parsing stays
+  * inside whole-stage codegen and scales as a narrow map over text
+  * partitions — no UDFs, no shuffle, linear at 100 TB.
   */
 object LogSource {
 
@@ -82,69 +84,19 @@ object LogSource {
   }
 
   /** Lenient timestamp parsing, mirroring dateparse.ParseAny
-    * (lparser.go:137): recognize the format, then parse once.
-    *
-    * Each candidate format is gated by an anchored shape regex, so
-    * the common case is one cheap regex hit + one parse — not an
-    * exception-driven walk through every DateTimeFormatter (failed
-    * `try_to_timestamp` attempts throw internally; at log scale that
-    * dominates the parse). Shape match with an unparseable value
-    * (month 13) still falls through via try_to_timestamp -> null.
+    * (lparser.go:137): [[graft.functions.ParseAnyDate]] recognizes the
+    * layout once from the string's width and separator positions and
+    * parses it once. Numeric layouts (ISO/space/slash/`T`, fractions,
+    * zones, `yyyyMMdd`, epoch seconds and millis) are computed directly;
+    * month-name layouts (access log, RFC1123/822, US forms) make one
+    * parse with the recognized layout's formatter. Resolution contract:
+    * a 7-9 digit fraction truncates to µs, RFC1123's day name is
+    * dropped unchecked, an impossible value in a recognized shape (month
+    * 13, Feb 30) is NULL, and zone-less input resolves in the session
+    * time zone as Spark's own parser resolves it. The full layout list
+    * is on [[graft.functions.ParseAnyDate]].
     */
-  def parseAnyDate(c0: Column): Column = {
-    // normalize nano-precision fractions to micros up front: Spark
-    // timestamps are µs precision and the parser rejects 7-9 fraction
-    // digits, so RFC3339-with-nanos truncates to its first 6 digits
-    val c = regexp_replace(c0, "(\\.\\d{6})\\d{1,3}", "$1")
-    def shaped(shape: String, fmt: String): Column =
-      when(c.rlike(shape), try_to_timestamp(c, lit(fmt)))
-    coalesce(
-      shaped("^\\d{4}-\\d{2}-\\d{2} \\d{2}:\\d{2}:\\d{2}$", "yyyy-MM-dd HH:mm:ss"),
-      shaped("^\\d{4}/\\d{2}/\\d{2} \\d{2}:\\d{2}:\\d{2}$", "yyyy/MM/dd HH:mm:ss"),
-      shaped("^\\d{4}-\\d{2}-\\d{2}T\\d{2}:\\d{2}:\\d{2}$", "yyyy-MM-dd'T'HH:mm:ss"),
-      shaped("^\\d{4}-\\d{2}-\\d{2}T\\d{2}:\\d{2}:\\d{2}(Z|[+-]\\d{2}:?\\d{2})$",
-        "yyyy-MM-dd'T'HH:mm:ssXXX"),
-      shaped("^\\d{4}-\\d{2}-\\d{2} \\d{2}:\\d{2}:\\d{2}\\.\\d{1,6}$",
-        "yyyy-MM-dd HH:mm:ss.SSSSSS"),
-      shaped("^\\d{4}-\\d{2}-\\d{2}T\\d{2}:\\d{2}:\\d{2}\\.\\d{1,6}$",
-        "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"),
-      shaped("^\\d{4}-\\d{2}-\\d{2}T\\d{2}:\\d{2}:\\d{2}\\.\\d{1,6}(Z|[+-]\\d{2}:?\\d{2})$",
-        "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"), // RFC3339, incl. normalized nanos
-      shaped("^\\d{4}/\\d{2}/\\d{2} \\d{2}:\\d{2}:\\d{2}\\.\\d{1,6}$",
-        "yyyy/MM/dd HH:mm:ss.SSSSSS"),
-      shaped("^\\d{2}/\\d{2}/\\d{4} \\d{2}:\\d{2}:\\d{2}$", "MM/dd/yyyy HH:mm:ss"),
-      shaped("^\\d{4}-\\d{2}-\\d{2}$", "yyyy-MM-dd"),
-      shaped("^\\d{4}/\\d{2}/\\d{2}$", "yyyy/MM/dd"),
-      shaped("^\\d{2}/[A-Za-z]{3}/\\d{4}:\\d{2}:\\d{2}:\\d{2} [+-]\\d{4}$",
-        "dd/MMM/yyyy:HH:mm:ss Z"), // common access-log format
-      shaped("^\\d{1,2} [A-Za-z]{3} \\d{4} \\d{2}:\\d{2}:\\d{2}$",
-        "d MMM yyyy HH:mm:ss"),
-      shaped("^\\d{1,2} [A-Za-z]{3} \\d{4} \\d{2}:\\d{2}:\\d{2} [+-]\\d{4}$",
-        "d MMM yyyy HH:mm:ss Z"),
-      // RFC1123/RFC822 ("Mon, 02 Jan 2006 15:04:05 -0700"): Spark
-      // cannot PARSE a day-of-week token, so strip the name prefix —
-      // it is redundant with the date anyway
-      when(c.rlike("^[A-Za-z]{3}, \\d{1,2} [A-Za-z]{3} \\d{4} \\d{2}:\\d{2}:\\d{2} [+-]\\d{4}$"),
-        try_to_timestamp(regexp_replace(c, "^[A-Za-z]{3}, ", ""),
-          lit("d MMM yyyy HH:mm:ss Z"))),
-      // RFC822 with numeric zone ("02 Jan 06 15:04 -0700"): two-digit
-      // year, minute resolution
-      shaped("^\\d{2} [A-Za-z]{3} \\d{2} \\d{2}:\\d{2} [+-]\\d{4}$",
-        "dd MMM yy HH:mm Z"),
-      // US forms ("Jan 2, 2006 15:04:05" / "Jan 2, 2006" /
-      // "January 2, 2006")
-      shaped("^[A-Za-z]{3} \\d{1,2}, \\d{4} \\d{1,2}:\\d{2}:\\d{2}$",
-        "MMM d, yyyy H:mm:ss"),
-      shaped("^[A-Za-z]{3} \\d{1,2}, \\d{4}$", "MMM d, yyyy"),
-      shaped("^[A-Za-z]{4,9} \\d{1,2}, \\d{4}$", "MMMM d, yyyy"),
-      // width-8 digit run = yyyyMMdd (dateparse recognizes by width;
-      // invalid month/day still null out via try_to_timestamp)
-      shaped("^\\d{8}$", "yyyyMMdd"),
-      // 13-digit epoch millis (dateparse recognizes these by width)
-      when(c.rlike("^\\d{13}$"), timestamp_millis(c.cast(LongType))),
-      // bare epoch seconds, the final fallback
-      when(c.rlike("^\\d{9,10}$"), to_timestamp(c.cast(LongType).cast(TimestampType))))
-  }
+  def parseAnyDate(c: Column): Column = graft.functions.ParseAnyDate(c)
 
   private def castField(raw: Column, f: LogField): Column = f.typeName match {
     case "date" => parseAnyDate(raw).as(f.name)
@@ -174,30 +126,36 @@ object LogSource {
   /** Parse a DataFrame of raw lines into the typed table the pattern
     * declares. Non-matching lines are dropped (lparser.go:96-104).
     *
-    * The regex automaton runs ONCE per line ([[graft.functions.RegexGroups]]
-    * — null struct = no match = dropped row); the per-field casts then
-    * read struct fields, all inside one whole-stage-codegen pass.
+    * Each line is parsed once: the regex automaton runs ONCE per line
+    * ([[graft.functions.RegexGroups]] — null struct = no match), and
+    * the typed row is produced by a generator, `inline` over a
+    * zero-or-one element array of the cast fields. A filter or window
+    * over the parsed columns cannot be pushed below a generator's
+    * output, so it reads the parsed row instead of getting its own
+    * inlined copy of the regex and the date parse, as it would through
+    * a plain projection. All of it stays inside whole-stage codegen.
+    *
+    * By design the optimizer cannot prune the generator's fields: every
+    * field the pattern declares, a `date` parse included, is computed
+    * for every matched line, before any filter, even when the query
+    * reads only some of them.
     */
   def parse(lines: DataFrame, pattern: String, lineCol: String = "value",
             tname: Option[String] = None, withRowId: Boolean = false): DataFrame = {
     val lp = compilePattern(pattern)
     val maxGroup = lp.fields.map(_.groupIndex).maxOption.getOrElse(0)
-    val matched = lines
+    val g = col("_g")
+    val row = struct(lp.fields.map(f => castField(g.getField(s"g${f.groupIndex}"), f)): _*)
+    val parsed = lines
       .select(graft.functions.RegexGroups(col(lineCol), lp.javaRegex, maxGroup).as("_g"))
-      .filter(col("_g").isNotNull)
-    val cols = lp.fields.map { f =>
-      castField(col("_g").getField(s"g${f.groupIndex}"), f)
-    }
-    val withMeta = (tname match {
-      case Some(t) => cols :+ lit(t).as("_tname")
-      case None    => cols
-    }) ++ (if (withRowId)
+      .select(inline(when(g.isNotNull, array(row))))
+    val meta = tname.map(t => lit(t).as("_tname")).toSeq ++ (if (withRowId)
       // the reference's __id sequence (lparser.go metadata): the
       // distributed analogue is a unique (partition-encoded, not
       // contiguous) row id — no global coordination
       Seq(monotonically_increasing_id().as("_id"))
     else Seq.empty)
-    matched.select(withMeta: _*)
+    parsed.select(col("*") +: meta: _*)
   }
 
   /** Batch read of a whole log file — the reference's `do_not_tail`

@@ -94,6 +94,7 @@ object TailStream {
     */
   def parsed(spark: SparkSession, cfg: Config,
              tname: Option[String] = None): DataFrame = {
+    requireThrottleTs(cfg)
     val base = if (cfg.follow) {
       LogSource.followFile(spark, cfg.dir, cfg.pattern, cfg.filter,
         tname = tname, seekToEnd = !cfg.doNotTail,
@@ -107,13 +108,15 @@ object TailStream {
     }
     cfg.throttleMax match {
       case Some(n) =>
-        val ts = cfg.tsField.getOrElse(sys.error(
-          "throttle needs ts_field: admissions are counted per event-time period"))
-        Throttle.streaming(base, ts, cfg.throttlePeriodSec.getOrElse(cfg.windowSizeSec),
-          n, cfg.watermarkDelay)
+        Throttle.streaming(base, cfg.tsField.get,
+          cfg.throttlePeriodSec.getOrElse(cfg.windowSizeSec), n, cfg.watermarkDelay)
       case None => base
     }
   }
+
+  private def requireThrottleTs(cfg: Config): Unit =
+    require(cfg.throttleMax.isEmpty || cfg.tsField.isDefined,
+      s"${cfg.dir}: a throttle needs tsField — admissions are counted per event-time period")
 
   /** Add the window column: event time (with watermark) if tsField is
     * set, else processing time — the reference's
@@ -234,6 +237,7 @@ object TailStream {
             snapshot: Boolean = false, joinKeys: Option[Seq[String]] = None,
             shards: Int = 32): StreamingQuery = {
     require(sources.nonEmpty, "start needs at least one source")
+    sources.foreach(requireThrottleTs)
     require(!snapshot || sources.forall(_.tsField.isDefined),
       "snapshot mode needs tsField on every source: fire-once-per-complete-window " +
         "is defined by the event-time watermark (use incremental mode for " +

@@ -35,6 +35,12 @@ class GraftExtensionsSpec extends AnyFunSuite {
       val nShingles = s.sql(
         "SELECT size(shingle_hashes('a b c d', 2)) AS n").head.getInt(0)
       assert(nShingles == 3)
+      val parsed = s.sql(
+        """SELECT unix_timestamp(parse_any_date('Tue, 05 Mar 2024 08:07:08 +0200')) AS a,
+                  unix_timestamp(parse_any_date('2024-03-05T06:07:08.123456789Z')) AS b,
+                  parse_any_date('2024-13-05') AS c""").head()
+      assert(parsed.getLong(0) == 1709618828L && parsed.getLong(1) == 1709618828L)
+      assert(parsed.isNullAt(2))
     } finally {
       // Hand the shared-session slot back to the other suites.
       SparkSession.clearActiveSession()

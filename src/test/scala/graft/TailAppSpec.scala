@@ -554,4 +554,26 @@ class TailAppCliSpec extends SparkSpec {
     assert(cliBlocks(joinArgs(l, r) ++ Seq("--filter2", ""): _*) ==
       cliBlocks(joinArgs(l, r): _*))
   }
+
+  /** `flag value` on the single-source form (no --dir2) is rejected
+    * before any session or input is touched.
+    */
+  private def rejectsWithoutDir2(flag: String, value: String): Unit = {
+    val e = intercept[IllegalArgumentException](TailApp.runCli(Array(
+      "--dir", "/unused", "--pattern", pattern, flag, value),
+      sink = _ => (), stopSparkOnExit = false))
+    assert(e.getMessage.contains(s"$flag given without --dir2"), e.getMessage)
+  }
+
+  test("--pattern2 without --dir2 is rejected, not ignored") {
+    rejectsWithoutDir2("--pattern2", pattern)
+  }
+
+  test("--filter2 without --dir2 is rejected, not ignored") {
+    rejectsWithoutDir2("--filter2", "level = 'WARN'")
+  }
+
+  test("--join-keys without --dir2 is rejected, not ignored") {
+    rejectsWithoutDir2("--join-keys", "level")
+  }
 }

@@ -93,6 +93,12 @@ class LogSourceSpec extends SparkSpec {
       out.toSeq.toString)
   }
 
+  test("a pattern without named groups keeps each matching line as an empty row") {
+    val lines = Seq("ERROR a", "INFO b", "ERROR c").toDF("value")
+    val out = LogSource.parse(lines, """ERROR (\w)""")
+    assert(out.columns.isEmpty && out.count() == 2)
+  }
+
   test("bool parsing accepts Go strconv.ParseBool forms") {
     val lines = Seq("1", "t", "TRUE", "0", "F", "false", "zzz").toDF("value")
     val out = LogSource.parse(lines, """(?P<b__bool>\w+)""")

@@ -587,6 +587,12 @@ class TailStreamSpec extends SparkSpec {
       rejects(TailStream.start(spark, Seq.fill(n)(cfg), "unused", joinKeys = Some(Seq("level"))))
     rejects(TailStream.start(spark, Seq(cfg, cfg.copy(tsField = None)), "unused",
       joinKeys = Some(Seq("level"))))
+    // a throttle counts admissions per event-time period: rejected before
+    // any source is built, on any source
+    val throttled = cfg.copy(tsField = None, throttleMax = Some(10))
+    rejects(TailStream.start(spark, Seq(throttled), "unused"))
+    rejects(TailStream.start(spark, Seq(cfg, throttled), "unused"))
+    rejects(TailStream.parsed(spark, throttled))
   }
 
   test("processing-time windows apply when no ts field is configured") {
