@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.GroupState
+
+import Ripen._
 
 /** Streaming twin of r23's alert-edge suppression — the live
   * fire/resolve dedup an alert manager applies to an anomaly verdict
@@ -32,31 +34,17 @@ object AlertEdges {
 
   final case class LastVerdict(hrStart: Long, isAnomaly: Boolean)
 
-  implicit val vEnc: Encoder[Verdict] = Encoders.product[Verdict]
-  implicit val eEnc: Encoder[Edge] = Encoders.product[Edge]
-  implicit val sEnc: Encoder[LastVerdict] = Encoders.product[LastVerdict]
-  implicit val strEnc: Encoder[String] = Encoders.STRING
-
-  /** Core transition, exposed for unit tests. */
+  /** Core transition, exposed for unit tests. A fresh key's floor
+    * is a quiet verdict before every hour (absent means false). */
   def update(key: String, verdicts: Iterator[Verdict],
-             state: GroupState[LastVerdict]): Iterator[Edge] = {
-    var last = state.getOption
-    val out = List.newBuilder[Edge]
-    verdicts.toSeq.sortBy(_.hrStart).foreach { v =>
-      if (!last.exists(_.hrStart >= v.hrStart)) {
-        val prev = last.map(_.isAnomaly).getOrElse(false)
-        if (v.isAnomaly != prev)
-          out += Edge(key, v.hrStart, if (v.isAnomaly) "fire" else "resolve")
-        last = Some(LastVerdict(v.hrStart, v.isAnomaly))
-      }
+             state: GroupState[LastVerdict]): Iterator[Edge] =
+    Ripen.replay(state, LastVerdict(Long.MinValue, false), verdicts)(
+      _.hrStart, _.hrStart) { (last, v) =>
+      (LastVerdict(v.hrStart, v.isAnomaly),
+        Option.when(v.isAnomaly != last.isAnomaly)(
+          Edge(key, v.hrStart, if (v.isAnomaly) "fire" else "resolve")))
     }
-    last.foreach(state.update)
-    out.result().iterator
-  }
 
   def edges(verdicts: Dataset[Verdict]): Dataset[Edge] =
-    verdicts
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[LastVerdict, Edge](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(update _)
+    Ripen(verdicts)(_.key, timeout = false)(update)
 }

@@ -1,7 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.GroupState
+
+import graft.functions.PqCodes.round6
+import Ripen._
 
 /** Streaming twin of the batch rolling z-score rate anomaly
   * (`operators.Windows.rateAnomaly`, r16): per-key hourly event
@@ -38,14 +41,6 @@ object Anomaly {
       key: String, hr_start: Long, n_events: Long,
       mean_trailing: Double, z_score: Option[Double], is_anomaly: Boolean)
 
-  implicit val eventEnc: Encoder[Event] = Encoders.product[Event]
-  implicit val stateEnc: Encoder[AnomState] = Encoders.product[AnomState]
-  implicit val alertEnc: Encoder[Alert] = Encoders.product[Alert]
-  implicit val stringEnc: Encoder[String] = Encoders.STRING
-
-  private def rd6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   /** Score one complete hour against the trailing window in `counts`
     * — the batch operator's arithmetic verbatim. Returns None below
     * the minHistory floor (unscored, like the batch filter).
@@ -71,7 +66,7 @@ object Anomaly {
         if (variance > 0.0) Some((c.toDouble - mean) / math.sqrt(variance))
         else if (c.toDouble == mean) Some(0.0)
         else None
-      Some(Alert(key, hr * 3600L, c, rd6(mean), z.map(rd6),
+      Some(Alert(key, hr * 3600L, c, round6(mean), z.map(round6),
         z.map(v => math.abs(v) >= zThreshold).getOrElse(true)))
     }
   }
@@ -80,62 +75,24 @@ object Anomaly {
   def update(trailingHours: Int, minHistory: Int, zThreshold: Double)(
       key: String, events: Iterator[Event],
       state: GroupState[AnomState]): Iterator[Alert] =
-    hourlyUpdate[Alert](trailingHours,
-      (k, h, counts) => score(k, h, counts, trailingHours, minHistory,
-        zThreshold))(key, events, state)
+    hourlyUpdate(trailingHours, events, state)((h, counts) =>
+      score(key, h, counts, trailingHours, minHistory, zThreshold))
 
-  /** The hourly-histogram transition skeleton, shared with the
-    * streaming EWMA forecast ([[Ewma]]): fold the batch's events into
-    * per-hour counts, score every hour the watermark has closed
-    * exactly once (via `scoreFn` — the only scorer-specific part),
-    * evict history that can never appear in a future scored hour's
-    * trailing frame, and self-destruct idle keys. Extracted rather
-    * than duplicated so the exactly-once / eviction / timeout
-    * reasoning lives in ONE place (the dupGrams copy-drift rule).
+  /** The [[Ripen.Hours.scored]] step over [[AnomState]], shared with
+    * the streaming EWMA forecast ([[Ewma]]) — only the scorer differs.
     */
   private[streaming] def hourlyUpdate[A](trailingHours: Int,
-      scoreFn: (String, Long, Map[Long, Long]) => Option[A])(
-      key: String, events: Iterator[Event],
-      state: GroupState[AnomState]): Iterator[A] = {
-    val st0 = state.getOption.getOrElse(AnomState(Map.empty, Long.MinValue))
-    // fold this batch's events into their hours (no-op on timeout)
-    val counts = events.foldLeft(st0.counts) { (m, e) =>
-      m.updated(e.hr, m.getOrElse(e.hr, 0L) + 1L)
+      events: Iterator[Event], state: GroupState[AnomState])(
+      scoreFn: (Long, Map[Long, Long]) => Option[A]): Iterator[A] =
+    fold(state, AnomState(Map.empty, Long.MinValue)) { (st, wm) =>
+      Hours.scored(st.counts, st.scoredUpTo, events.map(_.hr), wm,
+        trailingHours)(scoreFn)(AnomState)
     }
-    // score every pending hour the watermark has closed, in order —
-    // watermark semantics guarantee no more events for them
-    val wmHr = state.getCurrentWatermarkMs() / 1000L / 3600L
-    val ready = counts.keys.filter(h => h > st0.scoredUpTo && h < wmHr)
-      .toSeq.sorted
-    val alerts = ready.flatMap(h => scoreFn(key, h, counts))
-    val scoredUpTo = if (ready.nonEmpty) ready.max else st0.scoredUpTo
-    // evict hours that can never appear in a future scored hour's
-    // trailing frame: every unscored hour is >= wmHr, so history below
-    // wmHr - trailingHours is unreachable (wmHr only lags the true
-    // watermark, which makes this conservative, never lossy)
-    val kept = counts.filter { case (h, _) => h >= wmHr - trailingHours }
-    if (kept.isEmpty) state.remove()
-    else {
-      state.update(AnomState(kept, scoredUpTo))
-      val pending = kept.keys.filter(_ > scoredUpTo)
-      // flush pending hours even if no further events arrive; with
-      // nothing pending, self-destruct once the last history hour
-      // ages out of every possible frame (idle keys don't leak state)
-      val wakeHr = pending.minOption.map(_ + 1)
-        .getOrElse(kept.keys.max + trailingHours + 1)
-      state.setTimeoutTimestamp(wakeHr * 3600L * 1000L)
-    }
-    alerts.iterator
-  }
 
   /** Streaming entry: `events` must carry an event-time watermark on
     * the column `ts` derives from.
     */
   def alerts(events: Dataset[Event], trailingHours: Int = 24,
              minHistory: Int = 12, zThreshold: Double = 3.0): Dataset[Alert] =
-    events
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[AnomState, Alert](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        update(trailingHours, minHistory, zThreshold) _)
+    Ripen(events)(_.key)(update(trailingHours, minHistory, zThreshold))
 }

@@ -1,7 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.GroupState
+
+import graft.functions.PqCodes.round6
+import Ripen._
 
 /** Streaming twin of the q33 interval-union COVERAGE sweep — live
   * per-user active time with overlaps counted once (billing meters,
@@ -18,6 +21,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * interval length, NEVER by history. Events still inside the
   * watermark stay buffered: a frame never reads an event that batch
   * arithmetic over its anchor's prefix would not.
+  *
+  * The one exception to the [[Ripen]] rule: an event finalizes only
+  * once the watermark is strictly past it (it ripens as the instant
+  * one µs later), so an event exactly at the watermark stays pending.
+  * CoverageStreamSpec's stream test pins this — its flusher lands
+  * exactly on the final watermark and must not finalize.
   */
 object CoverageStream {
 
@@ -36,12 +45,6 @@ object CoverageStream {
                           covered_micros: Long, span_micros: Long,
                           utilization: Double)
 
-  implicit val covStEnc: Encoder[CovState] = Encoders.product[CovState]
-  implicit val covEnc: Encoder[CovRow] = Encoders.product[CovRow]
-
-  private def rd6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   /** Merge one [s, e) into a sorted disjoint list (half-open:
     * back-to-back intervals fuse, the q33 rule). */
   private[streaming] def merge(ivs: List[(Long, Long)],
@@ -56,48 +59,36 @@ object CoverageStream {
   /** Transition, exposed for unit tests. */
   def covUpdate(durSec: Long)(
       key: String, events: Iterator[KeyEvent],
-      state: GroupState[CovState]): Iterator[CovRow] = {
-    val durUs = durSec * 1000000L
-    val st0 = state.getOption
-      .getOrElse(CovState(Nil, Nil, 0L, 0L, Long.MaxValue, Long.MinValue,
-        Long.MinValue))
-    val wmUs = state.getCurrentWatermarkMs() * 1000L
-    // exact event micros: getTime truncates to millis, the sub-milli
-    // remainder rides getNanos — batch unix_micros sees both
-    val pending0 = st0.pending ++ events.map(e =>
-      e.ts.getTime / 1000L * 1000000L + e.ts.getNanos / 1000L)
-    val (closing, pending) = pending0.partition(_ < wmUs)
-    var open = st0.open
-    var n = st0.n; var s0 = st0.s0; var e1 = st0.e1
-    closing.sorted.foreach { us =>
-      open = merge(open, us, us + durUs)
-      n += 1L
-      if (us < s0) s0 = us
-      if (us + durUs > e1) e1 = us + durUs
+      state: GroupState[CovState]): Iterator[CovRow] =
+    fold(state, CovState(Nil, Nil, 0L, 0L, Long.MaxValue, Long.MinValue,
+        Long.MinValue)) { (st0, wm) =>
+      val durUs = durSec * 1000000L
+      // exact event micros: getTime truncates to millis, the sub-milli
+      // remainder rides getNanos — batch unix_micros sees both. An
+      // event ripens one µs after its instant (see the object doc)
+      val (closing, pending) = ripen(st0.pending ++ events.map(e =>
+        e.ts.getTime / 1000L * 1000000L + e.ts.getNanos / 1000L), wm)(
+        _ + 1L, identity)
+      val st = closing.foldLeft(st0) { (s, us) =>
+        s.copy(open = merge(s.open, us, us + durUs), n = s.n + 1L,
+          s0 = s.s0 min us, e1 = s.e1 max (us + durUs), anchor = s.anchor max us)
+      }
+      // fold intervals the watermark has passed: nothing arriving
+      // above it can extend them
+      val (dead, live) = st.open.partition(iv => ripe(iv._2, wm))
+      val covered = st.coveredClosed + dead.map { case (s, e) => e - s }.sum
+      val rows =
+        if (st.anchor == st0.anchor) Nil
+        else {
+          val total = covered + live.map { case (s, e) => e - s }.sum
+          val span = st.e1 - st.s0
+          List(CovRow(key, st.anchor, st.n, total, span,
+            round6(total.toDouble / span.toDouble)))
+        }
+      Next(rows, Option.when(pending.nonEmpty || live.nonEmpty || st.n > 0L)(
+        st.copy(pending = pending, open = live, coveredClosed = covered)),
+        pending.minOption.map(_ + 1L))
     }
-    val anchor = if (closing.nonEmpty) closing.max max st0.anchor else st0.anchor
-    // fold intervals the watermark has passed: nothing arriving at or
-    // above wm can extend them
-    var covered = st0.coveredClosed
-    val (dead, live) = open.partition(_._2 <= wmUs)
-    dead.foreach { case (s, e) => covered += e - s }
-    open = live
-    val rows =
-      if (anchor > st0.anchor) {
-        val total = covered + open.map { case (s, e) => e - s }.sum
-        val span = e1 - s0
-        List(CovRow(key, anchor, n, total, span,
-          rd6(total.toDouble / span.toDouble)))
-      } else Nil
-    if (pending.isEmpty && open.isEmpty && n == 0L) state.remove()
-    else {
-      state.update(CovState(pending, open, covered, n, s0, e1, anchor))
-      // wake when the watermark can close the next pending event
-      pending.minOption
-        .foreach(p => state.setTimeoutTimestamp(p / 1000L + 1L))
-    }
-    rows.iterator
-  }
 
   /** Streaming entry: per-key coverage frames, one per advanced
     * per-key anchor (the key's latest watermark-closed event),
@@ -107,11 +98,6 @@ object CoverageStream {
   def coverageFrames(events: Dataset[KeyEvent],
                      durSec: Long): Dataset[CovRow] = {
     require(durSec >= 1, s"coverageFrames: durSec $durSec must be >= 1")
-    import SloMonitor.{keyEvEnc, strEnc}
-    events
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[CovState, CovRow](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        covUpdate(durSec) _)
+    Ripen(events)(_.key)(covUpdate(durSec))
   }
 }

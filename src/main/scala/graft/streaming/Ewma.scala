@@ -1,16 +1,19 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.GroupState
 
+import graft.functions.PqCodes.round6
 import Anomaly.{AnomState, Event}
+import Ripen._
 
 /** Streaming twin of the batch EWMA rate forecast
   * (`operators.Windows.ewmaForecast`, r20): per-key hourly counts
   * forecast from the trailing window with dyadic (α=1/2) weights,
-  * live. Rides [[Anomaly.hourlyUpdate]] — the same per-key
-  * O(trailing-window) state, exactly-once scoring on watermark close,
-  * eviction, and idle-key self-destruct; only the scorer differs.
+  * live. Rides [[Anomaly.hourlyUpdate]] ([[Ripen.Hours.scored]]) — the
+  * same per-key O(trailing-window) state, exactly-once scoring on
+  * watermark close, eviction, and idle-key self-destruct; only the
+  * scorer differs.
   *
   * Decision parity with the batch op: the weights 2^(trailingHours−d)
   * are exact longs, numerator and denominator are exact long sums
@@ -24,11 +27,6 @@ object Ewma {
   final case class Forecast(
       key: String, hr_start: Long, n_events: Long,
       ewma_forecast: Double, is_spike: Boolean, is_drop: Boolean)
-
-  implicit val forecastEnc: Encoder[Forecast] = Encoders.product[Forecast]
-
-  private def rd6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** The batch operator's dyadic arithmetic verbatim: weight
     * 2^(trailingHours−d) for the count d hours back, missing hours
@@ -50,7 +48,7 @@ object Ewma {
         den += w
       }
       val fc = num.toDouble / den.toDouble
-      Some(Forecast(key, hr * 3600L, c, rd6(fc),
+      Some(Forecast(key, hr * 3600L, c, round6(fc),
         c.toDouble >= spikeFactor * fc, c.toDouble <= fc / spikeFactor))
     }
   }
@@ -59,9 +57,8 @@ object Ewma {
   def update(trailingHours: Int, minHistory: Int, spikeFactor: Double)(
       key: String, events: Iterator[Event],
       state: GroupState[AnomState]): Iterator[Forecast] =
-    Anomaly.hourlyUpdate[Forecast](trailingHours,
-      (k, h, counts) => score(k, h, counts, trailingHours, minHistory,
-        spikeFactor))(key, events, state)
+    Anomaly.hourlyUpdate(trailingHours, events, state)((h, counts) =>
+      score(key, h, counts, trailingHours, minHistory, spikeFactor))
 
   /** Streaming entry: `events` must carry an event-time watermark on
     * the column `ts` derives from.
@@ -69,10 +66,5 @@ object Ewma {
   def forecasts(events: Dataset[Event], trailingHours: Int = 24,
                 minHistory: Int = 12,
                 spikeFactor: Double = 3.0): Dataset[Forecast] =
-    events
-      .groupByKey(_.key)(Anomaly.stringEnc)
-      .flatMapGroupsWithState[AnomState, Forecast](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        update(trailingHours, minHistory, spikeFactor) _)(
-        Anomaly.stateEnc, forecastEnc)
+    Ripen(events)(_.key)(update(trailingHours, minHistory, spikeFactor))
 }

@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.GroupState
+
+import Ripen._
 
 /** Streaming rung for the graph family (q37–q40 / d27): INCREMENTAL
   * CONNECTED COMPONENTS over micro-batched edge arrivals — the
@@ -46,69 +48,48 @@ object GraphStream {
     * Fold by max as_of per id for the full labeling. */
   final case class CcDelta(as_of: Long, id: Long, component: Long)
 
-  implicit val edgeEnc: Encoder[EdgeArrival] = Encoders.product[EdgeArrival]
-  implicit val ccStEnc: Encoder[CcState] = Encoders.product[CcState]
-  implicit val ccDeltaEnc: Encoder[CcDelta] = Encoders.product[CcDelta]
-  implicit val keyEnc: Encoder[String] = Encoders.STRING
-
   /** Transition, exposed for unit tests. */
   def ccUpdate(key: String, edges: Iterator[EdgeArrival],
-               state: GroupState[CcState]): Iterator[CcDelta] = {
-    val st0 = state.getOption.getOrElse(CcState(0L, Map.empty))
-    val comp = st0.comp
-    // min-root union-find over the CONTRACTED batch graph: an endpoint
-    // enters as its current component rep (itself when new)
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-      var c = x
-      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    val newIds = scala.collection.mutable.LinkedHashSet.empty[Long]
-    var sawEdge = false
-    edges.foreach { e =>
-      sawEdge = true
-      if (!comp.contains(e.id1)) newIds += e.id1
-      if (!comp.contains(e.id2)) newIds += e.id2
-      val a = comp.getOrElse(e.id1, e.id1)
-      val b = comp.getOrElse(e.id2, e.id2)
-      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-    }
-    if (!sawEdge) Iterator.empty
-    else {
+               state: GroupState[CcState]): Iterator[CcDelta] =
+    Ripen.sequenced(state, CcState(0L, Map.empty), edges) { (st0, es) =>
       val asOf = st0.batch + 1
-      val out = Vector.newBuilder[CcDelta]
-      var next = comp
-      // store ids whose component's rep merged downward re-point
-      comp.foreach { case (id, c) =>
-        val m = find(c)
-        if (m != c) { next = next.updated(id, m); out += CcDelta(asOf, id, m) }
+      val comp = st0.comp
+      // min-root union-find over the CONTRACTED batch graph: an endpoint
+      // enters as its current component rep (itself when new)
+      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+      def find(x: Long): Long = {
+        var r = x
+        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+        var c = x
+        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+        r
       }
+      val newIds = scala.collection.mutable.LinkedHashSet.empty[Long]
+      es.foreach { e =>
+        if (!comp.contains(e.id1)) newIds += e.id1
+        if (!comp.contains(e.id2)) newIds += e.id2
+        val a = comp.getOrElse(e.id1, e.id1)
+        val b = comp.getOrElse(e.id2, e.id2)
+        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+      }
+      // store ids whose component's rep merged downward re-point;
       // newly seen ids enter the store (and the delta stream) labeled
       // with their merged rep — themselves when unpaired with history
-      newIds.foreach { id =>
-        val m = find(id)
-        next = next.updated(id, m)
-        out += CcDelta(asOf, id, m)
-      }
-      state.update(CcState(asOf, next))
-      out.result().iterator
+      val moved = comp.iterator.flatMap { case (id, c) =>
+        val m = find(c); Option.when(m != c)(id -> m)
+      }.toVector ++ newIds.iterator.map(id => id -> find(id))
+      (CcState(asOf, comp ++ moved),
+        moved.map { case (id, m) => CcDelta(asOf, id, m) })
     }
-  }
 
   /** Streaming entry: `edges` is a streaming Dataset of undirected
     * edge arrivals; emits delta frames per micro-batch. Append mode,
     * no watermark (the labeling is monotone — nothing ever closes).
     */
   def ccDeltas(edges: Dataset[EdgeArrival]): Dataset[CcDelta] =
-    edges
-      .groupByKey(_ => "all")
-      .flatMapGroupsWithState[CcState, CcDelta](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(ccUpdate _)
+    Ripen(edges)(_ => "all", timeout = false)(ccUpdate)
 
   // ---------------------------------------------------------------
   // Weighted single-source shortest paths (the q39 Bellman-Ford rung)
@@ -129,10 +110,6 @@ object GraphStream {
     * as_of per id reconstructs the full distance map at any prefix. */
   final case class SsspDelta(as_of: Long, id: Long, dist: Long)
 
-  implicit val wEdgeEnc: Encoder[WEdgeArrival] = Encoders.product[WEdgeArrival]
-  implicit val ssspStEnc: Encoder[SsspState] = Encoders.product[SsspState]
-  implicit val ssspDeltaEnc: Encoder[SsspDelta] = Encoders.product[SsspDelta]
-
   /** Transition (exposed for unit tests): merge the batch's edges
     * into the min-weight adjacency, then relax to FIXPOINT from the
     * affected frontier — the insert-only case of incremental SSSP
@@ -149,31 +126,24 @@ object GraphStream {
   def ssspUpdate(seeds: Set[Long])(key: String,
                                    edges: Iterator[WEdgeArrival],
                                    state: GroupState[SsspState])
-      : Iterator[SsspDelta] = {
-    val st0 = state.getOption.getOrElse(SsspState(0L, Map.empty, Map.empty))
-    var adj = st0.adj
-    val dist = scala.collection.mutable.HashMap.empty[Long, Long]
-    st0.dist.foreach { case (k, v) => dist(k) = v }
-    // seeds enter at 0 on first sight (batch 1 when state is empty)
-    val work = scala.collection.mutable.Queue.empty[Long]
-    if (st0.batch == 0L) seeds.foreach { s =>
-      dist(s) = 0L; work += s
-    }
-    var sawEdge = false
-    edges.foreach { e =>
-      require(e.w >= 0L, s"ssspDeltas: negative weight ${e.w} on " +
-        s"(${e.src}, ${e.dst}) — insert-only incremental SSSP needs w >= 0")
-      sawEdge = true
-      val row = adj.getOrElse(e.src, Map.empty)
-      val prev = row.get(e.dst)
-      if (prev.forall(e.w < _)) {
-        adj = adj.updated(e.src, row.updated(e.dst, e.w))
-        // the new/lightened edge is itself a relaxation source
-        if (dist.contains(e.src)) work += e.src
+      : Iterator[SsspDelta] =
+    Ripen.sequenced(state, SsspState(0L, Map.empty, Map.empty), edges) { (st0, es) =>
+      val asOf = st0.batch + 1
+      var adj = st0.adj
+      val dist = scala.collection.mutable.HashMap.from(st0.dist)
+      // seeds enter at 0 on first sight (batch 1 when state is empty)
+      val work = scala.collection.mutable.Queue.empty[Long]
+      if (st0.batch == 0L) seeds.foreach { s => dist(s) = 0L; work += s }
+      es.foreach { e =>
+        require(e.w >= 0L, s"ssspDeltas: negative weight ${e.w} on " +
+          s"(${e.src}, ${e.dst}) — insert-only incremental SSSP needs w >= 0")
+        val row = adj.getOrElse(e.src, Map.empty)
+        if (row.get(e.dst).forall(e.w < _)) {
+          adj = adj.updated(e.src, row.updated(e.dst, e.w))
+          // the new/lightened edge is itself a relaxation source
+          if (dist.contains(e.src)) work += e.src
+        }
       }
-    }
-    if (!sawEdge && work.isEmpty) Iterator.empty
-    else {
       val changed = scala.collection.mutable.LinkedHashMap.empty[Long, Long]
       while (work.nonEmpty) {
         val u = work.dequeue()
@@ -189,11 +159,9 @@ object GraphStream {
       }
       // first-batch seeds emit their 0 rows even without improvement
       if (st0.batch == 0L) seeds.foreach(s => changed.getOrElseUpdate(s, 0L))
-      val asOf = st0.batch + 1
-      state.update(SsspState(asOf, adj, dist.toMap))
-      changed.iterator.map { case (id, d) => SsspDelta(asOf, id, d) }
+      (SsspState(asOf, adj, dist.toMap),
+        changed.map { case (id, d) => SsspDelta(asOf, id, d) })
     }
-  }
 
   /** Streaming entry: weighted directed edge arrivals against a FIXED
     * seed set; emits distance-improvement deltas per micro-batch.
@@ -202,10 +170,7 @@ object GraphStream {
   def ssspDeltas(edges: Dataset[WEdgeArrival],
                  seeds: Set[Long]): Dataset[SsspDelta] = {
     require(seeds.nonEmpty, "ssspDeltas: empty seed set")
-    edges
-      .groupByKey(_ => "all")
-      .flatMapGroupsWithState[SsspState, SsspDelta](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(ssspUpdate(seeds))
+    Ripen(edges)(_ => "all", timeout = false)(ssspUpdate(seeds))
   }
 
   // ---------------------------------------------------------------
@@ -221,9 +186,6 @@ object GraphStream {
     * `as_of` (NOT monotone — labels can move in any direction; fold
     * by max as_of per id for the full labeling). */
   final case class LpaDelta(as_of: Long, id: Long, label: Long)
-
-  implicit val lpaStEnc: Encoder[LpaState] = Encoders.product[LpaState]
-  implicit val lpaDeltaEnc: Encoder[LpaDelta] = Encoders.product[LpaDelta]
 
   /** Transition (exposed for unit tests): LPA has no incremental
     * decomposition — a single new edge can re-label an arbitrary
@@ -241,18 +203,13 @@ object GraphStream {
     */
   def lpaUpdate(iters: Int)(key: String, edges: Iterator[WEdgeArrival],
                             state: GroupState[LpaState])
-      : Iterator[LpaDelta] = {
-    val st0 = state.getOption.getOrElse(LpaState(0L, Map.empty, Map.empty))
-    var adj = st0.adj
-    var sawEdge = false
-    edges.foreach { e =>
-      sawEdge = true
-      val row = adj.getOrElse(e.src, Map.empty)
-      adj = adj.updated(e.src,
-        row.updated(e.dst, row.getOrElse(e.dst, 0L) + e.w))
-    }
-    if (!sawEdge) Iterator.empty
-    else {
+      : Iterator[LpaDelta] =
+    Ripen.sequenced(state, LpaState(0L, Map.empty, Map.empty), edges) { (st0, es) =>
+      val asOf = st0.batch + 1
+      val adj = es.foldLeft(st0.adj) { (adj, e) =>
+        val row = adj.getOrElse(e.src, Map.empty)
+        adj.updated(e.src, row.updated(e.dst, row.getOrElse(e.dst, 0L) + e.w))
+      }
       val nodes = (adj.keysIterator ++
         adj.valuesIterator.flatMap(_.keysIterator)).toSet
       var lab: Map[Long, Long] = nodes.iterator.map(n => n -> n).toMap
@@ -274,14 +231,10 @@ object GraphStream {
           }
         lab = lab.map { case (id, old) => id -> best.getOrElse(id, old) }
       }
-      val asOf = st0.batch + 1
-      val out = lab.toSeq.sortBy(_._1).collect {
+      (LpaState(asOf, adj, lab), lab.toSeq.sortBy(_._1).collect {
         case (id, l) if !st0.lab.get(id).contains(l) => LpaDelta(asOf, id, l)
-      }
-      state.update(LpaState(asOf, adj, lab))
-      out.iterator
+      })
     }
-  }
 
   /** Streaming entry: weighted directed edge arrivals; emits
     * label-change deltas per micro-batch under the batch operator's
@@ -290,9 +243,6 @@ object GraphStream {
     */
   def lpaDeltas(edges: Dataset[WEdgeArrival], iters: Int): Dataset[LpaDelta] = {
     require(iters >= 0 && iters <= 50, s"lpaDeltas: iters $iters not in [0, 50]")
-    edges
-      .groupByKey(_ => "all")
-      .flatMapGroupsWithState[LpaState, LpaDelta](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(lpaUpdate(iters))
+    Ripen(edges)(_ => "all", timeout = false)(lpaUpdate(iters))
   }
 }

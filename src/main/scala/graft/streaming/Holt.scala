@@ -1,22 +1,24 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.GroupState
 
+import graft.functions.PqCodes.round6
 import Anomaly.Event
+import Ripen._
 
 /** Streaming twin of the batch Holt linear-trend forecast
   * (`operators.Windows.holtForecast`, r39): per-key hourly counts run
   * through the SAME precomputed dyadic filter, live.
   *
-  * Not on [[Anomaly.hourlyUpdate]]'s shared state on purpose: the
-  * batch op's scoring gate is the key's history SPAN (hr ≥ first hr +
+  * The step is [[Ripen.Hours.scored]], the per-hour scoring shared
+  * with [[Anomaly]] and [[Ewma]]; only the state differs. The batch
+  * op's scoring gate is the key's history SPAN (hr ≥ first hr +
   * window), and `AnomState` does not carry the first hour — extending
   * it would change the state schema under the r16/r20 twins'
-  * checkpoints (the SloMonitor v2 lesson). [[HoltState]] adds
-  * `firstHr`, tracked before any eviction, so the gate is exact; the
-  * exactly-once / eviction / timeout reasoning is the hourlyUpdate
-  * skeleton with that one addition.
+  * checkpoints (the SloMonitor v2 lesson) — so [[HoltState]] adds
+  * `firstHr`, taken over every arriving hour before eviction can
+  * forget the oldest, and the gate is exact.
   *
   * Decision parity: the filter coefficients are the IDENTICAL longs
   * ([[graft.operators.Windows.holtCoeffs]]), zero-filled absent hours
@@ -34,12 +36,6 @@ object Holt {
       key: String, hr_start: Long, n_events: Long,
       holt_forecast: Double, holt_slope: Double,
       is_spike: Boolean, is_drop: Boolean)
-
-  implicit val stateEnc: Encoder[HoltState] = Encoders.product[HoltState]
-  implicit val forecastEnc: Encoder[Forecast] = Encoders.product[Forecast]
-
-  private def rd6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** The batch operator's filter arithmetic verbatim: zero-filled
     * trailing counts, integer dot products, span gate, ≥1 present
@@ -61,54 +57,29 @@ object Holt {
         val f = num.toDouble / den
         val sl = bnum.toDouble / den
         val c = counts(hr)
-        Some(Forecast(key, hr * 3600L, c, rd6(f), rd6(sl),
+        Some(Forecast(key, hr * 3600L, c, round6(f), round6(sl),
           f > 0.0 && c.toDouble >= spikeFactor * f,
           f > 0.0 && c.toDouble <= f / spikeFactor))
       }
     }
   }
 
-  /** Transition function, exposed for unit tests. The hourlyUpdate
-    * skeleton plus firstHr tracking (recorded BEFORE eviction can
-    * forget the oldest hour).
-    */
+  /** Transition function, exposed for unit tests. */
   def update(window: Int, spikeFactor: Double)(
       key: String, events: Iterator[Event],
-      state: GroupState[HoltState]): Iterator[Forecast] = {
-    val st0 = state.getOption.getOrElse(
-      HoltState(Map.empty, Long.MinValue, Long.MaxValue))
-    val counts = events.foldLeft(st0.counts) { (m, e) =>
-      m.updated(e.hr, m.getOrElse(e.hr, 0L) + 1L)
+      state: GroupState[HoltState]): Iterator[Forecast] =
+    fold(state, HoltState(Map.empty, Long.MinValue, Long.MaxValue)) { (st, wm) =>
+      val hrs = events.map(_.hr).toSeq
+      val firstHr = hrs.foldLeft(st.firstHr)(_ min _)
+      Hours.scored(st.counts, st.scoredUpTo, hrs.iterator, wm, window)(
+        (h, counts) => score(key, h, counts, firstHr, window, spikeFactor))(
+        HoltState(_, _, firstHr))
     }
-    val firstHr =
-      if (counts.isEmpty) st0.firstHr
-      else math.min(st0.firstHr, counts.keys.min)
-    val wmHr = state.getCurrentWatermarkMs() / 1000L / 3600L
-    val ready = counts.keys.filter(h => h > st0.scoredUpTo && h < wmHr)
-      .toSeq.sorted
-    val out = ready.flatMap(h =>
-      score(key, h, counts, firstHr, window, spikeFactor))
-    val scoredUpTo = if (ready.nonEmpty) ready.max else st0.scoredUpTo
-    val kept = counts.filter { case (h, _) => h >= wmHr - window }
-    if (kept.isEmpty) state.remove()
-    else {
-      state.update(HoltState(kept, scoredUpTo, firstHr))
-      val pending = kept.keys.filter(_ > scoredUpTo)
-      val wakeHr = pending.minOption.map(_ + 1)
-        .getOrElse(kept.keys.max + window + 1)
-      state.setTimeoutTimestamp(wakeHr * 3600L * 1000L)
-    }
-    out.iterator
-  }
 
   /** Streaming entry: `events` must carry an event-time watermark on
     * the column `ts` derives from.
     */
   def forecasts(events: Dataset[Event], window: Int = 16,
                 spikeFactor: Double = 3.0): Dataset[Forecast] =
-    events
-      .groupByKey(_.key)(Anomaly.stringEnc)
-      .flatMapGroupsWithState[HoltState, Forecast](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        update(window, spikeFactor) _)(stateEnc, forecastEnc)
+    Ripen(events)(_.key)(update(window, spikeFactor))
 }

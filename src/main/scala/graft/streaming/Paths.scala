@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.GroupState
+
+import Ripen._
 
 /** Streaming twin of the batch session-path miner
   * (`operators.LogMining.sessionPathStrings`): emit each gap-split
@@ -50,11 +52,6 @@ object SessionPaths {
 
   final case class SessionPath(key: String, path: String)
 
-  implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
-  implicit val stEnc: Encoder[PathState] = Encoders.product[PathState]
-  implicit val outEnc: Encoder[SessionPath] = Encoders.product[SessionPath]
-  implicit val strEnc: Encoder[String] = Encoders.STRING
-
   private def pathOf(head: List[HeadEv]): String =
     head.sortBy(e => (e.tsUs, e.id)).map(_.etype).mkString(">")
 
@@ -72,47 +69,27 @@ object SessionPaths {
   def update(gapUs: Long, maxLen: Int)(
       key: String, events: Iterator[Ev],
       state: GroupState[PathState]): Iterator[SessionPath] = {
-    if (state.hasTimedOut) {
-      val s = state.get
-      state.remove()
-      Iterator(SessionPath(key, pathOf(s.head)))
-    } else {
-      val sorted = events.toSeq.sortBy(e => (e.tsUs, e.id))
-      var closed = List.empty[SessionPath]
-      var cur = state.getOption
-      sorted.foreach { e =>
-        cur match {
-          case Some(s) =>
-            val start = s.head.head.tsUs
-            if (e.tsUs >= s.lastUs) {
-              if (e.tsUs - s.lastUs <= gapUs)
-                cur = Some(PathState(e.tsUs,
-                  insert(s.head, HeadEv(e.tsUs, e.id, e.etype), maxLen)))
-              else { // gap exceeded: close, start anew
-                closed ::= SessionPath(key, pathOf(s.head))
-                cur = Some(PathState(e.tsUs, List(HeadEv(e.tsUs, e.id, e.etype))))
-              }
-            } else if (e.tsUs >= start || start - e.tsUs <= gapUs) {
-              // out-of-order but inside the span (or within gap of the
-              // start): in global sort order it belongs to this session
-              cur = Some(PathState(s.lastUs,
-                insert(s.head, HeadEv(e.tsUs, e.id, e.etype), maxLen)))
-            } else {
-              // a pre-start straggler beyond the gap: its own session,
-              // emitted in place (the documented singleton caveat)
-              closed ::= SessionPath(key, e.etype)
-            }
-          case None =>
-            cur = Some(PathState(e.tsUs, List(HeadEv(e.tsUs, e.id, e.etype))))
-        }
-      }
-      cur.foreach { s =>
-        state.update(s)
-        // close when the watermark passes last + gap (ms grain, ceil)
-        state.setTimeoutTimestamp((s.lastUs + gapUs) / 1000L + 1L)
-      }
-      closed.reverseIterator
-    }
+    def one(e: Ev) = HeadEv(e.tsUs, e.id, e.etype)
+    def close(s: PathState) = SessionPath(key, pathOf(s.head))
+    Ripen.sessions(state, events.toSeq.sortBy(e => (e.tsUs, e.id)))(
+      e => PathState(e.tsUs, List(one(e))),
+      (s, e) =>
+        if (e.tsUs >= s.lastUs) {
+          if (e.tsUs - s.lastUs <= gapUs)
+            (PathState(e.tsUs, insert(s.head, one(e), maxLen)), None)
+          else // gap exceeded: close, start anew
+            (PathState(e.tsUs, List(one(e))), Some(close(s)))
+        } else if (e.tsUs >= s.head.head.tsUs ||
+                   s.head.head.tsUs - e.tsUs <= gapUs) {
+          // out-of-order but inside the span (or within gap of the
+          // start): in global sort order it belongs to this session
+          (PathState(s.lastUs, insert(s.head, one(e), maxLen)), None)
+        } else {
+          // a pre-start straggler beyond the gap: its own session,
+          // emitted in place (the documented singleton caveat)
+          (s, Some(SessionPath(key, e.etype)))
+        },
+      close, s => s.lastUs + gapUs)
   }
 
   /** Streaming entry point: `events` must carry an event-time
@@ -120,10 +97,6 @@ object SessionPaths {
     */
   def paths(events: Dataset[Ev], gapUs: Long, maxLen: Int): Dataset[SessionPath] = {
     require(maxLen > 0, s"sessionPaths: maxLen $maxLen must be positive")
-    events
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[PathState, SessionPath](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        update(gapUs, maxLen) _)
+    Ripen(events)(_.key)(update(gapUs, maxLen))
   }
 }

@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.GroupState
+
+import Ripen._
 
 /** Streaming twin of the q34 SCD Type-2 build — live CDC dimension
   * versioning: each emitted row is a CLOSED version, bit-equal to the
@@ -35,40 +37,23 @@ object Scd2Stream {
   final case class ScdRow(key: Long, state: String, effective_from: Long,
                           effective_to: Long, version: Long)
 
-  implicit val scdEvEnc: Encoder[ScdEvent] = Encoders.product[ScdEvent]
-  implicit val scdStEnc: Encoder[ScdState] = Encoders.product[ScdState]
-  implicit val scdRowEnc: Encoder[ScdRow] = Encoders.product[ScdRow]
-  implicit val longEnc: Encoder[Long] = Encoders.scalaLong
-
   /** Transition, exposed for unit tests. */
   def scdUpdate(key: Long, events: Iterator[ScdEvent],
-                state: GroupState[ScdState]): Iterator[ScdRow] = {
-    val st0 = state.getOption.getOrElse(ScdState(Nil, "", Long.MinValue, 0L))
-    val wmUs = state.getCurrentWatermarkMs() * 1000L
-    val pending0 = st0.pending ++ events.map(e => (e.us, e.tie, e.state))
-    val (closing, pending) = pending0.partition(_._1 < wmUs)
-    var open = st0.version > 0L
-    var openState = st0.openState
-    var openFrom = st0.openFrom
-    var version = st0.version
-    val out = List.newBuilder[ScdRow]
-    closing.sortBy(c => (c._1, c._2)).foreach { case (us, _, s) =>
-      if (!open) {
-        open = true; openState = s; openFrom = us; version = 1L
-      } else if (s != openState) {
+                state: GroupState[ScdState]): Iterator[ScdRow] =
+    fold(state, ScdState(Nil, "", Long.MinValue, 0L)) { (st0, wm) =>
+      val (closing, pending) = ripen(
+        st0.pending ++ events.map(e => (e.us, e.tie, e.state)), wm)(
+        _._1, c => (c._1, c._2))
+      val (st, out) = scan(st0, closing) { case (st, (us, _, s)) =>
+        if (st.version == 0L) (ScdState(Nil, s, us, 1L), None)
+        else if (s == st.openState) (st, None) // the batch lag filter
         // the batch lead: the open version closes AT the change
-        out += ScdRow(key, openState, openFrom, us, version)
-        openState = s; openFrom = us; version += 1L
-      } // same state collapses — the batch lag filter
+        else (ScdState(Nil, s, us, st.version + 1L),
+          Some(ScdRow(key, st.openState, st.openFrom, us, st.version)))
+      }
+      Next(out, Option.when(pending.nonEmpty || st.version > 0L)(
+        st.copy(pending = pending)), pending.map(_._1).minOption)
     }
-    if (pending.isEmpty && !open) state.remove()
-    else {
-      state.update(ScdState(pending, openState, openFrom, version))
-      pending.map(_._1).minOption
-        .foreach(p => state.setTimeoutTimestamp(p / 1000L + 1L))
-    }
-    out.result().iterator
-  }
 
   /** Streaming entry: Append-final CLOSED versions per key. `events`
     * must carry an event-time watermark on the column `ts` derives
@@ -76,9 +61,5 @@ object Scd2Stream {
     * it from the batch operator or a state-store query.
     */
   def scd2Versions(events: Dataset[ScdEvent]): Dataset[ScdRow] =
-    events
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[ScdState, ScdRow](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        scdUpdate _)
+    Ripen(events)(_.key)(scdUpdate)
 }

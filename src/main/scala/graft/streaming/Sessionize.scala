@@ -1,15 +1,18 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.GroupState
+
+import Ripen._
 
 /** Custom streaming state beyond windowed aggregation: inactivity
-  * sessionization via `flatMapGroupsWithState` — the Spark-native
+  * sessionization via [[Ripen.sessions]] — the Spark-native
   * answer where the reference would need hand-rolled state in its
   * window loop.
   *
   * A session = consecutive events of one key with gaps < `gapSec`;
-  * it closes when the event-time watermark passes last_event + gap.
+  * it closes once the watermark ripens its last joinable instant
+  * (last_event + gap, exclusive) — in-band or on the idle-key timeout.
   * State per key is O(1) (bounds, count, sum), so state-store size is
   * #active-keys, not #events — the property that matters at 100 TB:
   * a billion-key stream holds a billion tiny structs, never raw rows.
@@ -31,50 +34,25 @@ object Sessionize {
       key: String, start: Long, end: Long, n: Long, sum: Double,
       durationSec: Long)
 
-  implicit val eventEnc: Encoder[Event] = Encoders.product[Event]
-  implicit val stateEnc: Encoder[SessionState] = Encoders.product[SessionState]
-  implicit val sessionEnc: Encoder[Session] = Encoders.product[Session]
-  implicit val stringEnc: Encoder[String] = Encoders.STRING
-
   /** Core transition function, exposed for unit tests. */
   def update(gapSec: Long)(
       key: String, events: Iterator[Event],
       state: GroupState[SessionState]): Iterator[Session] = {
-    if (state.hasTimedOut) {
-      val s = state.get
-      state.remove()
-      Iterator(Session(key, s.start, s.lastTs, s.n, s.sum, s.lastTs - s.start))
-    } else {
-      val sorted = events.toSeq.sortBy(_.tsSec)
-      var closed = List.empty[Session]
-      var cur = state.getOption
-      sorted.foreach { e =>
-        cur match {
-          case Some(s) if e.tsSec - s.lastTs < gapSec =>
-            cur = Some(s.copy(lastTs = math.max(s.lastTs, e.tsSec),
-              n = s.n + 1, sum = s.sum + e.value))
-          case Some(s) => // gap exceeded inside the batch: close, start anew
-            closed ::= Session(key, s.start, s.lastTs, s.n, s.sum, s.lastTs - s.start)
-            cur = Some(SessionState(e.tsSec, e.tsSec, 1L, e.value))
-          case None =>
-            cur = Some(SessionState(e.tsSec, e.tsSec, 1L, e.value))
-        }
-      }
-      cur.foreach { s =>
-        state.update(s)
-        // close when the watermark passes lastTs + gap
-        state.setTimeoutTimestamp((s.lastTs + gapSec) * 1000L)
-      }
-      closed.reverseIterator
-    }
+    def start(e: Event) = SessionState(e.tsSec, e.tsSec, 1L, e.value)
+    def close(s: SessionState) =
+      Session(key, s.start, s.lastTs, s.n, s.sum, s.lastTs - s.start)
+    Ripen.sessions(state, events.toSeq.sortBy(_.tsSec))(start,
+      (s, e) =>
+        if (e.tsSec - s.lastTs < gapSec)
+          (s.copy(lastTs = math.max(s.lastTs, e.tsSec), n = s.n + 1,
+            sum = s.sum + e.value), None)
+        else (start(e), Some(close(s))), // gap exceeded inside the batch
+      close, s => (s.lastTs + gapSec) * 1000000L - 1L)
   }
 
   /** Streaming entry point: `events` must carry an event-time
     * watermark on a timestamp column from which `tsSec` was derived.
     */
   def sessions(events: Dataset[Event], gapSec: Long): Dataset[Session] =
-    events
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[SessionState, Session](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(update(gapSec) _)
+    Ripen(events)(_.key)(update(gapSec))
 }

@@ -1,7 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.GroupState
+
+import graft.functions.PqCodes.round6
+import Ripen._
 
 /** Streaming twins of the r26/r27/r28 batch SRE frames — the last
   * three rungs of the monitoring ladder live: an on-call deployment
@@ -13,11 +16,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * operator run over the stream prefix it summarizes — pinned by
   * SloMonitorSpec across micro-batch boundaries.
   *
-  * Emission model (shared): a frame is anchored at the latest
-  * watermark-CLOSED event hour, exactly like the batch anchor
+  * Emission model (shared, on [[Ripen.Hours]]): a frame is anchored
+  * at the latest RIPE event hour, exactly like the batch anchor
   * `max(_hr)`; it emits when that anchor advances, tagged `as_of`
   * (Append-mode safe — one frame per anchor, never a retraction).
-  * Hours still inside the watermark stay pending: a frame never
+  * Hours the watermark has not ripened stay pending: a frame never
   * reads an hour that could still grow.
   *
   * State bounds: burn keeps ≤ maxWindow + pending (hour → (n, e))
@@ -27,9 +30,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * incidents keeps O(1) per alert key.
   */
 object SloMonitor {
-
-  private def rd6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   // ------------------------------------------------------------ r26 burn
 
@@ -46,48 +46,35 @@ object SloMonitor {
       as_of: Long, window_hours: Int, n_total: Long, n_errors: Long,
       err_rate: Double, burn_rate: Double, page: Boolean)
 
-  implicit val errEnc: Encoder[ErrEvent] = Encoders.product[ErrEvent]
-  implicit val burnStEnc: Encoder[BurnState] = Encoders.product[BurnState]
-  implicit val burnEnc: Encoder[BurnFrame] = Encoders.product[BurnFrame]
-  implicit val strEnc: Encoder[String] = Encoders.STRING
+  /** Fold one event into an hour → (events, errors) histogram. */
+  private def tally(m: Map[Long, (Long, Long)], e: ErrEvent) = {
+    val (n, er) = m.getOrElse(e.hr, (0L, 0L))
+    m.updated(e.hr, (n + 1L, er + (if (e.isError) 1L else 0L)))
+  }
 
   /** Transition, exposed for unit tests. */
   def burnUpdate(slo: Double, windowsHours: Seq[Int], pageAt: Double)(
       key: String, events: Iterator[ErrEvent],
-      state: GroupState[BurnState]): Iterator[BurnFrame] = {
-    val maxW = windowsHours.max
-    val budget = 1.0 - slo
-    val st0 = state.getOption.getOrElse(BurnState(Map.empty, Long.MinValue))
-    val hours = events.foldLeft(st0.hours) { (m, e) =>
-      val (n, er) = m.getOrElse(e.hr, (0L, 0L))
-      m.updated(e.hr, (n + 1L, er + (if (e.isError) 1L else 0L)))
-    }
-    val wmHr = state.getCurrentWatermarkMs() / 1000L / 3600L
-    val closed = hours.keys.filter(_ < wmHr)
-    val anchor = if (closed.nonEmpty) closed.max max st0.anchor else st0.anchor
-    val frames =
-      if (anchor > st0.anchor) windowsHours.sorted.map { w =>
+      state: GroupState[BurnState]): Iterator[BurnFrame] =
+    fold(state, BurnState(Map.empty, Long.MinValue)) { (st0, wm) =>
+      val maxW = windowsHours.max
+      val hours = events.foldLeft(st0.hours)(tally)
+      val anchor = Hours.fresh(hours.keys, st0.anchor, wm).lastOption
+      val frames = anchor.toList.flatMap(a => windowsHours.sorted.map { w =>
         // the batch filter verbatim: _hr > anchor - w (and closed)
-        val in = hours.view.filter { case (h, _) => h > anchor - w && h <= anchor }
+        val in = hours.view.filter { case (h, _) => h > a - w && h <= a }
         val nT = in.map(_._2._1).sum
         val nE = in.map(_._2._2).sum
         val rate = nE.toDouble / nT.toDouble
-        val burn = rd6(rate / budget)
-        BurnFrame(anchor * 3600L, w, nT, nE, rd6(rate), burn, burn >= pageAt)
-      } else Nil
-    // hours at or below every future anchor's deepest window evict;
-    // future anchors are >= wmHr, so wmHr - maxW is the safe floor
-    val kept = hours.filter { case (h, _) => h > (anchor max (wmHr - 1)) - maxW }
-    if (kept.isEmpty) state.remove()
-    else {
-      state.update(BurnState(kept, anchor))
-      val pending = kept.keys.filter(_ >= wmHr)
-      val wakeHr = pending.minOption.map(_ + 1)
-        .getOrElse(kept.keys.max + maxW + 1)
-      state.setTimeoutTimestamp(wakeHr * 3600L * 1000L)
+        val burn = round6(rate / (1.0 - slo))
+        BurnFrame(a * 3600L, w, nT, nE, round6(rate), burn, burn >= pageAt)
+      })
+      // hours no future anchor's deepest window reaches evict
+      val kept = hours.filter(kv => Hours.live(kv._1, maxW, wm))
+      Next(frames, Option.when(kept.nonEmpty)(
+        BurnState(kept, anchor.getOrElse(st0.anchor))),
+        Hours.wake(kept.keys, wm, idle = Some(maxW)))
     }
-    frames.iterator
-  }
 
   /** Streaming entry: `events` must carry an event-time watermark on
     * the column `ts` derives from. Emits one multiwindow frame per
@@ -101,11 +88,7 @@ object SloMonitor {
     require(slo > 0 && slo < 1, s"burnFrames: slo $slo must be in (0,1)")
     require(windowsHours.nonEmpty && windowsHours.forall(_ > 0),
       s"burnFrames: bad windows $windowsHours")
-    events
-      .groupByKey(_ => "all")
-      .flatMapGroupsWithState[BurnState, BurnFrame](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        burnUpdate(slo, windowsHours, pageAt) _)
+    Ripen(events)(_ => "all")(burnUpdate(slo, windowsHours, pageAt))
   }
 
   // ----------------------------------------------------- r31 budget status
@@ -123,9 +106,6 @@ object SloMonitor {
       recent_burn: Double, hours_to_exhaustion: Option[Double],
       exhausted: Boolean)
 
-  implicit val budgetStEnc: Encoder[BudgetState] = Encoders.product[BudgetState]
-  implicit val budgetEnc: Encoder[BudgetFrame] = Encoders.product[BudgetFrame]
-
   /** Transition, exposed for unit tests. The arithmetic is the batch
     * [[graft.operators.Windows.budgetStatus]] chain verbatim — the
     * same exact long sums, the same IEEE divisions in the same
@@ -133,51 +113,37 @@ object SloMonitor {
     * over the frame's prefix. */
   def budgetUpdate(slo: Double, periodHours: Int, recentHours: Int)(
       key: String, events: Iterator[ErrEvent],
-      state: GroupState[BudgetState]): Iterator[BudgetFrame] = {
-    val budget = 1.0 - slo
-    val st0 = state.getOption
-      .getOrElse(BudgetState(Map.empty, Long.MaxValue, Long.MinValue))
-    var h0 = st0.h0
-    val hours = events.foldLeft(st0.hours) { (m, e) =>
-      val h = e.hr
-      if (h < h0) h0 = h
-      val (n, er) = m.getOrElse(h, (0L, 0L))
-      m.updated(h, (n + 1L, er + (if (e.isError) 1L else 0L)))
-    }
-    val wmHr = state.getCurrentWatermarkMs() / 1000L / 3600L
-    val closed = hours.keys.filter(_ < wmHr)
-    val anchor = if (closed.nonEmpty) closed.max max st0.anchor else st0.anchor
-    val frames =
-      if (anchor > st0.anchor) {
+      state: GroupState[BudgetState]): Iterator[BudgetFrame] =
+    fold(state, BudgetState(Map.empty, Long.MaxValue, Long.MinValue)) { (st0, wm) =>
+      val budget = 1.0 - slo
+      val evs = events.toSeq
+      val h0 = evs.foldLeft(st0.h0)(_ min _.hr)
+      val hours = evs.foldLeft(st0.hours)(tally)
+      val anchor = Hours.fresh(hours.keys, st0.anchor, wm).lastOption
+      val frames = anchor.toList.map { a =>
         // the batch filter verbatim: _hr > anchor - period (and closed)
         val in = hours.view
-          .filter { case (h, _) => h > anchor - periodHours && h <= anchor }
+          .filter { case (h, _) => h > a - periodHours && h <= a }
         val nT = in.map(_._2._1).sum
         val nE = in.map(_._2._2).sum
-        val rn = in.filter(_._1 > anchor - recentHours).map(_._2._1).sum
-        val re = in.filter(_._1 > anchor - recentHours).map(_._2._2).sum
-        val elapsed = (anchor - h0 + 1L) min periodHours.toLong
+        val rn = in.filter(_._1 > a - recentHours).map(_._2._1).sum
+        val re = in.filter(_._1 > a - recentHours).map(_._2._2).sum
+        val elapsed = (a - h0 + 1L) min periodHours.toLong
         val rate = nE.toDouble / nT.toDouble
         val used = rate / budget * elapsed.toDouble / periodHours.toDouble
         val recentBurn = re.toDouble / rn.toDouble / budget
         val proj = if (re == 0L) None
-          else Some(rd6(((1.0 - used) * periodHours.toDouble / recentBurn) max 0.0))
-        List(BudgetFrame(anchor * 3600L, periodHours.toLong, elapsed,
-          nT, nE, rd6(rate), rd6(used), rd6(recentBurn), proj, used >= 1.0))
-      } else Nil
-    // hours at or below every future anchor's period window evict; h0
-    // survives as a Long (the batch min is corpus-global)
-    val kept = hours.filter { case (h, _) =>
-      h > (anchor max (wmHr - 1)) - periodHours }
-    if (kept.isEmpty && h0 == Long.MaxValue) state.remove()
-    else {
-      state.update(BudgetState(kept, h0, anchor))
-      val pending = kept.keys.filter(_ >= wmHr)
-      pending.minOption
-        .foreach(p => state.setTimeoutTimestamp((p + 1) * 3600L * 1000L))
+          else Some(round6(((1.0 - used) * periodHours.toDouble / recentBurn) max 0.0))
+        BudgetFrame(a * 3600L, periodHours.toLong, elapsed, nT, nE,
+          round6(rate), round6(used), round6(recentBurn), proj, used >= 1.0)
+      }
+      // hours no future anchor's period window reaches evict; h0
+      // survives as a Long (the batch min is corpus-global)
+      val kept = hours.filter(kv => Hours.live(kv._1, periodHours, wm))
+      Next(frames, Option.unless(kept.isEmpty && h0 == Long.MaxValue)(
+        BudgetState(kept, h0, anchor.getOrElse(st0.anchor))),
+        Hours.wake(kept.keys, wm))
     }
-    frames.iterator
-  }
 
   /** Streaming twin of the r31 batch budget-status report: one frame
     * per advanced anchor hour, each bit-equal to
@@ -191,11 +157,7 @@ object SloMonitor {
     require(slo > 0 && slo < 1, s"budgetFrames: slo $slo must be in (0,1)")
     require(periodHours >= 1 && recentHours >= 1 && recentHours <= periodHours,
       s"budgetFrames: bad periodHours=$periodHours recentHours=$recentHours")
-    events
-      .groupByKey(_ => "all")
-      .flatMapGroupsWithState[BudgetState, BudgetFrame](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        budgetUpdate(slo, periodHours, recentHours) _)
+    Ripen(events)(_ => "all")(budgetUpdate(slo, periodHours, recentHours))
   }
 
   // ------------------------------------------------------------ r32 canary
@@ -210,65 +172,56 @@ object SloMonitor {
       rate_before: Double, rate_after: Double, rate_ratio: Option[Double],
       share_before: Double, share_after: Double, z_score: Option[Double])
 
-  implicit val canaryStEnc: Encoder[CanaryState] = Encoders.product[CanaryState]
-  implicit val canaryEnc: Encoder[CanaryRow] = Encoders.product[CanaryRow]
-
   /** Transition, exposed for unit tests. The batch
     * [[graft.operators.Windows.canaryCompare]] arithmetic verbatim —
     * exact long window sums, the same IEEE division order — so each
     * per-key row is bit-equal to the batch row over the frame's
-    * prefix. */
+    * prefix. An anchor whose before-window holds no event at all
+    * (a stream's first hours) emits no frame — every share_before
+    * would be 0/0, undefined in the batch operator too — but the
+    * anchor still advances. */
   def canaryUpdate(beforeHours: Int, afterHours: Int)(
       key: String, events: Iterator[KeyEvent],
-      state: GroupState[CanaryState]): Iterator[CanaryRow] = {
-    val st0 = state.getOption.getOrElse(CanaryState(Map.empty, Long.MinValue))
-    val hours = events.foldLeft(st0.hours) { (m, e) =>
-      val k = e.key + Sep + e.hr
-      m.updated(k, m.getOrElse(k, 0L) + 1L)
-    }
-    def hrOf(k: String): Long = k.substring(k.lastIndexOf(Sep) + 1).toLong
-    def keyOf(k: String): String = k.substring(0, k.lastIndexOf(Sep))
-    val wmHr = state.getCurrentWatermarkMs() / 1000L / 3600L
-    val closed = hours.keys.map(hrOf).filter(_ < wmHr)
-    val anchor = if (closed.nonEmpty) closed.max max st0.anchor else st0.anchor
-    val rows =
-      if (anchor > st0.anchor) {
+      state: GroupState[CanaryState]): Iterator[CanaryRow] =
+    fold(state, CanaryState(Map.empty, Long.MinValue)) { (st0, wm) =>
+      val hours = events.foldLeft(st0.hours)((m, e) =>
+        Hours.count(m, e.key + Sep + e.hr))
+      val anchor = Hours.fresh(hours.keys.map(hrOf), st0.anchor, wm).lastOption
+      val rows = anchor.toList.flatMap { a =>
         // the batch filter verbatim: hr > anchor - (b+a), closed only
         val in = hours.toSeq.filter { case (k, _) =>
           val h = hrOf(k)
-          h > anchor - (beforeHours + afterHours) && h <= anchor
+          h > a - (beforeHours + afterHours) && h <= a
         }
         val byKey = in.groupMapReduce(kv => keyOf(kv._1))(kv =>
-          if (hrOf(kv._1) > anchor - afterHours) (0L, kv._2) else (kv._2, 0L)
+          if (hrOf(kv._1) > a - afterHours) (0L, kv._2) else (kv._2, 0L)
         )((x, y) => (x._1 + y._1, x._2 + y._2))
         val tb = byKey.values.map(_._1).sum
         val ta = byKey.values.map(_._2).sum
-        byKey.toSeq.sortBy(_._1).map { case (k, (nb, na)) =>
+        if (tb == 0L) Nil
+        else byKey.toSeq.sortBy(_._1).map { case (k, (nb, na)) =>
           val pb = nb.toDouble / tb.toDouble
           val pa = na.toDouble / ta.toDouble
           val pooled = (nb + na).toDouble / (tb + ta).toDouble
           val ratio = if (nb == 0L) None
-            else Some(rd6((na.toDouble / afterHours.toDouble) /
+            else Some(round6((na.toDouble / afterHours.toDouble) /
               (nb.toDouble / beforeHours.toDouble)))
-          val z = if (tb == 0L || ta == 0L || pooled == 0.0 || pooled == 1.0) None
-            else Some(rd6((pa - pb) /
+          val z = if (ta == 0L || pooled == 0.0 || pooled == 1.0) None
+            else Some(round6((pa - pb) /
               math.sqrt(pooled * (1.0 - pooled) *
                 (1.0 / tb.toDouble + 1.0 / ta.toDouble))))
-          CanaryRow(anchor * 3600L, k, nb, na,
-            rd6(nb.toDouble / beforeHours.toDouble),
-            rd6(na.toDouble / afterHours.toDouble), ratio, rd6(pb), rd6(pa), z)
+          CanaryRow(a * 3600L, k, nb, na,
+            round6(nb.toDouble / beforeHours.toDouble),
+            round6(na.toDouble / afterHours.toDouble), ratio, round6(pb),
+            round6(pa), z)
         }
-      } else Nil
-    val kept = hours.filter { case (k, _) =>
-      hrOf(k) > (anchor max (wmHr - 1)) - (beforeHours + afterHours) }
-    if (kept.isEmpty) state.remove()
-    else {
-      state.update(CanaryState(kept, anchor))
-      kept.keys.map(hrOf).filter(_ >= wmHr).minOption
-        .foreach(p => state.setTimeoutTimestamp((p + 1) * 3600L * 1000L))
+      }
+      val kept = hours.filter(kv =>
+        Hours.live(hrOf(kv._1), beforeHours + afterHours, wm))
+      Next(rows, Option.when(kept.nonEmpty)(
+        CanaryState(kept, anchor.getOrElse(st0.anchor))),
+        Hours.wake(kept.keys.map(hrOf), wm))
     }
-    rows.iterator
-  }
 
   /** Streaming twin of the r32 batch canary comparison: one full
     * per-key frame per advanced anchor hour, each row bit-equal to
@@ -280,11 +233,7 @@ object SloMonitor {
                    afterHours: Int): Dataset[CanaryRow] = {
     require(beforeHours >= 1 && afterHours >= 1,
       s"canaryFrames: bad beforeHours=$beforeHours afterHours=$afterHours")
-    events
-      .groupByKey(_ => "all")
-      .flatMapGroupsWithState[CanaryState, CanaryRow](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        canaryUpdate(beforeHours, afterHours) _)
+    Ripen(events)(_ => "all")(canaryUpdate(beforeHours, afterHours))
   }
 
   // -------------------------------------------------------- r27 seasonal
@@ -314,56 +263,44 @@ object SloMonitor {
       as_of: Long, key: String, how: Long, n_hist: Long, slots_hist: Long,
       baseline_mean: Option[Double], n_last: Long, ratio: Option[Double])
 
-  implicit val keyEvEnc: Encoder[KeyEvent] = Encoders.product[KeyEvent]
-  implicit val seasonStEnc: Encoder[SeasonState] = Encoders.product[SeasonState]
-  implicit val seasonEnc: Encoder[SeasonRow] = Encoders.product[SeasonRow]
-
   private val Sep = "\u0000"
   private def pm(a: Long, m: Long): Long = ((a % m) + m) % m
 
+  // "key NUL hr" state keys (canary, seasonal); a key without the NUL
+  // comes from the v1 schema and is refused, never mis-parsed
+  private def sepAt(k: String): Int = {
+    val i = k.lastIndexOf(Sep)
+    require(i >= 0,
+      s"monitor state key '$k' predates the v2 NUL-separated " +
+        "key schema; resume is not supported — restart the query with " +
+        "a fresh checkpoint directory")
+    i
+  }
+  private def hrOf(k: String): Long = k.substring(sepAt(k) + 1).toLong
+  private def keyOf(k: String): String = k.substring(0, sepAt(k))
+
   /** Transition, exposed for unit tests. */
   def seasonUpdate(key: String, events: Iterator[KeyEvent],
-                   state: GroupState[SeasonState]): Iterator[SeasonRow] = {
-    val st0 = state.getOption
-      .getOrElse(SeasonState(Long.MaxValue, Long.MinValue, Map.empty, Map.empty))
-    var h0 = st0.h0
-    val recent0 = events.foldLeft(st0.recent) { (m, e) =>
-      val h = e.hr
-      if (h < h0) h0 = h
-      val k = e.key + Sep + h
-      m.updated(k, m.getOrElse(k, 0L) + 1L)
-    }
-    val wmHr = state.getCurrentWatermarkMs() / 1000L / 3600L
-    def sepAt(k: String): Int = {
-      val i = k.lastIndexOf(Sep)
-      require(i >= 0,
-        s"seasonal-monitor state key '$k' predates the v2 NUL-separated " +
-          "key schema; resume is not supported — restart the query with " +
-          "a fresh checkpoint directory")
-      i
-    }
-    def hrOf(k: String): Long = k.substring(sepAt(k) + 1).toLong
-    def keyOf(k: String): String = k.substring(0, sepAt(k))
-    val closed = recent0.keys.map(hrOf).filter(_ < wmHr)
-    val anchor = if (closed.nonEmpty) closed.max max st0.anchor else st0.anchor
-    var hist = st0.hist
-    var recent = recent0
-    val rows =
-      if (anchor > st0.anchor) {
-        // the batch boundary verbatim: hb clamps to h0 so a sub-week
-        // corpus has an EMPTY history window, never a negative one
-        val hb = h0 max (anchor - 167L)
-        // fold hours now strictly below the boundary into history
-        recent0.foreach { case (k, c) =>
-          val h = hrOf(k)
-          if (h < hb) {
-            val hk = keyOf(k) + Sep + pm(h, 168L)
-            hist = hist.updated(hk, hist.getOrElse(hk, 0L) + c)
-            recent = recent.removed(k)
-          }
-        }
+                   state: GroupState[SeasonState]): Iterator[SeasonRow] =
+    fold(state, SeasonState(Long.MaxValue, Long.MinValue, Map.empty,
+        Map.empty)) { (st0, wm) =>
+      val evs = events.toSeq
+      val h0 = evs.foldLeft(st0.h0)(_ min _.hr)
+      val recent0 = evs.foldLeft(st0.recent)((m, e) =>
+        Hours.count(m, e.key + Sep + e.hr))
+      val anchor = Hours.fresh(recent0.keys.map(hrOf), st0.anchor, wm).lastOption
+      // the batch boundary verbatim: hb clamps to h0 so a sub-week
+      // corpus has an EMPTY history window, never a negative one
+      val hb = anchor.fold(Long.MinValue)(a => h0 max (a - 167L))
+      // fold hours now strictly below the boundary into history
+      val (old, recent) = recent0.partition(kv => hrOf(kv._1) < hb)
+      val hist = old.foldLeft(st0.hist) { case (m, (k, c)) =>
+        val hk = keyOf(k) + Sep + pm(hrOf(k), 168L)
+        m.updated(hk, m.getOrElse(hk, 0L) + c)
+      }
+      val rows = anchor.toList.flatMap { a =>
         val last = recent.toSeq
-          .filter { case (k, _) => val h = hrOf(k); h >= hb && h <= anchor }
+          .filter { case (k, _) => hrOf(k) <= a }
           .groupMapReduce { case (k, _) => keyOf(k) + Sep + pm(hrOf(k), 168L) }(_._2)(_ + _)
         val weeks = (hb - h0) / 168L
         val rem = pm(hb - h0, 168L)
@@ -373,23 +310,19 @@ object SloMonitor {
           val nLast = last.getOrElse(hk, 0L)
           val slots = weeks +
             (if (pm(how - pm(h0, 168L) + 168L, 168L) < rem) 1L else 0L)
-          val base = if (slots > 0L) Some(rd6(nHist.toDouble / slots.toDouble))
+          val base = if (slots > 0L) Some(round6(nHist.toDouble / slots.toDouble))
                      else None
-          val ratio = base.map(b => rd6((nLast.toDouble + 1.0) / (b + 1.0)))
-          SeasonRow(anchor * 3600L, k, how, nHist, slots, base, nLast, ratio)
+          val ratio = base.map(b => round6((nLast.toDouble + 1.0) / (b + 1.0)))
+          SeasonRow(a * 3600L, k, how, nHist, slots, base, nLast, ratio)
         }
-      } else Nil
-    if (h0 == Long.MaxValue && recent.isEmpty && hist.isEmpty) state.remove()
-    else {
-      state.update(SeasonState(h0, anchor, hist, recent))
+      }
       // flush pending closed-hour frames even with no further events;
       // history is permanent (the bounded-population contract), so no
       // self-destruct wake — idle state is |keys|*168 longs, not events
-      recent.keys.map(hrOf).filter(_ >= wmHr).minOption
-        .foreach(p => state.setTimeoutTimestamp((p + 1) * 3600L * 1000L))
+      Next(rows, Option.unless(h0 == Long.MaxValue && recent.isEmpty &&
+        hist.isEmpty)(SeasonState(h0, anchor.getOrElse(st0.anchor), hist, recent)),
+        Hours.wake(recent.keys.map(hrOf), wm))
     }
-    rows.iterator
-  }
 
   /** Streaming entry: one full (key, hour-of-week) seasonal frame per
     * advanced anchor hour, each bit-equal to
@@ -397,11 +330,7 @@ object SloMonitor {
     * events in hours ≤ as_of/3600.
     */
   def seasonalFrames(events: Dataset[KeyEvent]): Dataset[SeasonRow] =
-    events
-      .groupByKey(_ => "all")
-      .flatMapGroupsWithState[SeasonState, SeasonRow](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        seasonUpdate _)
+    Ripen(events)(_ => "all")(seasonUpdate)
 
   // ------------------------------------------------------- r28 incidents
 
@@ -418,9 +347,6 @@ object SloMonitor {
       key: String, as_of: Long, n_incidents: Long, n_open: Long,
       mttr_hours: Option[Double], max_hours: Option[Long])
 
-  implicit val incStEnc: Encoder[IncidentState] = Encoders.product[IncidentState]
-  implicit val incEnc: Encoder[IncidentSummary] = Encoders.product[IncidentSummary]
-
   /** Transition, exposed for unit tests. Consumes the r23 edge stream
     * ([[AlertEdges.edges]] output): fire opens, resolve closes and
     * banks the duration — the batch lead-pairing replayed as O(1)
@@ -430,48 +356,37 @@ object SloMonitor {
     * same edges.
     */
   def incidentUpdate(key: String, edges: Iterator[AlertEdges.Edge],
-                     state: GroupState[IncidentState]): Iterator[IncidentSummary] = {
-    var st = state.getOption
-      .getOrElse(IncidentState(0L, None, 0L, 0L, None, Long.MinValue))
-    val out = List.newBuilder[IncidentSummary]
-    edges.toSeq.sortBy(_.hrStart).foreach { e =>
-      if (e.hrStart > st.lastEdgeSec) {
-        st = e.edge match {
-          case "fire" if st.openFireSec.isEmpty =>
-            st.copy(nIncidents = st.nIncidents + 1L,
-              openFireSec = Some(e.hrStart), lastEdgeSec = e.hrStart)
-          case "resolve" if st.openFireSec.isDefined =>
-            val dur = (e.hrStart - st.openFireSec.get) / 3600L
-            st.copy(openFireSec = None, sumDur = st.sumDur + dur,
-              nClosed = st.nClosed + 1L,
-              maxDur = Some(st.maxDur.fold(dur)(_ max dur)),
-              lastEdgeSec = e.hrStart)
-          // a fire while open / resolve while closed cannot come out
-          // of the alternating edge stream; ignore rather than corrupt
-          case _ => st.copy(lastEdgeSec = e.hrStart)
-        }
-        if (st.nIncidents > 0L)
-          out += IncidentSummary(key, e.hrStart, st.nIncidents,
-            if (st.openFireSec.isDefined) 1L else 0L,
-            if (st.nClosed > 0L) Some(rd6(st.sumDur.toDouble / st.nClosed.toDouble))
-            else None,
-            // batch max_hours is max over CLOSED durations; an open
-            // incident contributes null there and nothing here
-            st.maxDur)
+                     state: GroupState[IncidentState]): Iterator[IncidentSummary] =
+    Ripen.replay(state, IncidentState(0L, None, 0L, 0L, None, Long.MinValue),
+        edges)(_.hrStart, _.lastEdgeSec) { (st0, e) =>
+      val st = e.edge match {
+        case "fire" if st0.openFireSec.isEmpty =>
+          st0.copy(nIncidents = st0.nIncidents + 1L,
+            openFireSec = Some(e.hrStart), lastEdgeSec = e.hrStart)
+        case "resolve" if st0.openFireSec.isDefined =>
+          val dur = (e.hrStart - st0.openFireSec.get) / 3600L
+          st0.copy(openFireSec = None, sumDur = st0.sumDur + dur,
+            nClosed = st0.nClosed + 1L,
+            maxDur = Some(st0.maxDur.fold(dur)(_ max dur)),
+            lastEdgeSec = e.hrStart)
+        // a fire while open / resolve while closed cannot come out
+        // of the alternating edge stream; ignore rather than corrupt
+        case _ => st0.copy(lastEdgeSec = e.hrStart)
       }
+      (st, Option.when(st.nIncidents > 0L)(IncidentSummary(key, e.hrStart,
+        st.nIncidents, if (st.openFireSec.isDefined) 1L else 0L,
+        if (st.nClosed > 0L) Some(round6(st.sumDur.toDouble / st.nClosed.toDouble))
+        else None,
+        // batch max_hours is max over CLOSED durations; an open
+        // incident contributes null there and nothing here
+        st.maxDur)))
     }
-    state.update(st)
-    out.result().iterator
-  }
 
   /** Streaming entry over the live edge stream. State is O(1) per
     * alert key with no timeout (the AlertEdges bounded-population
     * contract). */
   def incidents(edges: Dataset[AlertEdges.Edge]): Dataset[IncidentSummary] =
-    edges
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[IncidentState, IncidentSummary](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(incidentUpdate _)
+    Ripen(edges)(_.key, timeout = false)(incidentUpdate)
 
   // ---------------------------------------------------------- r29 storms
 
@@ -489,10 +404,6 @@ object SloMonitor {
       storm_start: Long, storm_end: Long, n_fires: Long, n_keys: Long,
       span_hours: Long, keys: String)
 
-  implicit val fireEnc: Encoder[FireEdge] = Encoders.product[FireEdge]
-  implicit val stormStEnc: Encoder[StormAgg] = Encoders.product[StormAgg]
-  implicit val stormEnc: Encoder[StormRow] = Encoders.product[StormRow]
-
   /** Transition, exposed for unit tests. Fires arrive globally
     * hour-monotone ACROSS batches (an hour's edges emit when the
     * upstream watermark passes it, and the watermark is global), so
@@ -504,36 +415,19 @@ object SloMonitor {
       key: String, fires: Iterator[FireEdge],
       state: GroupState[StormAgg]): Iterator[StormRow] = {
     val gapSec = gapHours * 3600L
-    var open = state.getOption
-    val out = List.newBuilder[StormRow]
+    def start(f: FireEdge) = StormAgg(f.sec, f.sec, 1L, Seq(f.key))
     def closed(a: StormAgg): StormRow = {
       val ks = a.keys.sorted
       StormRow(a.start, a.last, a.n, ks.length.toLong,
         (a.last - a.start) / 3600L, ks.mkString(","))
     }
-    fires.toSeq.sortBy(f => (f.sec, f.key)).foreach { f =>
-      open = open match {
-        case Some(a) if f.sec - a.last > gapSec =>
-          out += closed(a)
-          Some(StormAgg(f.sec, f.sec, 1L, Seq(f.key)))
-        case Some(a) =>
-          Some(StormAgg(a.start, a.last max f.sec, a.n + 1L,
-            if (a.keys.contains(f.key)) a.keys else a.keys :+ f.key))
-        case None => Some(StormAgg(f.sec, f.sec, 1L, Seq(f.key)))
-      }
-    }
-    val wmSec = state.getCurrentWatermarkMs() / 1000L
-    open match {
-      case Some(a) if wmSec > a.last + gapSec =>
-        out += closed(a)
-        if (state.exists) state.remove() else ()
-      case Some(a) =>
-        state.update(a)
-        // wake when the watermark can close this storm
-        state.setTimeoutTimestamp((a.last + gapSec) * 1000L + 1000L)
-      case None => if (state.exists) state.remove()
-    }
-    out.result().iterator
+    Ripen.sessions(state, fires.toSeq.sortBy(f => (f.sec, f.key)))(start,
+      (a, f) =>
+        if (f.sec - a.last > gapSec) (start(f), Some(closed(a)))
+        else (StormAgg(a.start, a.last max f.sec, a.n + 1L,
+          if (a.keys.contains(f.key)) a.keys else a.keys :+ f.key), None),
+      // the last joinable instant: any µs of second last + gap
+      closed, a => (a.last + gapSec + 1L) * 1000000L - 1L)
   }
 
   // ----------------------------------------------------------- r30 cusum
@@ -553,9 +447,6 @@ object SloMonitor {
                             baseline_micros: Long, cusum_micros: Long,
                             is_change: Boolean)
 
-  implicit val cusumStEnc: Encoder[CusumState] = Encoders.product[CusumState]
-  implicit val cusumEnc: Encoder[CusumRow] = Encoders.product[CusumRow]
-
   /** Transition, exposed for unit tests. Hours close in ascending
     * order as the watermark advances; each closed hour either folds
     * into the warmup window (hr < h0 + warmup, all such hours are
@@ -566,42 +457,30 @@ object SloMonitor {
     */
   def cusumUpdate(warmupHours: Int, slackDen: Int, hFactor: Int)(
       key: String, events: Iterator[KeyEvent],
-      state: GroupState[CusumState]): Iterator[CusumRow] = {
-    val st0 = state.getOption
-      .getOrElse(CusumState(Long.MaxValue, Map.empty, Map.empty, 0L, 0L))
-    var h0 = st0.h0
-    val pending0 = events.foldLeft(st0.pending) { (m, e) =>
-      val h = e.hr
-      if (h < h0) h0 = h
-      m.updated(h, m.getOrElse(h, 0L) + 1L)
+      state: GroupState[CusumState]): Iterator[CusumRow] =
+    fold(state, CusumState(Long.MaxValue, Map.empty, Map.empty, 0L, 0L)) {
+      (st0, wm) =>
+        val hrs = events.map(_.hr).toSeq
+        val h0 = hrs.foldLeft(st0.h0)(_ min _)
+        val all = hrs.foldLeft(st0.pending)(Hours.count)
+        val (st, out) = scan(st0, Hours.fresh(all.keys, Long.MinValue, wm)) {
+          (st, h) =>
+            val c = all(h)
+            if (h < h0 + warmupHours) (st.copy(base = st.base.updated(h, c)), None)
+            else {
+              // every warmup hour is < h and closed: the baseline is final
+              val bm = st.base.values.sum * 1000000L / st.base.size
+              val p = st.p + c * 1000000L - (bm + bm / slackDen)
+              val pmin = st.pminClamped min p
+              (st.copy(p = p, pminClamped = pmin), Some(CusumRow(key,
+                h * 3600L, c, bm, p - pmin, p - pmin > bm * hFactor)))
+            }
+        }
+        // flush pending closed hours even if the key goes quiet
+        val pending = all.filterNot(kv => Hours.ripe(kv._1, wm))
+        Next(out, Option.unless(h0 == Long.MaxValue && pending.isEmpty)(
+          st.copy(h0 = h0, pending = pending)), Hours.wake(pending.keys, wm))
     }
-    val wmHr = state.getCurrentWatermarkMs() / 1000L / 3600L
-    var base = st0.base
-    var p = st0.p
-    var pmin = st0.pminClamped
-    val out = List.newBuilder[CusumRow]
-    val (closing, pending) = pending0.partition(_._1 < wmHr)
-    closing.toSeq.sortBy(_._1).foreach { case (h, c) =>
-      if (h < h0 + warmupHours) base = base.updated(h, c)
-      else {
-        // every warmup hour is < h and closed: the baseline is final
-        val bm = base.values.sum * 1000000L / base.size
-        val dev = c * 1000000L - (bm + bm / slackDen)
-        p += dev
-        pmin = pmin min p
-        val s = p - pmin
-        out += CusumRow(key, h * 3600L, c, bm, s, s > bm * hFactor)
-      }
-    }
-    if (h0 == Long.MaxValue && pending.isEmpty) state.remove()
-    else {
-      state.update(CusumState(h0, base, pending, p, pmin))
-      // flush pending closed hours even if the key goes quiet
-      pending.keys.minOption
-        .foreach(h => state.setTimeoutTimestamp((h + 1) * 3600L * 1000L))
-    }
-    out.result().iterator
-  }
 
   /** Streaming twin of the r30 batch CUSUM chart: emits one final row
     * per scored closed hour per key, each bit-equal to the
@@ -615,11 +494,7 @@ object SloMonitor {
     require(warmupHours >= 1, s"cusumFrames: warmupHours $warmupHours must be >= 1")
     require(slackDen >= 1 && hFactor >= 1,
       s"cusumFrames: slackDen $slackDen / hFactor $hFactor must be >= 1")
-    events
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[CusumState, CusumRow](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        cusumUpdate(warmupHours, slackDen, hFactor) _)
+    Ripen(events)(_.key)(cusumUpdate(warmupHours, slackDen, hFactor))
   }
 
   /** Streaming twin of the r29 batch storm grouping: consumes the
@@ -631,16 +506,12 @@ object SloMonitor {
   def storms(edges: Dataset[AlertEdges.Edge],
              gapHours: Int = 2): Dataset[StormRow] = {
     require(gapHours >= 1, s"storms: gapHours $gapHours must be >= 1")
-    val spark = edges.sparkSession
     import org.apache.spark.sql.functions.{col, timestamp_seconds}
-    edges.toDF()
+    val fires = edges.toDF()
       .withColumn("_ts", timestamp_seconds(col("hrStart")))
       .withWatermark("_ts", "0 seconds")
       .filter(col("edge") === "fire")
       .select(col("key"), col("_ts").as("ts")).as[FireEdge]
-      .groupByKey(_ => "all")
-      .flatMapGroupsWithState[StormAgg, StormRow](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        stormUpdate(gapHours) _)
+    Ripen(fires)(_ => "all")(stormUpdate(gapHours))
   }
 }

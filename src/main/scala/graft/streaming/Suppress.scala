@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.GroupState
+
+import Ripen._
 
 /** Streaming twin of r34's alert suppression (`Windows.suppressAlerts`)
   * — the live fatigue gate an alert manager applies as alerts arrive:
@@ -34,37 +36,21 @@ object Suppress {
     * anchor). Long.MinValue = no survivor yet. */
   final case class SuppressState(lastTs: Long, lastId: Long, lastKeptTs: Long)
 
-  implicit val aEnc: Encoder[Alert] = Encoders.product[Alert]
-  implicit val sEnc: Encoder[SuppressState] = Encoders.product[SuppressState]
-  implicit val lEnc: Encoder[Long] = Encoders.scalaLong
-
   /** Core transition, exposed for unit tests. */
   def update(suppressUs: Long)(key: Long, alerts: Iterator[Alert],
-             state: GroupState[SuppressState]): Iterator[Alert] = {
-    var st = state.getOption.getOrElse(
-      SuppressState(Long.MinValue, Long.MinValue, Long.MinValue))
-    val out = List.newBuilder[Alert]
-    alerts.toSeq.sortBy(a => (a.tsUs, a.id)).foreach { a =>
-      val fresh = a.tsUs > st.lastTs || (a.tsUs == st.lastTs && a.id > st.lastId)
-      if (fresh) {
+             state: GroupState[SuppressState]): Iterator[Alert] =
+    Ripen.replay(state, SuppressState(Long.MinValue, Long.MinValue,
+      Long.MinValue), alerts)(a => (a.tsUs, a.id), s => (s.lastTs, s.lastId)) {
+      (st, a) =>
         val keep = st.lastKeptTs == Long.MinValue ||
           a.tsUs >= st.lastKeptTs + suppressUs
-        if (keep) out += a
-        st = SuppressState(a.tsUs, a.id,
-          if (keep) a.tsUs else st.lastKeptTs)
-      }
+        (SuppressState(a.tsUs, a.id, if (keep) a.tsUs else st.lastKeptTs),
+          Option.when(keep)(a))
     }
-    state.update(st)
-    out.result().iterator
-  }
 
   /** Kept alerts, Append-mode (a survivor decision is final). */
   def kept(alerts: Dataset[Alert], suppressSec: Long): Dataset[Alert] = {
     require(suppressSec > 0, s"Suppress.kept: suppressSec $suppressSec must be > 0")
-    alerts
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[SuppressState, Alert](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        update(suppressSec * 1000000L) _)
+    Ripen(alerts)(_.key, timeout = false)(update(suppressSec * 1000000L))
   }
 }

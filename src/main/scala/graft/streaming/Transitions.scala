@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.streaming.GroupState
+
+import Ripen._
 
 /** Streaming twin of the batch transition miner (the lag step of
   * `operators.LogMining.rareTransitions`): emit each key's adjacent
@@ -24,9 +26,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * State per key: the unripe tail (bounded by rate x allowance) plus
   * ONE finalized boundary event — after a flush, O(1) forever, the
-  * AlertEdges precedent. Timeouts drive idle-key flushes: the buffer
-  * sets an event-time timeout just past its newest event, so a key
-  * that goes quiet still finalizes once the watermark passes it.
+  * AlertEdges precedent. Timeouts drive idle-key flushes: a quiet key
+  * wakes when the watermark can ripen its OLDEST pending event (the
+  * [[Ripen]] rule), so its ripe prefix never waits on newer events.
   */
 object Transitions {
 
@@ -45,42 +47,25 @@ object Transitions {
   final case class Edge(key: String, src_template: String,
                         dst_template: String)
 
-  implicit val evEnc: Encoder[Ev] = Encoders.product[Ev]
-  implicit val stEnc: Encoder[TState] = Encoders.product[TState]
-  implicit val edgeEnc: Encoder[Edge] = Encoders.product[Edge]
-  implicit val strEnc: Encoder[String] = Encoders.STRING
-
   /** Core transition, exposed for unit tests. */
   def update(key: String, events: Iterator[Ev],
-             state: GroupState[TState]): Iterator[Edge] = {
-    val prev = state.getOption.getOrElse(TState(None, Nil))
-    val buf = prev.buf ++ events.map(e => BufEv(e.tsUs, e.id, e.tpl))
-    val wmUs = state.getCurrentWatermarkMs() * 1000L
-    val sorted = buf.sortBy(b => (b.tsUs, b.id))
-    val (ripe, tail) = sorted.partition(_.tsUs <= wmUs)
-    val chain = prev.last.toList ++ ripe
-    val edges = chain.sliding(2).collect {
-      case a :: b :: Nil => Edge(key, a.tpl, b.tpl)
-    }.toList
-    val last = if (ripe.nonEmpty) Some(ripe.last) else prev.last
-    if (tail.isEmpty && last.isEmpty) state.remove()
-    else {
-      state.update(TState(last, tail))
-      // flush the tail once the watermark passes its newest event;
-      // an empty tail keeps the O(1) boundary state with no timeout
-      if (tail.nonEmpty)
-        state.setTimeoutTimestamp(tail.map(_.tsUs).max / 1000L + 1L)
+             state: GroupState[TState]): Iterator[Edge] =
+    fold(state, TState(None, Nil)) { (prev, wm) =>
+      val (done, tail) = ripen(
+        prev.buf ++ events.map(e => BufEv(e.tsUs, e.id, e.tpl)), wm)(
+        _.tsUs, b => (b.tsUs, b.id))
+      val chain = prev.last.toList ++ done
+      val edges = chain.sliding(2).collect {
+        case a :: b :: Nil => Edge(key, a.tpl, b.tpl)
+      }.toList
+      val last = done.lastOption.orElse(prev.last)
+      Next(edges, Option.when(tail.nonEmpty || last.nonEmpty)(TState(last, tail)),
+        tail.map(_.tsUs).minOption)
     }
-    edges.iterator
-  }
 
   /** Streaming entry point: `events` must carry an event-time
     * watermark on the column `ts` derives from; `tpl` is the
     * row-local r18 template (LogMining.template), computed upstream.
     */
-  def edges(events: Dataset[Ev]): Dataset[Edge] =
-    events
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[TState, Edge](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(update)
+  def edges(events: Dataset[Ev]): Dataset[Edge] = Ripen(events)(_.key)(update)
 }

@@ -88,6 +88,8 @@ class TestGroupState[S] extends org.apache.spark.sql.streaming.GroupState[S] {
   var updated: Option[S] = None
   var watermarkMs: Long = 0L
   private var timeout: Long = -1L
+  /** The last timeout set (-1 before any). */
+  def timeoutMs: Long = timeout
   override def exists: Boolean = updated.isDefined
   override def get: S = updated.get
   override def getOption: Option[S] = updated
