@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Round-10 additions: no-split greedy packing, fractional epoch
-  * repetition, cluster-balanced diversity sampling.
+  * repetition.
   */
 class PackGreedySpec extends SparkSpec {
   import spark.implicits._
@@ -171,54 +171,5 @@ class EwmaForecastSpec extends SparkSpec {
     assert(!out(24L).getBoolean(4))
     // hours 1..11 have < minHistory present trailing hours -> unscored
     assert(!out.keySet.exists(_ < 24L))
-  }
-}
-
-class DiverseSampleSpec extends SparkSpec {
-  import spark.implicits._
-
-  // two well-separated centroids on the axes; members lean toward one
-  private def corpus(n: Int): Seq[(Long, Array[Float])] =
-    (0L until n.toLong).map { i =>
-      val toward0 = i % 3 != 0 // cluster 0 gets ~2/3 of the mass
-      val eps = (i % 7).toFloat / 20f
-      if (toward0) (i, Array(1f, eps)) else (i, Array(eps, 1f))
-    }
-
-  test("diverseSample: quota clips dense clusters, spares small ones, md5 order") {
-    val rows = corpus(90)
-    val df = rows.toDF("vec_id", "embedding")
-    val cents = Seq((100L, Array(1f, 0f)), (101L, Array(0f, 1f)))
-      .toDF("vec_id", "embedding")
-    val out = Similarity.diverseSample(df, "vec_id", "embedding",
-        cents, "vec_id", "embedding", quota = 40)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val byCluster = out.groupBy(_._2)
-    // cluster 100 holds 60 members -> clipped at 40; cluster 101 holds
-    // 30 -> kept whole
-    assert(byCluster(100L).length == 40 && byCluster(101L).length == 30)
-    // picks are exactly the md5-lowest ids of the cluster
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def h(id: Long) = md.digest(id.toString.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val dense = rows.collect { case (i, v) if v(0) == 1f => i }
-    val expect = dense.sortBy(i => (h(i), i)).take(40).toSet
-    assert(byCluster(100L).map(_._1).toSet == expect)
-    // pick ranks are 1-based and dense per cluster
-    assert(byCluster(101L).map(_._3).sorted.toSeq == (1L to 30L))
-  }
-
-  test("diverseSample: null vectors stay, visibly unassigned, under their own quota") {
-    val df = Seq((1L, Array(1f, 0f)), (2L, null.asInstanceOf[Array[Float]]),
-        (3L, null.asInstanceOf[Array[Float]]))
-      .toDF("vec_id", "embedding")
-    val cents = Seq((100L, Array(1f, 0f))).toDF("vec_id", "embedding")
-    val out = Similarity.diverseSample(df, "vec_id", "embedding",
-        cents, "vec_id", "embedding", quota = 1)
-      .collect().map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1)))
-    // doc 1 assigned; exactly ONE of the null rows survives the
-    // null-cluster quota (no-evidence-keeps, still quota-bounded)
-    assert(out.count(_._2 == 100L) == 1)
-    assert(out.count(_._2 == -1L) == 1)
   }
 }

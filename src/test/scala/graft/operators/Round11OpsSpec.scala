@@ -64,44 +64,6 @@ class TokenWaterfillSpec extends SparkSpec {
   }
 }
 
-/** Filtered vector search strategy pair (s17/s18): pre-filter is
-  * exact at any selectivity; post-filter trades recall for a
-  * predicate-agnostic index, recovered by over-fetch.
-  */
-class FilteredAnnSpec extends SparkSpec {
-
-  private val dir = "/root/testdata/sf0.001"
-
-  private def results(q: String): Map[Long, Seq[Long]] =
-    graft.SparkEntry.queries(q)(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
-
-  test("post-filter returns a strict subset; over-fetch recovers recall") {
-    val pre = results("s17_filtered_ann")
-    val post = results("s18_postfiltered_ann")
-    // everything post-filter returns is correct (a prefix of truth)...
-    post.foreach { case (q, ids) =>
-      assert(ids.toSet.subsetOf(pre(q).toSet), s"query $q: $ids not in truth") }
-    // ...but at overFetch=2 over a ~10%-selective label the recall
-    // loss is drastic — the regime the operator doc warns about
-    val truth = pre.values.map(_.size).sum
-    val got = post.values.map(_.size).sum
-    info(s"post-filter recall at overFetch=2: $got/$truth")
-    assert(got < truth / 2, s"expected drastic loss, got $got/$truth")
-    // raising the over-fetch factor recovers it
-    val s = spark
-    import org.apache.spark.sql.functions._
-    val emb = graft.GraftSession.table(s, dir, "embeddings")
-    val q5 = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val wide = Similarity.filteredTopKPost(emb, "vec_id", "embedding",
-        col("label") === 1, q5, "qid", "qvec", k = 10, overFetch = 40)
-      .count()
-    assert(wide >= truth * 0.9, s"overFetch=40 recovered only $wide/$truth")
-  }
-}
-
 /** Data-constrained effective-token accounting (p17, Muennighoff
   * 2023): exponential repeat decay via the engine-exact Horner exp.
   */
@@ -161,42 +123,6 @@ class EffectiveTokensSpec extends SparkSpec {
     assert(out("ok") == 2000.0, out("ok"))
     // the generated oracle SQL carries the same clamp
     assert(Training.expNegHornerSql("x").contains("least((x), 4.0)"))
-  }
-}
-
-/** MMR diverse re-ranking (s19, Carbonell & Goldstein 1998). */
-class MmrSpec extends SparkSpec {
-  import spark.implicits._
-
-  test("a near-dup of the top hit is demoted below a diverse result") {
-    // q=[1,0]; A=[.95,.31] rel .951, A'=[.94,.34] rel .940 but
-    // sim(A,A') ~ .9995, B=[.9,-.436] rel .900 but sim(A,B) ~ .720.
-    // Plain top-3 = A, A', B. MMR round 2 at lambda .7:
-    //   A' scores .7*.940 - .3*.9995 = .358
-    //   B  scores .7*.900 - .3*.720  = .414  -> B wins, A' demoted
-    val corpus = Seq(
-      (1L, Array(0.95f, 0.31f)),
-      (2L, Array(0.94f, 0.34f)),
-      (3L, Array(0.9f, -0.436f))).toDF("vec_id", "embedding")
-    val q = Seq((0L, Array(1.0f, 0.0f))).toDF("qid", "qvec")
-    val got = Similarity.mmrTopK(corpus, "vec_id", "embedding",
-        q, "qid", "qvec", k = 3, prefetch = 3, lam = 0.7)
-      .orderBy("mmr_rank")
-      .collect().map(r => (r.getLong(1), r.getLong(3)))
-    assert(got.toSeq == Seq((1L, 1L), (3L, 2L), (2L, 3L)), got.toSeq)
-  }
-
-  test("lambda 1.0 degenerates to plain relevance order") {
-    val corpus = Seq(
-      (1L, Array(1.0f, 0.0f)),
-      (2L, Array(0.999f, 0.045f)),
-      (3L, Array(0.6f, 0.8f))).toDF("vec_id", "embedding")
-    val q = Seq((0L, Array(1.0f, 0.0f))).toDF("qid", "qvec")
-    val got = Similarity.mmrTopK(corpus, "vec_id", "embedding",
-        q, "qid", "qvec", k = 3, prefetch = 3, lam = 1.0)
-      .orderBy("mmr_rank")
-      .collect().map(_.getLong(1))
-    assert(got.toSeq == Seq(1L, 2L, 3L), got.toSeq)
   }
 }
 

@@ -411,60 +411,6 @@ class BloomDecontaminateSpec extends SparkSpec {
   }
 }
 
-class HammingTopKSpec extends SparkSpec {
-  import spark.implicits._
-
-  private def vec(xs: Double*): Array[Float] = xs.map(_.toFloat).toArray
-
-  test("a shortlist covering the whole corpus reproduces brute-force exactly") {
-    // deterministic pseudo-random corpus; queries are rows 0..2
-    val rnd = new scala.util.Random(7)
-    val corpus = (0L until 40L).map(i =>
-      (i, Array.fill(16)(rnd.nextGaussian().toFloat))).toDF("vec_id", "embedding")
-    val queries = corpus.filter(col("vec_id") < 3)
-    val viaHamming = Similarity.hammingTopK(corpus, "vec_id", "embedding",
-        queries, "vec_id", "embedding", k = 5, shortlist = 40)
-      .select("query_id", "neighbor_id", "rank")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val viaBrute = Similarity.bruteTopK(corpus, "vec_id", "embedding",
-        queries.select(col("vec_id").as("qid"), col("embedding").as("qvec")),
-        "qid", "qvec", k = 5)
-      .select("query_id", "neighbor_id", "rank")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2).toLong)).toSet
-    assert(viaHamming == viaBrute)
-  }
-
-  test("identical and sign-identical vectors land at hamming 0; self is rank 1") {
-    val corpus = Seq(
-      (0L, vec(1, -2, 3, -4)),
-      (1L, vec(2, -4, 6, -8)),      // same signs, scaled: hamming 0
-      (2L, vec(-1, 2, -3, 4))).toDF("vec_id", "embedding") // opposite
-    val out = Similarity.hammingTopK(corpus, "vec_id", "embedding",
-        corpus.filter(col("vec_id") === 0L), "vec_id", "embedding",
-        k = 3, shortlist = 3)
-      .orderBy("rank").collect()
-    assert(out(0).getLong(1) == 0L && out(0).getLong(2) == 0L) // self
-    assert(out(1).getLong(1) == 1L && out(1).getLong(2) == 0L)
-    assert(out(1).getDouble(3) == 1.0) // exact rerank: colinear
-    assert(out(2).getLong(1) == 2L && out(2).getLong(2) > 0L)
-  }
-
-  test("a tight shortlist keeps true near-duplicates (sign codes collide)") {
-    val rnd = new scala.util.Random(11)
-    val base = Array.fill(16)(rnd.nextGaussian())
-    val twin = base.map(x => x * 1.01 + math.signum(x) * 1e-3)
-    val noise = (2L until 60L).map(i =>
-      (i, Array.fill(16)(rnd.nextGaussian().toFloat)))
-    val corpus = (Seq((0L, base.map(_.toFloat)), (1L, twin.map(_.toFloat)))
-      ++ noise).toDF("vec_id", "embedding")
-    val out = Similarity.hammingTopK(corpus, "vec_id", "embedding",
-        corpus.filter(col("vec_id") === 0L), "vec_id", "embedding",
-        k = 2, shortlist = 5)
-      .orderBy("rank").collect()
-    assert(out.map(_.getLong(1)).toSeq == Seq(0L, 1L)) // self, then twin
-  }
-}
-
 class PplBucketsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -713,66 +659,6 @@ class CorpusDivergenceSpec extends SparkSpec {
   }
 }
 
-class MatryoshkaSpec extends SparkSpec {
-  import spark.implicits._
-
-  private def vec(xs: Double*): Array[Float] = xs.map(_.toFloat).toArray
-
-  test("a shortlist covering the whole corpus reproduces brute-force ranks") {
-    val rnd = new scala.util.Random(13)
-    val corpus = (0L until 40L).map(i =>
-      (i, Array.fill(32)(rnd.nextGaussian().toFloat))).toDF("vec_id", "embedding")
-    val queries = corpus.filter(col("vec_id") < 3)
-    val viaPrefix = Similarity.matryoshkaTopK(corpus, "vec_id", "embedding",
-        queries, "vec_id", "embedding", k = 5, prefixDims = 8, shortlist = 40)
-      .select("query_id", "neighbor_id", "rank")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val viaBrute = Similarity.bruteTopK(corpus, "vec_id", "embedding",
-        queries.select(col("vec_id").as("qid"), col("embedding").as("qvec")),
-        "qid", "qvec", k = 5)
-      .select("query_id", "neighbor_id", "rank")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2).toLong)).toSet
-    assert(viaPrefix == viaBrute)
-  }
-
-  test("prefix stage reads ONLY the prefix; rerank restores full-dim order") {
-    // decoy 1 matches the query's prefix exactly but flips the tail;
-    // vector 2 is colinear with the query everywhere. The prefix pass
-    // cannot tell them apart (both prefix_cos 1.0); the full-dim
-    // rerank must put the true twin first.
-    val corpus = Seq(
-      (0L, vec(1, 2, -5, 7)),
-      (1L, vec(1, 2, 5, -7)),   // prefix twin, tail flipped
-      (2L, vec(2, 4, -10, 14)), // colinear with query
-      (3L, vec(-1, -2, 5, -7))).toDF("vec_id", "embedding")
-    val out = Similarity.matryoshkaTopK(corpus, "vec_id", "embedding",
-        corpus.filter(col("vec_id") === 0L), "vec_id", "embedding",
-        k = 4, prefixDims = 2, shortlist = 4)
-      .orderBy("rank").collect()
-    assert(out(0).getLong(1) == 0L && out(0).getDouble(3) == 1.0) // self
-    assert(out(1).getLong(1) == 2L && out(1).getDouble(3) == 1.0) // colinear
-    assert(out(0).getDouble(2) == 1.0 && out(1).getDouble(2) == 1.0)
-    // the prefix twin had prefix_cos 1.0 too but reranks below
-    assert(out(2).getLong(1) == 1L && out(2).getDouble(2) == 1.0
-      && out(2).getDouble(3) < 1.0)
-    assert(out(3).getLong(1) == 3L) // anti-colinear last
-  }
-
-  test("a tight shortlist can only return shortlisted candidates") {
-    val rnd = new scala.util.Random(19)
-    val corpus = (0L until 30L).map(i =>
-      (i, Array.fill(16)(rnd.nextGaussian().toFloat))).toDF("vec_id", "embedding")
-    val out = Similarity.matryoshkaTopK(corpus, "vec_id", "embedding",
-        corpus.filter(col("vec_id") === 0L), "vec_id", "embedding",
-        k = 10, prefixDims = 4, shortlist = 10)
-      .collect()
-    assert(out.length == 10)
-    assert(out.map(_.getLong(4)).toSet == (1L to 10L).toSet)
-    // self survives any shortlist: its prefix cosine is exactly 1
-    assert(out.exists(r => r.getLong(1) == 0L && r.getLong(4) == 1L))
-  }
-}
-
 class BpePairStatsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -861,37 +747,6 @@ class TemplateQuantilesSpec extends SparkSpec {
     assert(get.getDouble(2) == 20.0)           // p50 of {10,20,30}
     assert(get.getDouble(3) == 29.0)           // p95 interpolated: 20+0.9*10
     assert(get.getDouble(4) == 30.0)           // max
-  }
-}
-
-class KnnGraphSpec extends SparkSpec {
-  import spark.implicits._
-
-  private def vec(xs: Double*): Array[Float] = xs.map(_.toFloat).toArray
-
-  test("each node ranks the OTHERS; self edges never appear") {
-    val nodes = Seq(
-      (0L, vec(1, 0)),
-      (1L, vec(0.9, 0.1)),
-      (2L, vec(0, 1))).toDF("vec_id", "embedding")
-    val out = Similarity.knnGraph(nodes, "vec_id", "embedding", k = 2)
-      .orderBy("src", "rank").collect()
-    assert(out.length == 6) // 3 nodes x 2 edges
-    assert(out.forall(r => r.getLong(0) != r.getLong(1)))
-    // node 0's nearest other node is 1, then 2
-    assert(out(0).getLong(1) == 1L && out(1).getLong(1) == 2L)
-    // node 2 prefers 1 (slightly rotated toward it) over 0
-    assert(out(4).getLong(1) == 1L)
-  }
-
-  test("k larger than n-1 returns all n-1 edges per node") {
-    val rnd = new scala.util.Random(23)
-    val nodes = (0L until 5L).map(i =>
-      (i, Array.fill(8)(rnd.nextGaussian().toFloat))).toDF("vec_id", "embedding")
-    val out = Similarity.knnGraph(nodes, "vec_id", "embedding", k = 10)
-    assert(out.count() == 20) // 5 x 4
-    val perSrc = out.groupBy("src").count().collect()
-    assert(perSrc.forall(_.getLong(1) == 4L))
   }
 }
 
