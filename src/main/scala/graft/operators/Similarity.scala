@@ -4,19 +4,32 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.functions.PqCodes.round6
 import graft.functions.VecDot
 
 /** Similarity search over an embedding column (`array<float>`).
   *
-  * Baseline: brute-force cosine top-k — the query set is small by
-  * definition, so it broadcasts and the scan is one shuffle-free pass
-  * over the corpus followed by a top-k per query. Scale path:
-  * random-hyperplane LSH buckets cut the candidate set per query —
-  * sublinear probe cost at 100 TB corpus size.
+  * Every top-k entry composes the same private stages, the way the
+  * FAISS index factory composes an index (Johnson et al.,
+  * arXiv:1702.08734):
   *
-  * All dot products go through [[VecDot]], a fused codegen loop;
-  * norms are computed ONCE per vector before pairing, never per pair
-  * — per-candidate work is exactly one multiply-accumulate pass.
+  *   candidates → score → rank (→ rerank)
+  *
+  *  - candidates: all pairs (a broadcast cross join), LSH buckets, an
+  *    IVF probe (seeded [[assignCents]] or exact-integer
+  *    [[microProbe]]) or the posting lists of a persisted store;
+  *  - score: exact cosine over norms precomputed once per vector
+  *    ([[side]], [[exactCos]]; a zero-norm side has no cosine, so by
+  *    the no-evidence rule its pairs never rank), int8 codes, Hamming
+  *    distance of SRP codes, or the ADC table sum ([[adcTopK]]);
+  *  - rank: [[topK]], the one per-query `row_number` window, planned
+  *    as a map-side WindowGroupLimit. The caller passes its order
+  *    columns, so whether it ranks on the raw or the round-6 cosine,
+  *    and its tie-break, stay the caller's;
+  *  - rerank: [[rawCosTopK]], exact cosine over a shortlist.
+  *
+  * Queries are small by contract and broadcast. All dot products go
+  * through [[VecDot]], a fused codegen loop.
   */
 object Similarity {
 
@@ -29,26 +42,66 @@ object Similarity {
   /** L2 norm of a vector, for one-time precomputation. */
   def norm(v: Column): Column = sqrt(VecDot.dot(v, v))
 
+  /** Score-stage input: one side's id, vector and extra columns as
+    * `_<t>id`, `_<t>v`, …, its norm as `_<t>n` (t = "c" for the
+    * corpus, "q" for queries). */
+  private def side(df: DataFrame, id: Column, vec: String, t: String,
+                   extra: Column*): DataFrame =
+    withNorm(df.select(id.as(s"_${t}id") +: col(vec).as(s"_${t}v") +: extra: _*), t)
+
+  private def withNorm(df: DataFrame, t: String): DataFrame =
+    df.withColumn(s"_${t}n", norm(col(s"_${t}v")))
+
+  /** Score stage: exact cosine of paired [[side]]s `c` and `q`, null
+    * where either norm is zero or null — cosine is undefined there
+    * (the no-evidence rule), and under ANSI a plain division would
+    * fail the whole query. The cosine rank stages drop null scores
+    * AFTER ranking: nulls sort last, so they never displace a scored
+    * pair, and a filter above the window cannot be pushed into a
+    * side, where it would recompute a derived vector column. */
+  private def exactCos(c: String = "c", q: String = "q"): Column =
+    try_divide(VecDot.dot(col(s"_${c}v"), col(s"_${q}v")),
+      col(s"_${c}n") * col(s"_${q}n"))
+
+  private def pairIds: Seq[Column] =
+    Seq(col("_qid").as("query_id"), col("_cid").as("neighbor_id"))
+
+  /** Rank stage: each `by` group's first `k` rows under `order`, as an
+    * int `rank`. `rank <= k` over `row_number` is what Spark plans as
+    * a map-side WindowGroupLimit. */
+  private def topK(df: DataFrame, by: String, k: Int, order: Column*): DataFrame =
+    df.withColumn("rank", row_number().over(Window.partitionBy(col(by)).orderBy(order: _*)))
+      .filter(col("rank") <= k)
+
+  /** Exact-cosine score + rank on the RAW cosine, ties to the lower
+    * corpus id, emitted rounded to 6: (query_id, neighbor_id, keep…,
+    * cos, rank). The [[bruteTopK]] contract, and the rerank stage
+    * over a shortlist. */
+  private def rawCosTopK(pairs: DataFrame, k: Int, keep: Column*): DataFrame =
+    topK(pairs.withColumn("cos", exactCos()), "_qid", k, col("cos").desc, col("_cid"))
+      .filter(col("cos").isNotNull)
+      .select(pairIds ++ keep ++ Seq(round(col("cos"), 6).as("cos"), col("rank")): _*)
+
+  /** Exact-cosine score rounded to 6 BEFORE any ranking, so an engine
+    * doing exact double arithmetic reproduces the order:
+    * (query_id, neighbor_id, keep…, cos). */
+  private def roundCos(pairs: DataFrame, keep: Column*): DataFrame =
+    pairs.select(pairIds ++ keep :+ round(exactCos(), 6).as("cos"): _*)
+
+  /** Rank stage over [[roundCos]] scores, ties to the lower neighbor. */
+  private def roundCosTopK(scored: DataFrame, k: Int): DataFrame =
+    topK(scored, "query_id", k, col("cos").desc, col("neighbor_id"))
+      .filter(col("cos").isNotNull)
+
   /** Brute-force top-k: for each query vector, the k nearest corpus
     * vectors by cosine. `queries` must be small (it is broadcast).
     * Ties break on corpus id for determinism.
     */
   def bruteTopK(corpus: DataFrame, corpusId: String, corpusVec: String,
                 queries: DataFrame, queryId: String, queryVec: String,
-                k: Int): DataFrame = {
-    val c = corpus.withColumn("_cnrm", norm(col(corpusVec)))
-    val q = queries.withColumn("_qnrm", norm(col(queryVec)))
-    val scored = c
-      .crossJoin(broadcast(q))
-      .withColumn("cos",
-        VecDot.dot(col(corpusVec), col(queryVec)) / (col("_cnrm") * col("_qnrm")))
-    val w = Window.partitionBy(col(queryId)).orderBy(col("cos").desc, col(corpusId))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(queryId).as("query_id"), col(corpusId).as("neighbor_id"),
-        round(col("cos"), 6).as("cos"), col("rank"))
-  }
+                k: Int): DataFrame =
+    rawCosTopK(side(corpus, col(corpusId), corpusVec, "c")
+      .crossJoin(broadcast(side(queries, col(queryId), queryVec, "q"))), k)
 
   /** Multi-table, MULTI-PROBE LSH ANN: `numTables` independent
     * hyperplane signatures; a corpus row is a candidate for a query if
@@ -75,30 +128,21 @@ object Similarity {
   def lshTopK(corpus: DataFrame, corpusId: String, corpusVec: String,
               queries: DataFrame, queryId: String, queryVec: String,
               k: Int, numPlanes: Int = 6, numTables: Int = 8,
-              probeRadius: Int = 1): DataFrame = {
-    require(probeRadius >= 0 && probeRadius <= numPlanes,
-      s"probeRadius $probeRadius not in [0, numPlanes=$numPlanes]")
-    // one fused pass per vector for ALL tables' signatures, then
-    // posexplode tags each signature with its table index
-    def withSig(df: DataFrame, vec: String): DataFrame = df
-      .select(col("*"),
-        posexplode(graft.functions.LshSigs.sigs(col(vec), numPlanes, numTables))
-          .as(Seq("_t", "_sig")))
+              probeRadius: Int = 1): DataFrame =
+    // one fused pass per vector for ALL tables' signatures
     lshSearch(corpus, corpusId, corpusVec, queries, queryId, queryVec,
-      k, numPlanes, probeRadius, withSig)
-  }
+      k, numPlanes, probeRadius,
+      v => graft.functions.LshSigs.sigs(v, numPlanes, numTables))
 
   /** PORTABLE multi-probe LSH ANN — [[lshTopK]]'s hash-exact twin
     * (the d11/d12 move applied to the ANN family): hyperplanes are the
-    * s08 md5-parity ±1 sign matrix ([[srpSigns]], component +1 iff the
-    * first md5 hex digit of "i:j" is even, j = table·planes + plane)
-    * instead of the splitmix64 family, and each plane's projection is
-    * one [[VecDot]] literal fold — index order, so an engine replaying
-    * the projection as an ordered list fold reproduces the EXACT IEEE
-    * double, hence the exact sign, hence the exact signature, bucket
-    * join, probe expansion, and top-k. The whole sublinear mechanism —
-    * banding, bucket equality, multi-probe bit flips — becomes
-    * auditable in SQL rather than trusted.
+    * s08 md5-parity ±1 sign matrix ([[portableSigs]]) instead of the
+    * splitmix64 family, so an engine replaying each projection as an
+    * ordered list fold reproduces the EXACT IEEE double, hence the
+    * exact sign, hence the exact signature, bucket join, probe
+    * expansion, and top-k. The whole sublinear mechanism — banding,
+    * bucket equality, multi-probe bit flips — becomes auditable in
+    * SQL rather than trusted.
     *
     * Same search shape as [[lshTopK]] (shared [[lshSearch]] core);
     * only the signature source differs. Zero shuffle on the signature
@@ -107,59 +151,54 @@ object Similarity {
   def lshPortableTopK(corpus: DataFrame, corpusId: String, corpusVec: String,
                       queries: DataFrame, queryId: String, queryVec: String,
                       k: Int, dims: Int, numPlanes: Int = 6, numTables: Int = 4,
-                      probeRadius: Int = 1): DataFrame = {
-    require(probeRadius >= 0 && probeRadius <= numPlanes,
-      s"probeRadius $probeRadius not in [0, numPlanes=$numPlanes]")
+                      probeRadius: Int = 1): DataFrame =
+    lshSearch(corpus, corpusId, corpusVec, queries, queryId, queryVec,
+      k, numPlanes, probeRadius, portableSigs(dims, numPlanes, numTables))
+
+  /** Portable SRP signatures, one long per table: bit p of table t is
+    * set iff the [[VecDot]] projection onto [[srpSigns]] plane
+    * t·planes + p is >= 0. Index-order folds, so any engine with an
+    * md5 and an ordered list fold replays the exact bits. Shared by
+    * [[lshPortableTopK]] and [[cosinePairsPortable]].
+    */
+  private def portableSigs(dims: Int, numPlanes: Int,
+                           numTables: Int): Column => Column = {
     require(numPlanes <= 62, s"numPlanes $numPlanes overflows the long signature")
     val signs = srpSigns(dims, numPlanes * numTables)
-    def sigFor(vec: Column, t: Int): Column =
+    vec => array((0 until numTables).map { t =>
       (0 until numPlanes).map { p =>
         when(VecDot.dot(vec, lit(signs(t * numPlanes + p))) >= 0.0,
           lit(1L << p)).otherwise(lit(0L))
       }.reduce(_ + _)
-    def withSig(df: DataFrame, vec: String): DataFrame = df
-      .select(col("*"),
-        posexplode(array((0 until numTables).map(t => sigFor(col(vec), t)): _*))
-          .as(Seq("_t", "_sig")))
-    lshSearch(corpus, corpusId, corpusVec, queries, queryId, queryVec,
-      k, numPlanes, probeRadius, withSig)
+    }: _*)
   }
 
   /** The shared LSH search core behind [[lshTopK]] and
-    * [[lshPortableTopK]]: signature attach (caller-supplied), probe
-    * expansion on the broadcast-small query side, bucket equi-join,
-    * pair dedup, exact cosine, per-query top-k.
+    * [[lshPortableTopK]]. Candidates: each side's per-table signatures
+    * (`sigs`, posexploded with their table index), the probe expansion
+    * on the broadcast-small query side, one bucket equi-join. Score:
+    * round-6 exact cosine, one row per pair (a pair can meet in more
+    * than one table). Rank: per-query top-k.
     */
   private def lshSearch(corpus: DataFrame, corpusId: String, corpusVec: String,
                         queries: DataFrame, queryId: String, queryVec: String,
                         k: Int, numPlanes: Int, probeRadius: Int,
-                        withSig: (DataFrame, String) => DataFrame): DataFrame = {
-    val cb = withSig(corpus, corpusVec)
-      .withColumn("_sg", struct(col("_t"), col("_sig")))
-      .drop("_t", "_sig")
-      .withColumn("_cnrm", norm(col(corpusVec)))
-    val qsigs = withSig(queries, queryVec)
-    val masks = probeMasks(numPlanes, probeRadius)
-    val probed =
-      if (probeRadius == 0) qsigs
-      else qsigs.withColumn("_sig", explode(array(
-        masks.map(m => col("_sig").bitwiseXOR(lit(m))): _*)))
-    val qb = probed
-      .withColumn("_sg", struct(col("_t"), col("_sig")))
-      .drop("_t", "_sig")
-      .withColumn("_qnrm", norm(col(queryVec)))
-    val scored = cb
-      .join(broadcast(qb), "_sg")
-      .withColumn("cos",
-        VecDot.dot(col(corpusVec), col(queryVec)) / (col("_cnrm") * col("_qnrm")))
-      .select(col(queryId).as("query_id"), col(corpusId).as("neighbor_id"),
-        round(col("cos"), 6).as("cos"))
-      .dropDuplicates("query_id", "neighbor_id") // same pair via >1 table
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+                        sigs: Column => Column): DataFrame = {
+    require(probeRadius >= 0 && probeRadius <= numPlanes,
+      s"probeRadius $probeRadius not in [0, numPlanes=$numPlanes]")
+    def buckets(df: DataFrame, t: String, radius: Int): DataFrame = {
+      val signed = df.select(col("*"),
+        posexplode(sigs(col(s"_${t}v"))).as(Seq("_t", "_sig")))
+      val probed =
+        if (radius == 0) signed
+        else signed.withColumn("_sig", explode(array(
+          probeMasks(numPlanes, radius).map(m => col("_sig").bitwiseXOR(lit(m))): _*)))
+      probed.withColumn("_sg", struct(col("_t"), col("_sig"))).drop("_t", "_sig")
+    }
+    val cb = buckets(side(corpus, col(corpusId), corpusVec, "c"), "c", 0)
+    val qb = buckets(side(queries, col(queryId), queryVec, "q"), "q", probeRadius)
+    roundCosTopK(roundCos(cb.join(broadcast(qb), "_sg"))
+      .dropDuplicates("query_id", "neighbor_id"), k)
   }
 
   /** The multi-probe XOR-mask sequence for [[lshTopK]]: every plane
@@ -195,9 +234,10 @@ object Similarity {
     * [[ivfPqTopK]]: seed `nlist` centroids from the trainCap
     * lowest-hash rows (deterministic, uniform, one distributed top-K
     * — TakeOrdered, no full sort), then `refineIters` Lloyd passes.
-    * Null vectors are excluded up front: they carry no geometry to
-    * train on, and the PQ family's dirty-input contract (pq_codes,
-    * pqAdcTopK) likewise skips/rejects rather than NPEs.
+    * Null and zero vectors are excluded: they carry no geometry to
+    * train on (every cosine against a zero seed would be null), and
+    * the PQ family's dirty-input contract (pq_codes, pqAdcTopK)
+    * likewise skips/rejects rather than NPEs.
     *
     * Ties in the local assignment break on centroid POSITION, which is
     * seed-hash order — the same deterministic-order principle as the
@@ -215,6 +255,7 @@ object Similarity {
       .orderBy(col("_h"), col("_id"))
       .limit(trainCap)
       .collect()
+      .filter(r => l2d(r.getSeq[Double](1).toArray) > 0)
     val trainVecs: Array[Array[Double]] =
       trainRows.map(_.getSeq[Double](1).toArray)
     val dims = if (trainVecs.isEmpty) 0 else trainVecs(0).length
@@ -256,19 +297,24 @@ object Similarity {
     cents
   }
 
-  /** Top-`take` nearest centroids per row. Small quantizers embed as
-    * LITERALS: score + sort happen in-row, one narrow codegen map —
+  /** Seeded IVF candidate source: the top-`take` nearest centroids of
+    * each row of `df` by cosine, as `_cent_id`. Small quantizers embed
+    * as LITERALS: score + sort happen in-row, one narrow codegen map —
     * no crossJoin blow-up, no per-row window shuffle. Large
     * quantizers (nlist beyond expression-tree size) fall back to a
-    * broadcast join + per-row top-take window.
+    * broadcast join + per-row top-take window. A zero-norm row scores
+    * null against every centroid and lands on the lowest ids instead
+    * of failing the division.
     */
   private def assignCents(cents: Array[Cent],
                           idType: org.apache.spark.sql.types.DataType,
-                          df: DataFrame, vec: String, nrm: Column,
-                          take: Int): DataFrame =
-    if (cents.length <= 128) {
+                          df0: DataFrame, vec: String,
+                          take: Int): DataFrame = {
+    val df = df0.withColumn("_anrm", norm(col(vec)))
+    val nrm = col("_anrm")
+    val assigned = if (cents.length <= 128) {
       val scoredArr = array(cents.map(c => struct(
-        (-(VecDot.dot(col(vec), lit(c.vec)) / (nrm * lit(c.nrm)))).as("_negcos"),
+        (-try_divide(VecDot.dot(col(vec), lit(c.vec)), nrm * lit(c.nrm))).as("_negcos"),
         lit(c.id).as("_cid"))): _*)
       df.withColumn("_cand", explode(slice(sort_array(scoredArr), 1, take)))
         .withColumn("_cent_id", col("_cand._cid"))
@@ -284,13 +330,15 @@ object Similarity {
       df.withColumn("_rowid", monotonically_increasing_id())
         .crossJoin(broadcast(centFrame))
         .withColumn("_cent_cos",
-          VecDot.dot(col(vec), col("_cent_vec")) / (nrm * col("_cent_nrm")))
+          try_divide(VecDot.dot(col(vec), col("_cent_vec")), nrm * col("_cent_nrm")))
         .withColumn("_cent_rank", row_number().over(
           Window.partitionBy(col("_rowid"))
             .orderBy(col("_cent_cos").desc, col("_cent_id"))))
         .filter(col("_cent_rank") <= take)
         .drop("_cent_vec", "_cent_nrm", "_cent_cos", "_cent_rank", "_rowid")
     }
+    assigned.drop("_anrm")
+  }
 
   /** IVF (inverted-file) ANN — the classic scale path next to LSH.
     *
@@ -326,30 +374,17 @@ object Similarity {
               trainCap: Int = 65536): DataFrame = {
     val cents = trainCoarse(corpus, corpusId, corpusVec, nlist, refineIters, trainCap)
     val idType = corpus.schema(corpusId).dataType
-
     // `spill` > 1 = assignment replication: each corpus vector joins
     // its top-`spill` lists, so a neighbor sitting just across a
     // Voronoi boundary from the query's probed cells is still found.
     // Costs spill× list storage/scan — the classic IVF recall lever
     // next to nprobe (refinement keeps take=1: true Lloyd k-means).
-    val c = assignCents(cents, idType,
-      corpus.withColumn("_cnrm", norm(col(corpusVec))),
-      corpusVec, col("_cnrm"), spill)
-    val q = assignCents(cents, idType,
-      queries.withColumn("_qnrm", norm(col(queryVec))),
-      queryVec, col("_qnrm"), nprobe)
-
-    val scored = c.join(broadcast(q), "_cent_id")
-      .withColumn("cos",
-        VecDot.dot(col(corpusVec), col(queryVec)) / (col("_cnrm") * col("_qnrm")))
-      .select(col(queryId).as("query_id"), col(corpusId).as("neighbor_id"),
-        round(col("cos"), 6).as("cos"))
-      .dropDuplicates("query_id", "neighbor_id") // same pair via two spilled lists
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val c = assignCents(cents, idType, side(corpus, col(corpusId), corpusVec, "c"),
+      "_cv", spill)
+    val q = assignCents(cents, idType, side(queries, col(queryId), queryVec, "q"),
+      "_qv", nprobe)
+    roundCosTopK(roundCos(c.join(broadcast(q), "_cent_id"))
+      .dropDuplicates("query_id", "neighbor_id"), k) // same pair via two spilled lists
   }
 
   /** Symmetric int8 quantization of an embedding column: per-vector
@@ -426,8 +461,6 @@ object Similarity {
   private[graft] final case class PcModel(
       loadings: Array[Double], eigenvalue: Double, explainedFrac: Double,
       means: Array[Double], n: Long)
-
-  private def round6(x: Double): Double = graft.functions.PqCodes.round6(x)
 
   /** DECIMAL(24,8) fold of round6 terms — the engine-portable sum. */
   private def decSum(terms: Iterator[Double]): Double = {
@@ -788,32 +821,10 @@ object Similarity {
         lit(0L), (a, x) => a + x))
       .withColumn("qcos", round(col("_dot").cast("double") /
         (sqrt(col("_cn2").cast("double")) * sqrt(col("_qn2").cast("double"))), 6))
-    val w = Window.partitionBy(col("_qid")).orderBy(col("qcos").desc, col("_cid"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("_qid").as("query_id"), col("_cid").as("neighbor_id"),
-        col("qcos"), col("rank").cast("long").as("rank"))
+    topK(scored, "_qid", k, col("qcos").desc, col("_cid"))
+      .select(pairIds :+ col("qcos") :+ col("rank").cast("long").as("rank"): _*)
   }
 
-  /** Signed random projection (SRP) to `outDims` dimensions:
-    * out_j = sum_i x_i * s(i,j) with s(i,j) = ±1 derived from the
-    * parity of md5's first hex digit over "i:j" — a deterministic
-    * Achlioptas-style projection with no RNG state to ship, so two
-    * runs (or two engines) produce bit-identical output. The cheap
-    * first stage of an embedding-scale pipeline: 4× (64→16) fewer
-    * dimensions for downstream ANN/clustering at ~sqrt(d'/d) distance
-    * distortion.
-    *
-    * Shape at scale: the ±1 matrix is dims × outDims values — tiny by
-    * definition — so it is computed ONCE driver-side (MessageDigest
-    * md5 = the same bytes SQL md5 yields) and embedded as literal
-    * vectors; each output dim is then one fused [[VecDot]] codegen
-    * loop per row. The whole operator is a single narrow projection:
-    * no explode of the input dims, no join, no shuffle. Row-local
-    * index-order summation is deterministic under any partitioning
-    * and mirrors the oracle's list-order sum (the s05 precedent).
-    * Output: (id, j, proj).
-    */
   /** Corpus-max vector length (for sign matrices that must cover
     * every ragged row). An eager aggregate — a Spark job fires at
     * plan-build time; fixed-dim callers pass `inDims` instead. */
@@ -866,26 +877,15 @@ object Similarity {
         when(round(VecDot.dot(vec, lit(signVecs(j))), 6) > 0.0,
           lit(1L << (bits - 1 - j))).otherwise(lit(0L))
       }.reduce(_ + _)
-    val c = corpus.select(col(corpusId).as("cid"), col(corpusVec).as("cv"))
-      .withColumn("_code", codeOf(col("cv")))
-    val q = queries.select(col(queryId).as("qid"), col(queryVec).as("qv"))
-      .withColumn("_qcode", codeOf(col("qv")))
-    val slWin = Window.partitionBy(col("qid"))
-      .orderBy(col("hamming"), col("cid"))
-    val shortlisted = c.crossJoin(broadcast(q))
-      .withColumn("hamming",
-        expr("bit_count(_code ^ _qcode)").cast("long"))
-      .withColumn("_srnk", row_number().over(slWin))
-      .filter(col("_srnk") <= shortlist)
-    val rerankWin = Window.partitionBy(col("qid"))
-      .orderBy(col("_cos").desc, col("cid"))
-    shortlisted
-      .withColumn("_cos", VecDot.dot(col("cv"), col("qv"))
-        / (norm(col("cv")) * norm(col("qv"))))
-      .withColumn("rank", row_number().over(rerankWin).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid").as("query_id"), col("cid").as("neighbor_id"),
-        col("hamming"), round(col("_cos"), 6).as("cos"), col("rank"))
+    val c = side(corpus, col(corpusId), corpusVec, "c")
+      .withColumn("_code", codeOf(col("_cv")))
+    val q = side(queries, col(queryId), queryVec, "q")
+      .withColumn("_qcode", codeOf(col("_qv")))
+    val shortlisted = topK(c.crossJoin(broadcast(q))
+        .withColumn("hamming", expr("bit_count(_code ^ _qcode)").cast("long")),
+      "_qid", shortlist, col("hamming"), col("_cid"))
+    rawCosTopK(shortlisted, k, col("hamming"))
+      .withColumn("rank", col("rank").cast("long"))
   }
 
   /** Matryoshka / prefix-dimension ANN (Kusupati et al. 2022 MRL
@@ -916,26 +916,16 @@ object Similarity {
                      shortlist: Int = 50): DataFrame = {
     require(prefixDims >= 1, s"prefixDims=$prefixDims must be positive")
     require(shortlist >= k, s"shortlist=$shortlist must be >= k=$k")
-    val c = corpus.select(col(corpusId).as("cid"), col(corpusVec).as("cv"))
-      .withColumn("_cp", slice(col("cv"), 1, prefixDims))
-    val q = queries.select(col(queryId).as("qid"), col(queryVec).as("qv"))
-      .withColumn("_qp", slice(col("qv"), 1, prefixDims))
-    val slWin = Window.partitionBy(col("qid"))
-      .orderBy(col("prefix_cos").desc, col("cid"))
-    val shortlisted = c.crossJoin(broadcast(q))
-      .withColumn("prefix_cos", round(VecDot.dot(col("_cp"), col("_qp"))
-        / (norm(col("_cp")) * norm(col("_qp"))), 6))
-      .withColumn("_srnk", row_number().over(slWin))
-      .filter(col("_srnk") <= shortlist)
-    val rerankWin = Window.partitionBy(col("qid"))
-      .orderBy(col("cos").desc, col("cid"))
-    shortlisted
-      .withColumn("cos", round(VecDot.dot(col("cv"), col("qv"))
-        / (norm(col("cv")) * norm(col("qv"))), 6))
-      .withColumn("rank", row_number().over(rerankWin).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid").as("query_id"), col("cid").as("neighbor_id"),
-        col("prefix_cos"), col("cos"), col("rank"))
+    // the prefix is a second normed side per row
+    def prefixed(df: DataFrame, t: String): DataFrame =
+      withNorm(df.withColumn(s"_${t}pv", slice(col(s"_${t}v"), 1, prefixDims)), s"${t}p")
+    val c = prefixed(side(corpus, col(corpusId), corpusVec, "c"), "c")
+    val q = prefixed(side(queries, col(queryId), queryVec, "q"), "q")
+    val shortlisted = topK(c.crossJoin(broadcast(q))
+        .withColumn("prefix_cos", round(exactCos("cp", "qp"), 6)),
+      "_qid", shortlist, col("prefix_cos").desc, col("_cid"))
+    roundCosTopK(roundCos(shortlisted, col("prefix_cos")), k)
+      .withColumn("rank", col("rank").cast("long"))
   }
 
   /** Exact directed k-NN graph over a BOUNDED node set: each node's
@@ -955,18 +945,11 @@ object Similarity {
     */
   def knnGraph(df: DataFrame, idCol: String, vecCol: String,
                k: Int): DataFrame = {
-    val a = df.select(col(idCol).as("src"), col(vecCol).as("_sv"))
-      .withColumn("_an", norm(col("_sv")))
-    val b = df.select(col(idCol).as("dst"), col(vecCol).as("_dv"))
-      .withColumn("_bn", norm(col("_dv")))
-    val w = Window.partitionBy(col("src"))
-      .orderBy(col("cos").desc, col("dst"))
-    a.join(broadcast(b), col("src") =!= col("dst"))
-      .withColumn("cos", round(VecDot.dot(col("_sv"), col("_dv"))
-        / (col("_an") * col("_bn")), 6))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("src"), col("dst"), col("cos"), col("rank"))
+    val src = side(df, col(idCol), vecCol, "q")
+    val dst = side(df, col(idCol), vecCol, "c")
+    roundCosTopK(roundCos(src.join(broadcast(dst), col("_qid") =!= col("_cid"))), k)
+      .select(col("query_id").as("src"), col("neighbor_id").as("dst"), col("cos"),
+        col("rank").cast("long").as("rank"))
   }
 
   /** Per-DIMENSION embedding profile (the "dead dimension" audit an
@@ -1022,28 +1005,38 @@ object Similarity {
     */
   def knnClassify(queries: DataFrame, seeds: DataFrame, idCol: String,
                   vecCol: String, labelCol: String, k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("_qid"), col(vecCol).as("_qv"))
-      .withColumn("_qn", norm(col("_qv")))
-    val sd = seeds.select(col(idCol).as("_sid"), col(vecCol).as("_sv"),
-        col(labelCol).cast("long").as("_sl"))
-      .withColumn("_sn", norm(col("_sv")))
-    val wK = Window.partitionBy(col("_qid"))
-      .orderBy(col("_cos").desc, col("_sid"))
-    val wV = Window.partitionBy(col("_qid"))
+    val q = side(queries, col(idCol), vecCol, "q")
+    val sd = side(seeds, col(idCol), vecCol, "c", col(labelCol).cast("long").as("_sl"))
+    val wV = Window.partitionBy(col("query_id"))
       .orderBy(col("votes").desc, col("_sl"))
-    q.join(broadcast(sd), col("_qid") =!= col("_sid"))
-      .withColumn("_cos", round(VecDot.dot(col("_qv"), col("_sv"))
-        / (col("_qn") * col("_sn")), 6))
-      .withColumn("_rk", row_number().over(wK))
-      .filter(col("_rk") <= k)
-      .groupBy(col("_qid"), col("_sl"))
+    roundCosTopK(roundCos(q.join(broadcast(sd), col("_qid") =!= col("_cid")), col("_sl")), k)
+      .groupBy(col("query_id"), col("_sl"))
       .agg(count(lit(1)).as("votes"))
       .withColumn("_vr", row_number().over(wV))
       .filter(col("_vr") === 1)
-      .select(col("_qid").as(idCol), col("_sl").as("pred_label"),
+      .select(col("query_id").as(idCol), col("_sl").as("pred_label"),
         col("votes"))
   }
 
+  /** Signed random projection (SRP) to `outDims` dimensions:
+    * out_j = sum_i x_i * s(i,j) with s(i,j) = ±1 derived from the
+    * parity of md5's first hex digit over "i:j" — a deterministic
+    * Achlioptas-style projection with no RNG state to ship, so two
+    * runs (or two engines) produce bit-identical output. The cheap
+    * first stage of an embedding-scale pipeline: 4× (64→16) fewer
+    * dimensions for downstream ANN/clustering at ~sqrt(d'/d) distance
+    * distortion.
+    *
+    * Shape at scale: the ±1 matrix is dims × outDims values — tiny by
+    * definition — so it is computed ONCE driver-side (MessageDigest
+    * md5 = the same bytes SQL md5 yields) and embedded as literal
+    * vectors; each output dim is then one fused [[VecDot]] codegen
+    * loop per row. The whole operator is a single narrow projection:
+    * no explode of the input dims, no join, no shuffle. Row-local
+    * index-order summation is deterministic under any partitioning
+    * and mirrors the oracle's list-order sum (the s05 precedent).
+    * Output: (id, j, proj).
+    */
   def randomProjection(df: DataFrame, idCol: String, vecCol: String,
                        outDims: Int, inDims: Option[Int] = None): DataFrame = {
     // Sign matrix is built to the CORPUS MAX length, not an arbitrary
@@ -1216,10 +1209,24 @@ object Similarity {
   private def microVecs(df: DataFrame, idCol: String, vecCol: String,
                         dims: Int): DataFrame =
     df.filter(size(col(vecCol)) === dims)
-      .select(col(idCol).as("id"),
-        transform(col(vecCol),
-          x => round(round(x.cast("double"), 6) * lit(1e6), 0).cast("long"))
-          .as("_x6"))
+      .select(col(idCol).as("id"), micro6(col(vecCol)).as("_x6"))
+
+  /** A vector as exact integer micros: each coordinate rounded to 6
+    * places, ×10⁶, as a long — the exact-Lloyd metric's input. */
+  private def micro6(v: Column): Column =
+    transform(v, x => round(round(x.cast("double"), 6) * lit(1e6), 0).cast("long"))
+
+  /** Exact IVF candidate source: the `nprobe` centroids of `cents`
+    * nearest to each row's `vec` by the exact integer-micro metric,
+    * (dist, j) ties, exploded as `as`. Rows not `dims` long drop.
+    * Shared by [[ivfExactTopK]] and [[storeAdcPortable]]. */
+  private def microProbe(df: DataFrame, vec: String, cents: Array[Array[Long]],
+                         nprobe: Int, dims: Int, as: String): DataFrame =
+    df.filter(size(col(vec)) === dims)
+      .withColumn("_x6", micro6(col(vec)))
+      .select(col("*"), explode(
+        slice(array_sort(centDists(cents, col("_x6"))), 1, nprobe).getField("j")).as(as))
+      .drop("_x6")
 
   /** (dist², j) per centroid for the micro vector in `vecCol`, as an
     * array column. Centroids ride as ONE array<array<long>> literal and
@@ -1376,32 +1383,12 @@ object Similarity {
     require(cents.length == kClusters,
       s"ivfExactTopK: trained quantizer has ${cents.length} centroids, want $kClusters")
     val assigned = kmeansAssign(corpus, corpusId, corpusVec, cents, dims)
-    val q6 = queries.filter(size(col(queryVec)) === dims)
-      .select(col(queryId).as("_qid"), col(queryVec).as("_qv"),
-        transform(col(queryVec),
-          x => round(round(x.cast("double"), 6) * lit(1e6), 0).cast("long"))
-          .as("_q6"))
-    val probed = q6
-      .withColumn("_probe",
-        slice(array_sort(centDists(cents, col("_q6"))), 1, nprobe))
-      .select(col("_qid"), col("_qv"),
-        explode(col("_probe").getField("j")).as("cluster"))
-    val cvec = corpus.select(col(corpusId).as("id"), col(corpusVec).as("_cv"))
-      .withColumn("_cnrm", norm(col("_cv")))
-    val w = Window.partitionBy(col("_qid"))
-      .orderBy(col("cos").desc, col("id"))
-    broadcast(probed)
-      .join(assigned.select(col("id"), col("cluster")), Seq("cluster"))
-      .join(cvec, "id")
-      .withColumn("_qnrm", norm(col("_qv")))
-      // zero-norm sides drop by the no-evidence rule (cosine undefined)
-      .filter(col("_cnrm") > 0 && col("_qnrm") > 0)
-      .withColumn("cos", VecDot.dot(col("_cv"), col("_qv")) /
-        (col("_cnrm") * col("_qnrm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("_qid").as("query_id"), col("id").as("neighbor_id"),
-        round(col("cos"), 6).as("cos"), col("rank").cast("long").as("rank"))
+      .select(col("id").as("_cid"), col("cluster"))
+    val probed = microProbe(side(queries, col(queryId), queryVec, "q"), "_qv",
+      cents, nprobe, dims, "cluster")
+    rawCosTopK(broadcast(probed).join(assigned, Seq("cluster"))
+        .join(side(corpus, col(corpusId), corpusVec, "c"), "_cid"), k)
+      .withColumn("rank", col("rank").cast("long"))
   }
 
   /** PROTOTYPICALITY pruning (Sorscher et al. 2022, "Beyond neural
@@ -1502,17 +1489,9 @@ object Similarity {
   def cosinePairsPortable(df: DataFrame, idCol: String, vecCol: String,
                           threshold: Double, dims: Int, numPlanes: Int = 6,
                           numTables: Int = 4,
-                          maxBucket: Option[Int] = None): DataFrame = {
-    require(numPlanes <= 62, s"numPlanes $numPlanes overflows the long signature")
-    val signs = srpSigns(dims, numPlanes * numTables)
-    val sigs = array((0 until numTables).map { t =>
-      (0 until numPlanes).map { p =>
-        when(VecDot.dot(col("v"), lit(signs(t * numPlanes + p))) >= 0.0,
-          lit(1L << p)).otherwise(lit(0L))
-      }.reduce(_ + _)
-    }: _*)
-    cosinePairsCore(df, idCol, vecCol, threshold, maxBucket, sigs)
-  }
+                          maxBucket: Option[Int] = None): DataFrame =
+    cosinePairsCore(df, idCol, vecCol, threshold, maxBucket,
+      portableSigs(dims, numPlanes, numTables)(col("v")))
 
   /** Shared pair-mining core: bucket self-join on (table, signature),
     * pair dedup, exact cosine at `threshold`. `sigExpr` is the
@@ -1546,6 +1525,45 @@ object Similarity {
       .select(col("id1"), col("id2"), round(col("cos"), 6).as("cos"))
   }
 
+  /** (cluster, cos) of each row's nearest centroid by round-6 cosine
+    * argmax — the assignment half of [[semDedup]]'s literal path,
+    * factored out so the STREAMING semantic gate
+    * ([[graft.streaming.CurateStream.semGate]]) makes bit-identical
+    * decisions per micro-batch: one narrow codegen pass, no shuffle,
+    * no state, centroids embedded as literals (K <= 128 enforced —
+    * past that janino's method limit forces interpreted eval; a
+    * streaming gate's prototype set is small by design). Ties resolve
+    * to the lowest centroid id, same as batch. Appends `clusterCol`
+    * (long) and `cosCol` (cosine to that centroid, rounded 6dp).
+    * A null/missing embedding has no similarity evidence: both
+    * appended columns are null (not the arbitrary lowest centroid id
+    * the all-null sort would pick), so downstream routing sees the
+    * row as visibly unassigned.
+    */
+  def assignNearestCentroid(df: DataFrame, vecCol: String,
+                            cents: DataFrame, centIdCol: String,
+                            centVecCol: String,
+                            clusterCol: String = "cluster",
+                            cosCol: String = "centroid_cos"): DataFrame = {
+    val cb = collectCodebook(cents, centIdCol, centVecCol, "assignNearestCentroid")
+    require(cb.length <= 128,
+      s"assignNearestCentroid: ${cb.length} centroids exceed the literal-path bound (128)")
+    df.withColumn("_best", when(col(vecCol).isNotNull,
+        nearestCentroid(col(vecCol), norm(col(vecCol)), cb)))
+      .withColumn(clusterCol, col("_best").getField("_cid"))
+      .withColumn(cosCol, -col("_best").getField("_negcos"))
+      .drop("_best")
+  }
+
+  /** Round-6 cosine argmax over K literal centroids, row-local: the
+    * min (−cos rounded to 6, centroid id) struct — the highest rounded
+    * cosine, ties to the lowest centroid id. */
+  private def nearestCentroid(vec: Column, nrm: Column,
+                              cb: Array[(Long, Array[Double])]): Column =
+    sort_array(array(cb.map { case (cid, cv) => struct(
+      round(-(VecDot.dot(vec, lit(cv)) / (nrm * lit(l2d(cv)))), 6).as("_negcos"),
+      lit(cid).as("_cid")) }.toSeq: _*)).getItem(0)
+
   /** SemDeDup-style semantic near-dedup (Abbas et al. 2023,
     * arXiv:2303.09540): assign every vector to its nearest centroid
     * by cosine, then within each cluster drop any vector whose cosine
@@ -1574,41 +1592,6 @@ object Similarity {
     *    and the (small, narrow) result seals via [[Caching.sealOver]]
     *    — eager, lineage-cut, inputs unpersisted.
     */
-  /** (cluster, cos) of each row's nearest centroid by round-6 cosine
-    * argmax — the assignment half of [[semDedup]]'s literal path,
-    * factored out so the STREAMING semantic gate
-    * ([[graft.streaming.CurateStream.semGate]]) makes bit-identical
-    * decisions per micro-batch: one narrow codegen pass, no shuffle,
-    * no state, centroids embedded as literals (K <= 128 enforced —
-    * past that janino's method limit forces interpreted eval; a
-    * streaming gate's prototype set is small by design). Ties resolve
-    * to the lowest centroid id, same as batch. Appends `clusterCol`
-    * (long) and `cosCol` (cosine to that centroid, rounded 6dp).
-    * A null/missing embedding has no similarity evidence: both
-    * appended columns are null (not the arbitrary lowest centroid id
-    * the all-null sort would pick), so downstream routing sees the
-    * row as visibly unassigned.
-    */
-  def assignNearestCentroid(df: DataFrame, vecCol: String,
-                            cents: DataFrame, centIdCol: String,
-                            centVecCol: String,
-                            clusterCol: String = "cluster",
-                            cosCol: String = "centroid_cos"): DataFrame = {
-    val cb = collectCodebook(cents, centIdCol, centVecCol, "assignNearestCentroid")
-    require(cb.length <= 128,
-      s"assignNearestCentroid: ${cb.length} centroids exceed the literal-path bound (128)")
-    val nrm = norm(col(vecCol))
-    val scoredArr = array(cb.map { case (cid, cv) => struct(
-      round(-(VecDot.dot(col(vecCol), lit(cv)) / (nrm * lit(l2d(cv)))), 6)
-        .as("_negcos"),
-      lit(cid).as("_cid")) }.toSeq: _*)
-    df.withColumn("_best",
-        when(col(vecCol).isNotNull, sort_array(scoredArr).getItem(0)))
-      .withColumn(clusterCol, col("_best").getField("_cid"))
-      .withColumn(cosCol, -col("_best").getField("_negcos"))
-      .drop("_best")
-  }
-
   def semDedup(df: DataFrame, idCol: String, vecCol: String,
                cents: DataFrame, centIdCol: String, centVecCol: String,
                threshold: Double): DataFrame = {
@@ -1620,14 +1603,8 @@ object Similarity {
     val literalPath = cb.length <= 128
     val assigned0 =
       if (literalPath) {
-        // argmax cosine over K literal centroids, row-local: min
-        // struct = (highest rounded cos, lowest centroid id) — the
-        // same expression assignNearestCentroid exposes for streaming
-        val scoredArr = array(cb.map { case (cid, cv) => struct(
-          round(-(VecDot.dot(col("v"), lit(cv)) / (col("_nrm") * lit(l2d(cv)))), 6)
-            .as("_negcos"),
-          lit(cid).as("_cid")) }.toSeq: _*)
-        e.withColumn("cluster", sort_array(scoredArr).getItem(0).getField("_cid"))
+        // the same expression assignNearestCentroid exposes for streaming
+        e.withColumn("cluster", nearestCentroid(col("v"), col("_nrm"), cb).getField("_cid"))
           .select(col("id"), col("v"), col("_nrm"), col("cluster"))
       } else {
         val spark = df.sparkSession
@@ -1889,23 +1866,18 @@ object Similarity {
     val cb = collectCodebook(codebook, cbIdCol, cbVecCol, "pqAdcTopK")
     val codes = pqCodesFrame(corpus, corpusId, corpusVec, cb, m, "pqAdcTopK")
     val dt = adcTable(queries, queryId, queryVec, cb, m, "pqAdcTopK")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist"), col("neighbor_id"))
-    codes.join(broadcast(dt), Seq("sub", "code"))
-      .groupBy(col("query_id"), col("id").as("neighbor_id"))
-      .agg(round(sum(col("_d").cast("decimal(24,8)")).cast("double"), 6)
-        .as("adc_dist"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    adcTopK(codes.join(broadcast(dt), Seq("sub", "code")), k)
   }
 
-  /** Per-query ADC distance tables, built on the DRIVER (queries are
-    * per-query state in any PQ engine — "small by contract", enforced)
-    * and returned as a broadcast-sized (query_id, sub, code, _d)
-    * frame. Table entries drop the constant |q_sub|² term (same rank,
-    * same argmin) and round HALF_UP to 6dp. Shared by [[pqAdcTopK]]
-    * and [[ivfPqTopK]].
-    */
+  /** ADC score + rank: per (query_id, id) candidate, the DECIMAL(24,8)
+    * sum of its table-joined `_d` entries rounded to 6 (deterministic
+    * under any partitioning, bit-reproducible by a SQL oracle), then
+    * the top-k by (adc_dist, neighbor_id). */
+  private def adcTopK(lookups: DataFrame, k: Int): DataFrame =
+    topK(lookups.groupBy(col("query_id"), col("id").as("neighbor_id"))
+        .agg(round(sum(col("_d").cast("decimal(24,8)")).cast("double"), 6).as("adc_dist")),
+      "query_id", k, col("adc_dist"), col("neighbor_id"))
+
   /** Bounded driver collection of a query frame — ADC tables are
     * per-query driver state ("small by contract"): collect one row
     * past the bound so an oversized frame fails loudly instead of
@@ -1930,6 +1902,13 @@ object Similarity {
     qRows
   }
 
+  /** Per-query ADC distance tables, built on the DRIVER (queries are
+    * per-query state in any PQ engine — "small by contract", enforced)
+    * and returned as a broadcast-sized (query_id, sub, code, _d)
+    * frame. Table entries drop the constant |q_sub|² term (same rank,
+    * same argmin) and round HALF_UP to 6dp. Shared by [[pqAdcTopK]],
+    * [[ivfPqTopK]], [[annIndexTopK]] and [[storeAdcPortable]].
+    */
   private def adcTable(queries: DataFrame, queryId: String, queryVec: String,
                        cb: Array[(Long, Array[Double])], m: Int,
                        who: String): DataFrame = {
@@ -1939,8 +1918,7 @@ object Similarity {
     require(d % m == 0, s"$who: dim $d not divisible by m=$m")
     val sub = d / m
     val qRows = collectQueries(queries, queryId, queryVec, who)
-    // NaN/Infinity-safe, HALF_UP — the same rounding the code path uses
-    def round6(x: Double): Double = graft.functions.PqCodes.round6(x)
+    // round6: NaN/Infinity-safe, HALF_UP — the same rounding the code path uses
     val table = for {
       (qid, qv) <- qRows.toSeq
       j <- 0 until m
@@ -2004,39 +1982,29 @@ object Similarity {
     require(refine >= 1, s"refine=$refine must be >= 1")
     val cents = trainCoarse(corpus, corpusId, corpusVec, nlist, refineIters, trainCap)
     val idType = corpus.schema(corpusId).dataType
-    val lists = assignCents(cents, idType,
-        corpus.withColumn("_cnrm", norm(col(corpusVec))), corpusVec,
-        col("_cnrm"), spill)
+    val lists = assignCents(cents, idType, corpus, corpusVec, spill)
       .select(col(corpusId).as("id"), col("_cent_id"))
-    val probes = assignCents(cents, idType,
-        queries.withColumn("_qnrm", norm(col(queryVec))), queryVec,
-        col("_qnrm"), nprobe)
+    val probes = assignCents(cents, idType, queries, queryVec, nprobe)
       .select(col(queryId).cast("long").as("query_id"), col("_cent_id"))
     val cb = collectCodebook(codebook, cbIdCol, cbVecCol, "ivfPqTopK")
     val codes = pqCodesFrame(corpus, corpusId, corpusVec, cb, m, "ivfPqTopK")
     val dt = adcTable(queries, queryId, queryVec, cb, m, "ivfPqTopK")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist"), col("neighbor_id"))
     // distinct BEFORE attaching codes: with spill > 1 a pair can meet
     // in several lists, and a duplicate candidate row would double its
     // m code rows into the ADC sum
     val cands = lists.join(broadcast(probes), "_cent_id")
       .select(col("query_id"), col("id"))
       .dropDuplicates("query_id", "id")
-    val adcRanked = codes.join(cands, "id")
-      .join(broadcast(dt), Seq("query_id", "sub", "code"))
-      .groupBy(col("query_id"), col("id").as("neighbor_id"))
-      .agg(round(sum(col("_d").cast("decimal(24,8)")).cast("double"), 6)
-        .as("adc_dist"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k * refine)
+    val adcRanked = adcTopK(codes.join(cands, "id")
+      .join(broadcast(dt), Seq("query_id", "sub", "code")), k * refine)
     if (refine == 1) adcRanked
     else refineExact(adcRanked, corpus, corpusId, corpusVec,
       queries, queryId, queryVec, k)
   }
 
   /** The FAISS IndexRefineFlat step shared by the IVF-PQ variants:
-    * re-rank an ADC shortlist by exact cosine against raw vectors.
+    * re-rank an ADC shortlist by exact cosine ([[rawCosTopK]]) against
+    * raw vectors.
     * The shortlist is refine×k×|Q| rows — broadcast-small by contract
     * — so the exact pass reads raw vectors for the shortlist ONLY
     * (one broadcast join into the corpus scan, no shuffle of it).
@@ -2048,21 +2016,10 @@ object Similarity {
                           corpus: DataFrame, corpusId: String, corpusVec: String,
                           queries: DataFrame, queryId: String, queryVec: String,
                           k: Int): DataFrame = {
-    val shortlist = adcRanked.select(col("query_id"), col("neighbor_id"))
-    val c = corpus.select(col(corpusId).as("neighbor_id"),
-      col(corpusVec).as("_cv"), norm(col(corpusVec)).as("_cnrm"))
-    val q = queries.select(col(queryId).cast("long").as("query_id"),
-      col(queryVec).as("_qv"), norm(col(queryVec)).as("_qnrm"))
-    val w2 = Window.partitionBy(col("query_id"))
-      .orderBy(col("_rawcos").desc, col("neighbor_id"))
-    c.join(broadcast(shortlist), "neighbor_id")
-      .join(broadcast(q), "query_id")
-      .withColumn("_rawcos",
-        VecDot.dot(col("_cv"), col("_qv")) / (col("_cnrm") * col("_qnrm")))
-      .withColumn("rank", row_number().over(w2))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("_rawcos"), 6).as("cos"), col("rank"))
+    val shortlist = adcRanked.select(col("query_id").as("_qid"), col("neighbor_id").as("_cid"))
+    rawCosTopK(side(corpus, col(corpusId), corpusVec, "c")
+      .join(broadcast(shortlist), "_cid")
+      .join(broadcast(side(queries, col(queryId).cast("long"), queryVec, "q")), "_qid"), k)
   }
 
   /** WRITE half of the PERSISTENT ANN index — the "build once, serve
@@ -2115,10 +2072,16 @@ object Similarity {
                              codebook: DataFrame, cbIdCol: String,
                              cbVecCol: String, m: Int, spill: Int,
                              who: String): DataFrame = {
-    val lists = assignCents(cents, idType,
-        corpus.withColumn("_cnrm", norm(col(corpusVec))), corpusVec,
-        col("_cnrm"), spill)
+    val lists = assignCents(cents, idType, corpus, corpusVec, spill)
       .select(col(corpusId).as("id"), col("_cent_id").as("cent_id"))
+    postingsOf(lists, corpus, corpusId, corpusVec, codebook, cbIdCol, cbVecCol, m, who)
+  }
+
+  /** The store layout: (cent_id, id, codes) — each list member of
+    * `lists` (id, cent_id) with its m PQ codes inline, in sub order. */
+  private def postingsOf(lists: DataFrame, corpus: DataFrame, corpusId: String,
+                         corpusVec: String, codebook: DataFrame, cbIdCol: String,
+                         cbVecCol: String, m: Int, who: String): DataFrame = {
     val cb = collectCodebook(codebook, cbIdCol, cbVecCol, who)
     val codes = pqCodesFrame(corpus, corpusId, corpusVec, cb, m, who)
       .groupBy(col("id"))
@@ -2142,13 +2105,7 @@ object Similarity {
                      newCorpus: DataFrame, corpusId: String, corpusVec: String,
                      codebook: DataFrame, cbIdCol: String, cbVecCol: String,
                      m: Int, spill: Int = 1): DataFrame = {
-    val cRows = centroids.select(col("cent_id"), col("cent_vec"), col("cent_nrm"))
-      .collect()
-    require(cRows.nonEmpty && cRows.length <= 128,
-      s"appendAnnIndex: ${cRows.length} centroids outside the (0, 128] contract")
-    val cents = cRows.map(r =>
-      Cent(r.get(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
-    val idType = centroids.schema("cent_id").dataType
+    val (cents, idType) = storedCents(centroids, "appendAnnIndex")
     val fresh = newCorpus.join(
       postings.select(col("id").as(corpusId)).distinct(), Seq(corpusId),
       "left_anti")
@@ -2171,35 +2128,42 @@ object Similarity {
                    queries: DataFrame, queryId: String, queryVec: String,
                    codebook: DataFrame, cbIdCol: String, cbVecCol: String,
                    m: Int, k: Int, nprobe: Int = 4): DataFrame = {
-    val cRows = centroids.select(col("cent_id"), col("cent_vec"), col("cent_nrm"))
-      .collect()
-    require(cRows.nonEmpty && cRows.length <= 128,
-      s"annIndexTopK: ${cRows.length} centroids outside the (0, 128] contract")
-    val cents = cRows.map(r =>
-      Cent(r.get(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
-    val idType = centroids.schema("cent_id").dataType
-    val probes = assignCents(cents, idType,
-        queries.withColumn("_qnrm", norm(col(queryVec))), queryVec,
-        col("_qnrm"), nprobe)
+    val (cents, idType) = storedCents(centroids, "annIndexTopK")
+    val probes = assignCents(cents, idType, queries, queryVec, nprobe)
       .select(col(queryId).cast("long").as("query_id"),
         col("_cent_id").as("cent_id"))
     val cb = collectCodebook(codebook, cbIdCol, cbVecCol, "annIndexTopK")
-    val dt = adcTable(queries, queryId, queryVec, cb, m, "annIndexTopK")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist"), col("neighbor_id"))
-    postings.join(broadcast(probes), "cent_id")
+    storeAdcTopK(postings, probes,
+      adcTable(queries, queryId, queryVec, cb, m, "annIndexTopK"), k)
+  }
+
+  /** A persisted [[buildAnnIndex]] quantizer back on the driver, held
+    * to the (0, 128] literal-assignment contract, with its id type. */
+  private def storedCents(centroids: DataFrame, who: String)
+      : (Array[Cent], org.apache.spark.sql.types.DataType) = {
+    val cRows = centroids.select(col("cent_id"), col("cent_vec"), col("cent_nrm"))
+      .collect()
+    require(cRows.nonEmpty && cRows.length <= 128,
+      s"$who: ${cRows.length} centroids outside the (0, 128] contract")
+    (cRows.map(r => Cent(r.get(0), r.getSeq[Double](1).toArray, r.getDouble(2))),
+      centroids.schema("cent_id").dataType)
+  }
+
+  /** Store-postings candidate source + ADC score + rank: the members
+    * of each query's probed lists (`probes`: query_id, cent_id), one
+    * row per (query, id) BEFORE the inline codes explode — a pair met
+    * in several spilled lists must not double its m codes into the
+    * sum — then the broadcast ADC table `dt`. Shared by
+    * [[annIndexTopK]] and [[storeAdcPortable]]. */
+  private def storeAdcTopK(postings: DataFrame, probes: DataFrame,
+                           dt: DataFrame, k: Int): DataFrame =
+    adcTopK(postings.join(broadcast(probes), "cent_id")
       .select(col("query_id"), col("id"), col("codes"))
       .dropDuplicates("query_id", "id")
       .select(col("query_id"), col("id"),
         posexplode(col("codes")).as(Seq("sub", "code")))
       .withColumn("sub", col("sub").cast("long"))
-      .join(broadcast(dt), Seq("query_id", "sub", "code"))
-      .groupBy(col("query_id"), col("id").as("neighbor_id"))
-      .agg(round(sum(col("_d").cast("decimal(24,8)")).cast("double"), 6)
-        .as("adc_dist"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
+      .join(broadcast(dt), Seq("query_id", "sub", "code")), k)
 
   /** PORTABLE persisted-ANN store build — the oracle-exact twin of
     * [[buildAnnIndex]] (r15 verdict task 4: extend the s32 exact-Lloyd
@@ -2224,16 +2188,8 @@ object Similarity {
       s"buildPortableAnnStore: centroid matrix must be k x $dims")
     val lists = kmeansAssign(corpus, corpusId, corpusVec, cents, dims)
       .select(col("id"), col("cluster").as("cent_id"))
-    val cb = collectCodebook(codebook, cbIdCol, cbVecCol,
+    postingsOf(lists, corpus, corpusId, corpusVec, codebook, cbIdCol, cbVecCol, m,
       "buildPortableAnnStore")
-    val codes = pqCodesFrame(corpus, corpusId, corpusVec, cb, m,
-        "buildPortableAnnStore")
-      .groupBy(col("id"))
-      .agg(expr(
-        "transform(array_sort(collect_list(struct(sub, code))), x -> x.code)")
-        .as("codes"))
-    lists.join(codes, "id")
-      .select(col("cent_id"), col("id"), col("codes"))
   }
 
   /** PORTABLE store-served ADC top-k — the oracle-exact twin of
@@ -2255,31 +2211,12 @@ object Similarity {
                        dims: Int): DataFrame = {
     require(k >= 1 && nprobe >= 1 && nprobe <= cents.length,
       s"storeAdcPortable: bad k=$k nprobe=$nprobe over ${cents.length} lists")
-    val probes = queries.filter(size(col(queryVec)) === dims)
-      .select(col(queryId).cast("long").as("query_id"),
-        transform(col(queryVec),
-          x => round(round(x.cast("double"), 6) * lit(1e6), 0).cast("long"))
-          .as("_q6"))
-      .withColumn("_probe",
-        slice(array_sort(centDists(cents, col("_q6"))), 1, nprobe))
-      .select(col("query_id"),
-        explode(col("_probe").getField("j")).as("cent_id"))
+    val probes = microProbe(queries.select(col(queryId).cast("long").as("query_id"),
+        col(queryVec).as("_qv")), "_qv", cents, nprobe, dims, "cent_id")
+      .select(col("query_id"), col("cent_id"))
     val cb = collectCodebook(codebook, cbIdCol, cbVecCol, "storeAdcPortable")
-    val dt = adcTable(queries, queryId, queryVec, cb, m, "storeAdcPortable")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist"), col("neighbor_id"))
-    postings.join(broadcast(probes), "cent_id")
-      .select(col("query_id"), col("id"), col("codes"))
-      .dropDuplicates("query_id", "id")
-      .select(col("query_id"), col("id"),
-        posexplode(col("codes")).as(Seq("sub", "code")))
-      .withColumn("sub", col("sub").cast("long"))
-      .join(broadcast(dt), Seq("query_id", "sub", "code"))
-      .groupBy(col("query_id"), col("id").as("neighbor_id"))
-      .agg(round(sum(col("_d").cast("decimal(24,8)")).cast("double"), 6)
-        .as("adc_dist"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    storeAdcTopK(postings, probes,
+      adcTable(queries, queryId, queryVec, cb, m, "storeAdcPortable"), k)
   }
 
   /** RESIDUAL-encoded IVF-PQ — the actual FAISS IVFPQ layout (Jégou
@@ -2343,9 +2280,7 @@ object Similarity {
     // assign+residual pass otherwise (codebook training collect, the
     // encode scan, the list join) — the semDedup broadcast-path
     // precedent; the final small ranked frame seals over it below
-    val assigned = assignCents(cents, idType,
-        corpus.withColumn("_cnrm", norm(col(corpusVec))), corpusVec,
-        col("_cnrm"), 1)
+    val assigned = assignCents(cents, idType, corpus, corpusVec, 1)
       .select(col(corpusId).as("id"), col("_cent_id"),
         residual(col(corpusVec), col("_cent_id")).as("_res"))
       .persist()
@@ -2361,7 +2296,6 @@ object Similarity {
     require(d % m == 0, s"ivfPqResidualTopK: dim $d not divisible by m=$m")
     val sub = d / m
     val qRows = collectQueries(queries, queryId, queryVec, "ivfPqResidualTopK")
-    def round6(x: Double): Double = graft.functions.PqCodes.round6(x)
     val table = for {
       (qid, qv) <- qRows.toSeq
       // same scoring arithmetic and (score, position) tie-break as the
@@ -2401,15 +2335,8 @@ object Similarity {
     val spark = queries.sparkSession
     import spark.implicits._
     val qt = table.toDF("query_id", "_cent_id", "sub", "code", "_d")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_dist"), col("neighbor_id"))
-    val adcRanked = codes
-      .join(broadcast(qt), Seq("_cent_id", "sub", "code"))
-      .groupBy(col("query_id"), col("id").as("neighbor_id"))
-      .agg(round(sum(col("_d").cast("decimal(24,8)")).cast("double"), 6)
-        .as("adc_dist"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k * refine)
+    val adcRanked = adcTopK(codes.join(broadcast(qt), Seq("_cent_id", "sub", "code")),
+      k * refine)
     val result =
       if (refine == 1) adcRanked
       else refineExact(adcRanked, corpus, corpusId, corpusVec,
@@ -2500,12 +2427,9 @@ object Similarity {
         round(VecDot.dot(col("_v1"), col("_v2")) / (col("_n1") * col("_n2")), 6)
           .as("sim"))
       .persist() // read once per round
-    val wq = Window.partitionBy(col("query_id"))
-    def pick(scored: DataFrame, rankNo: Int): DataFrame = scored
-      .withColumn("_rk", row_number().over(
-        wq.orderBy(col("_score").desc, col("neighbor_id"))))
-      .filter(col("_rk") === 1)
-      .select(col("query_id"), col("neighbor_id"), lit(rankNo).as("mmr_rank"))
+    def pick(scored: DataFrame, rankNo: Int): DataFrame =
+      topK(scored, "query_id", 1, col("_score").desc, col("neighbor_id"))
+        .select(col("query_id"), col("neighbor_id"), lit(rankNo).as("mmr_rank"))
     // each round is SEALED (localCheckpoint): round i's plan refers
     // to selected(i-1) as a materialized leaf, not its whole build
     // tree — unsealed, the unrolled plan doubles per round and
@@ -2551,28 +2475,24 @@ object Similarity {
     * [[lshTopK]] in as the base at index scale, where the same
     * over-fetch logic rides their candidate generation.
     */
-
   def filteredTopKPost(corpus: DataFrame, corpusId: String, corpusVec: String,
                        predicate: org.apache.spark.sql.Column,
                        queries: DataFrame, queryId: String, queryVec: String,
                        k: Int, overFetch: Int = 4): DataFrame = {
     require(overFetch >= 1, s"filteredTopKPost: overFetch $overFetch must be >= 1")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("rank"))
-    bruteTopK(corpus, corpusId, corpusVec, queries, queryId, queryVec,
+    topK(bruteTopK(corpus, corpusId, corpusVec, queries, queryId, queryVec,
         k * overFetch)
       .join(corpus.filter(predicate)
-        .select(col(corpusId).as("neighbor_id")), Seq("neighbor_id"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+        .select(col(corpusId).as("neighbor_id")), Seq("neighbor_id")),
+      "query_id", k, col("rank"))
       .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
   }
 
   /** RECALL@K of an approximate ANN result against an exact one — the
     * accuracy gate a production pipeline runs CONTINUOUSLY beside its
-    * index (today this check lives only in AnnRecallSpec; a 100 TB
-    * deployment re-measures it on every index rebuild and alerts on
-    * drift, exactly like a dedup report). Inputs are two
+    * index (SparkEntry's annRecallGate runs it for s02, s03, s12 and
+    * s13; a 100 TB deployment re-measures it on every index rebuild
+    * and alerts on drift, exactly like a dedup report). Inputs are two
     * (query_id, neighbor_id, rank) frames — any of the family's topK
     * operators. Per query: hits = |approx ∩ exact| within rank ≤ k,
     * denominator = the EXACT side's row count at k (so a corpus

@@ -65,6 +65,22 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("vec_dot"), "dot product must use the codegen expression")
   }
 
+  // WindowGroupLimit nodes (partial + final per top-k window, simple
+  // mode) of every key whose ranking runs through Similarity's shared
+  // rank stage; the recall/equality reports count their brute-force
+  // twin's window too
+  Seq("s02_ann_lsh" -> 8, "s03_ann_ivf" -> 8, "s11_pq_adc" -> 2,
+      "s12_ivf_pq" -> 10, "s14_hamming_topk" -> 3, "s15_matryoshka" -> 3,
+      "s16_knn_graph" -> 2, "s20_int8_ann" -> 2, "s26_ann_index" -> 4,
+      "s32_ivf_exact" -> 2, "s33_lsh_portable" -> 2, "s44_store_adc" -> 2)
+    .foreach { case (key, limits) =>
+      test(s"$key: every top-k keeps its map-side WindowGroupLimit") {
+        val p = SparkEntry.queries(key)(spark, dir).queryExecution
+          .explainString(ExplainMode.fromString("simple"))
+        assert(p.split("WindowGroupLimit").length - 1 == limits, p)
+      }
+    }
+
   test("q20: as-of join is one key shuffle, no join node, no row blowup") {
     val p = SparkEntry.queries("q20_asof_join")(spark, dir).queryExecution
       .explainString(ExplainMode.fromString("simple"))
