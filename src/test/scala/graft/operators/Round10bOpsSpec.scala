@@ -4,108 +4,6 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Prefix-filtered exact all-pairs similarity join (d24). */
-class AllPairsSpec extends SparkSpec {
-  import spark.implicits._
-
-  test("allPairsJaccard equals the exhaustive quadratic join on real docs") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getLong(1), r.getDouble(2))
-    val brute = Dedup.jaccardPairs(
-        Dedup.shingles(docs, "doc_id", "text", 1), 0.5)
-      .collect().map(key).toSet
-    val pf = Dedup.allPairsJaccard(docs, "doc_id", "text", 0.5)
-      .collect().map(key).toSet
-    assert(brute.nonEmpty, "corpus has no near-dup pairs — test is vacuous")
-    assert(pf == brute,
-      s"missed=${(brute -- pf).take(5)} spurious=${(pf -- brute).take(5)}")
-  }
-
-  test("prefix filter finds pairs whose ONLY shared tokens are common words") {
-    // both docs' rarest tokens differ, but J = 3/5 >= 0.5: the prefix
-    // (length |x| - ceil(tau|x|) + 1 = 4-2+1 = 3 of 4 tokens) must
-    // reach deep enough to catch them — a 1-token "rarest only" prefix
-    // heuristic would miss this pair
-    val docs = Seq(
-      (0L, "alpha beta gamma uniquea"),
-      (1L, "alpha beta gamma uniqueb"),
-      (2L, "unrelated words entirely here")).toDF("doc_id", "text")
-    val got = Dedup.allPairsJaccard(docs, "doc_id", "text", 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == Set((0L, 1L)))
-  }
-
-  test("size filter never drops a qualifying cross-size pair") {
-    // |x|=2, |y|=4, intersection 2 => J = 2/4 = 0.5 exactly: sits ON
-    // the tau*|y| <= |x| boundary the size filter must keep closed
-    val docs = Seq(
-      (0L, "tok1 tok2"),
-      (1L, "tok1 tok2 tok3 tok4")).toDF("doc_id", "text")
-    val got = Dedup.allPairsJaccard(docs, "doc_id", "text", 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(got.toSeq == Seq((0L, 1L, 0.5)))
-  }
-
-  test("dirty input: null texts and null ids produce no pairs and no crash") {
-    val docs = Seq(
-      (Some(0L), Some("alpha beta gamma delta")),
-      (Some(1L), Some("alpha beta gamma delta")),
-      (Some(2L), None),                       // null text: no tokens
-      (None, Some("alpha beta gamma delta"))) // null id: no valid pair side
-      .toDF("doc_id", "text")
-    val got = Dedup.allPairsJaccard(docs, "doc_id", "text", 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(got.toSeq == Seq((0L, 1L)))
-  }
-
-  test("tau outside (0,1] is rejected") {
-    val docs = Seq((0L, "a b")).toDF("doc_id", "text")
-    intercept[IllegalArgumentException] {
-      Dedup.allPairsJaccard(docs, "doc_id", "text", 0.0)
-    }
-    intercept[IllegalArgumentException] {
-      Dedup.allPairsJaccard(docs, "doc_id", "text", 1.5)
-    }
-  }
-
-  test("candidate-explosion guard trips on a degenerate unigram corpus") {
-    // 80 docs over a 4-word shared vocabulary: every doc's word SET is
-    // near-identical, so at tau=0.25 the prefix self-join emits close
-    // to the full 80*79/2 quadratic candidate set — exactly the shape
-    // the guard exists to catch before the verify join pays for it
-    val docs = (0 until 80).map(i =>
-      (i.toLong, s"alpha beta gamma ${if (i % 2 == 0) "delta" else "epsilon"}"))
-      .toDF("doc_id", "text")
-    val e = intercept[IllegalArgumentException] {
-      Dedup.allPairsJaccard(docs, "doc_id", "text", tau = 0.25,
-        maxCandidateFactor = Some(4.0)).collect()
-    }
-    assert(e.getMessage.contains("candidate pairs exceed"), e.getMessage)
-    // the same guard passes on a healthy 3-gram configuration where
-    // candidates track the true pair count
-    val ok = Dedup.allPairsJaccard(docs, "doc_id", "text", tau = 0.8,
-      shingleN = 3, maxCandidateFactor = Some(64.0)).collect()
-    assert(ok.nonEmpty) // the even/odd twins are exact 3-gram dups
-  }
-
-  test("d24's production guard (tau=0.5, unigram, 256x) trips past 512 docs") {
-    // the exact d24 call-site configuration: at 256x the cap sits just
-    // above the full quadratic for n=500 (the verify corpus — cannot
-    // trip there), but a degenerate shared-vocabulary corpus one size
-    // up crosses it: 600 near-identical word sets emit ~600*599/2 =
-    // 179,700 candidates > 256*600 = 153,600
-    val docs = (0 until 600).map(i =>
-      (i.toLong, s"alpha beta gamma ${if (i % 2 == 0) "delta" else "epsilon"}"))
-      .toDF("doc_id", "text")
-    val e = intercept[IllegalArgumentException] {
-      Dedup.allPairsJaccard(docs, "doc_id", "text", tau = 0.5,
-        maxCandidateFactor = Some(256.0)).collect()
-    }
-    assert(e.getMessage.contains("candidate pairs exceed"), e.getMessage)
-  }
-}
-
 /** Session path mining (r21). */
 class SessionPathsSpec extends SparkSpec {
   import spark.implicits._

@@ -186,88 +186,3 @@ class BpeSpec extends SparkSpec {
     assert(counts == Map(1L -> 0L, 2L -> 1L, 3L -> 2L))
   }
 }
-
-/** Signature-store dedup (d25): near-dedup new docs against a
-  * persisted k=8 portable MinHash store, no old text in the plan.
-  */
-class SigStoreDedupSpec extends SparkSpec {
-  import spark.implicits._
-
-  private val oldDocs = Seq(
-    (1L, "the quick brown fox jumps over the lazy dog again and again today"),
-    (2L, "completely different content about distributed query engines at scale"))
-    .toDF("doc_id", "text")
-
-  test("an identical new doc matches its stored twin at 8/8; unrelated docs stay silent") {
-    val newDocs = Seq(
-      (10L, "the quick brown fox jumps over the lazy dog again and again today"),
-      (11L, "nothing in common with anything stored before this moment arrived"))
-      .toDF("doc_id", "text")
-    val store = Dedup.portableSignatureStore(oldDocs, "doc_id", "text")
-    val got = Dedup.sigStoreDedup(store, newDocs, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    assert(got.toSeq == Seq((10L, 1L, 8L, 1.0)))
-  }
-
-  test("the store survives a parquet round-trip (the artifact is the contract)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sigstore").toFile
-    Dedup.portableSignatureStore(oldDocs, "doc_id", "text")
-      .write.mode("overwrite").parquet(dir.getAbsolutePath)
-    val reloaded = spark.read.parquet(dir.getAbsolutePath)
-    val newDocs = Seq(
-      (10L, "the quick brown fox jumps over the lazy dog again and again today"))
-      .toDF("doc_id", "text")
-    val got = Dedup.sigStoreDedup(reloaded, newDocs, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(got.toSeq == Seq((10L, 1L, 8L)))
-    // and the store really is text-free: ~3 narrow columns
-    assert(reloaded.columns.sorted.toSeq == Seq("i", "id", "sig"))
-  }
-
-  test("estimated jaccard tracks the true jaccard on real docs") {
-    // the k=8 estimator is unbiased (E[matches/k] = J) but coarse;
-    // this gate pins its realized quality on the sf0.01 corpus so a
-    // hash-family or banding regression that decorrelates the
-    // estimate fails loudly. Deterministic — exact regression values.
-    val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-      .filter(col("doc_id") < 500)
-    val store = Dedup.portableSignatureStore(
-      docs.filter(col("doc_id") < 250), "doc_id", "text")
-    val est = Dedup.sigStoreDedup(store, docs.filter(col("doc_id") >= 250),
-        "doc_id", "text")
-      .select(col("doc_id"), col("matched_id"), col("est_jaccard"))
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    assert(est.nonEmpty, "no pairs — gate is vacuous")
-    // true jaccard over the same 3-gram shingle sets, text-side
-    val ids = est.keySet.flatMap(p => Seq(p._1, p._2))
-    val sh = Dedup.shingles(docs.filter(col("doc_id").isin(ids.toSeq: _*)),
-        "doc_id", "text", 3)
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val errs = est.map { case ((a, b), e) =>
-      val (sa, sb) = (sh(a), sh(b))
-      val j = (sa intersect sb).size.toDouble / (sa union sb).size
-      math.abs(e - j)
-    }
-    val mae = errs.sum / errs.size
-    info(f"pairs=${est.size} MAE=$mae%.3f max=${errs.max}%.3f")
-    // measured 0.040 / 0.114 (deterministic) — gates within a small
-    // slack of measured, the round-11 gate discipline
-    assert(mae <= 0.06, f"estimator MAE regressed: $mae%.3f (measured 0.040)")
-    assert(errs.max <= 0.16, f"estimator worst error regressed: ${errs.max}%.3f (measured 0.114)")
-  }
-
-  test("stored-vs-stored pairs never surface") {
-    // two identical OLD docs: a self-dedup would pair them; the store
-    // contract only reports incoming-vs-stored
-    val dupOld = Seq(
-      (1L, "same text here for both of the stored documents in this case"),
-      (2L, "same text here for both of the stored documents in this case"))
-      .toDF("doc_id", "text")
-    val store = Dedup.portableSignatureStore(dupOld, "doc_id", "text")
-    val newDocs = Seq((10L, "fresh unrelated arrival with its own words"))
-      .toDF("doc_id", "text")
-    val got = Dedup.sigStoreDedup(store, newDocs, "doc_id", "text").collect()
-    assert(got.isEmpty)
-  }
-}

@@ -6,8 +6,7 @@ import org.apache.spark.sql.execution.ExplainMode
 import graft.SparkSpec
 
 /** Round-9 operators: BM25 retrieval, DSIR importance weights,
-  * winnowing fingerprints, CCNet perplexity buckets, rolling z-score
-  * anomaly detection.
+  * CCNet perplexity buckets, rolling z-score anomaly detection.
   */
 class Bm25Spec extends SparkSpec {
   import spark.implicits._
@@ -85,98 +84,6 @@ class DsirSpec extends SparkSpec {
       .orderBy("id").collect()
     // target speaks "t": the five t-docs outweigh r-docs; lowest ids win ties
     assert(out.map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L))
-  }
-}
-
-class WinnowingSpec extends SparkSpec {
-  import spark.implicits._
-
-  test("a shared substring of >= w+k-1 tokens guarantees a shared fingerprint") {
-    // winnowing guarantee: window w=4 of k=4-gram hashes covers any
-    // 7-token match; the two docs share an 8-token phrase
-    val docs = Seq(
-      (1L, "one two three four five six seven eight unique1 tail1"),
-      (2L, "prefix2 one two three four five six seven eight other2"),
-      (3L, "totally different words with no overlap at all here")).toDF("id", "text")
-    val out = Dedup.winnowingPairs(docs, "id", "text", k = 4, w = 4, minShared = 1)
-      .collect()
-    assert(out.map(r => (r.getLong(0), r.getLong(1))).toSet == Set((1L, 2L)))
-  }
-
-  test("identical docs share their full distinct-fingerprint set") {
-    val text = "the quick brown fox jumps over the lazy dog again and again"
-    val docs = Seq((1L, text), (2L, text)).toDF("id", "text")
-    val pair = Dedup.winnowingPairs(docs, "id", "text", k = 4, w = 4, minShared = 1)
-      .collect()
-    assert(pair.length == 1)
-    val nShared = pair(0).getLong(2)
-    assert(nShared >= 1)
-    // docs shorter than k+w-1 grams still fingerprint every full window
-    val grams = text.split(" ").length - 3
-    assert(nShared <= grams)
-  }
-
-  test("maxBucket prunes degenerate fingerprint buckets before the self-join") {
-    // 20 docs all sharing one boilerplate sentence: every pair collides
-    // exactly through that bucket; capping at 10 removes it
-    val docs = (1L to 20L).map(i =>
-      (i, s"subscribe to our newsletter today for great offers u$i v$i w$i x$i"))
-      .toDF("id", "text")
-    val exact = Dedup.winnowingPairs(docs, "id", "text", k = 4, w = 4, minShared = 1)
-    val capped = Dedup.winnowingPairs(docs, "id", "text", k = 4, w = 4,
-      minShared = 1, maxBucket = Some(10))
-    assert(exact.count() > 0)
-    assert(capped.count() < exact.count())
-  }
-
-  test("disjoint docs produce no pairs") {
-    val docs = Seq(
-      (1L, "aa bb cc dd ee ff gg hh"),
-      (2L, "ii jj kk ll mm nn oo pp")).toDF("id", "text")
-    assert(Dedup.winnowingPairs(docs, "id", "text", k = 4, w = 4, minShared = 1)
-      .count() == 0)
-  }
-}
-
-class CutDupSubstringsSpec extends SparkSpec {
-  import spark.implicits._
-
-  test("corpus-duplicated k-grams are cut; unique text survives in order") {
-    val docs = Seq(
-      (1L, "shared slogan goes here first unique one body"),
-      (2L, "shared slogan goes here second unique two body"),
-      (3L, "completely different text with no duplication whatsoever")).toDF("id", "text")
-    val out = Dedup.cutDupSubstrings(docs, "id", "text", k = 4)
-      .orderBy("id").collect()
-    // "shared slogan goes here" is the only 4-gram occurring twice
-    assert(out(0).getString(1) == "first unique one body")
-    assert(out(0).getLong(2) == 8L && out(0).getLong(3) == 4L)
-    assert(out(1).getString(1) == "second unique two body")
-    assert(out(2).getString(1) == docs.collect()(2).getString(1))
-    assert(out(2).getLong(3) == 0L)
-  }
-
-  test("a fully duplicated doc keeps an empty text_clean, not a missing row") {
-    val docs = Seq(
-      (1L, "a b c d"), (2L, "a b c d"),
-      (3L, "unique words entirely here")).toDF("id", "text")
-    val out = Dedup.cutDupSubstrings(docs, "id", "text", k = 4)
-      .orderBy("id").collect()
-    assert(out.length == 3)
-    assert(out(0).getString(1) == "" && out(0).getLong(3) == 4L)
-    assert(out(1).getString(1) == "")
-  }
-
-  test("cut coverage equals dupSubstringSpans' span accounting") {
-    val docs = Seq(
-      (1L, "x y z w shared phrase of four tokens t1"),
-      (2L, "a b shared phrase of four tokens c d e")).toDF("id", "text")
-    val cut = Dedup.cutDupSubstrings(docs, "id", "text", k = 4)
-      .select("id", "n_toks", "n_dup_toks").orderBy("id").collect()
-    val spans = Dedup.dupSubstringSpans(docs, "id", "text", k = 4)
-      .select("id", "n_toks", "n_dup_toks").orderBy("id").collect()
-    assert(cut.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq ==
-      spans.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
   }
 }
 
@@ -823,75 +730,6 @@ class C4LineFilterSpec extends SparkSpec {
     val p = TextStats.c4LineFilter(docs, "id", "text")
       .queryExecution.explainString(ExplainMode.fromString("simple"))
     assert(!p.contains("Exchange"), p)
-  }
-}
-
-class SpanDedupSpec extends SparkSpec {
-  import spark.implicits._
-
-  test("the corpus-first occurrence of a duplicated span survives; later copies lose those sentences") {
-    val intro = "one two. three four! five six?"
-    val docs = Seq(
-      (1L, s"$intro unique seven."),
-      (2L, s"$intro another ending."),
-      (3L, "totally unrelated. content lives. here today. forever more."))
-      .toDF("doc_id", "text")
-    val out = Dedup.spanDedup(docs, "doc_id", "text", spanLen = 3)
-      .as[(Long, String, Long, Long)].collect().sortBy(_._1)
-    // doc 1 keeps everything (it is the winner of the intro span)
-    assert(out(0) == ((1L, "one two. three four! five six? unique seven.", 4L, 0L)))
-    // doc 2 loses the three intro sentences, keeps its own ending
-    assert(out(1) == ((2L, "another ending.", 4L, 3L)))
-    // doc 3 shares nothing and survives whole
-    assert(out(2)._4 == 0L && out(2)._3 == 4L)
-  }
-
-  test("a repeated span INSIDE one document collapses to its first occurrence") {
-    val docs = Seq(
-      (1L, "alpha beta. gamma delta. epsilon zeta. alpha beta. gamma delta. epsilon zeta."))
-      .toDF("doc_id", "text")
-    val out = Dedup.spanDedup(docs, "doc_id", "text", spanLen = 3)
-      .as[(Long, String, Long, Long)].collect()
-    assert(out.length == 1)
-    // sentences 3..5 form the same span as 0..2 and are removed
-    assert(out(0)._2 == "alpha beta. gamma delta. epsilon zeta.")
-    assert(out(0)._3 == 6L && out(0)._4 == 3L)
-  }
-
-  test("docs with fewer sentences than the span length survive whole; a fully-duplicated doc keeps empty text") {
-    val span = "cloned first. cloned second. cloned third."
-    val docs = Seq(
-      (1L, span),
-      (2L, span),            // all three sentences are one duplicated span
-      (3L, "short one. two.")) // only 2 sentences: no spans
-      .toDF("doc_id", "text")
-    val out = Dedup.spanDedup(docs, "doc_id", "text", spanLen = 3)
-      .as[(Long, String, Long, Long)].collect().sortBy(_._1)
-    assert(out(0)._4 == 0L)
-    assert(out(1) == ((2L, "", 3L, 3L)))
-    assert(out(2) == ((3L, "short one. two.", 2L, 0L)))
-  }
-
-  test("span hashing is row-local and the shuffle budget holds") {
-    val docs = Seq((1L, "a b. c d. e f. g h.")).toDF("doc_id", "text")
-    // explain the UNSEALED plan shape: sealing materializes eagerly
-    // and leaves only a checkpoint scan
-    val (raw, spansFrame) = Dedup.spanDedupRaw(docs, "doc_id", "text", 3)
-    val plan = raw.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    // span text never explodes: every Generate emits either the
-    // 16-byte span digests or the (pos, sent) reassembly rows — a
-    // raw-sentence self-join would need a sentence-keyed Exchange.
-    // Pin the budget: winner agg, removals distinct, kept groupBy,
-    // and the final joins — bounded, not corpus-shaped
-    // count SHUFFLE exchange nodes via their detail headers —
-    // "(n) Exchange" — so broadcast exchanges and the duplicate
-    // tree-line mentions don't inflate the tally
-    val exchanges = """\(\d+\) Exchange\b""".r.findAllMatchIn(plan).size
-    assert(exchanges <= 5, s"$exchanges shuffle exchanges:\n$plan")
-    // and the span digests (not span strings) are a join key
-    assert(plan.contains("_h"), plan)
-    spansFrame.unpersist()
   }
 }
 
