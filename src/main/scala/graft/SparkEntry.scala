@@ -333,9 +333,15 @@ object SparkEntry {
   private[graft] object AnnRankings {
     import operators.Similarity
     def emb(s: SparkSession, dir: String): DataFrame = T(s, dir, "embeddings")
-    def embNorm(s: SparkSession, dir: String): DataFrame =
-      emb(s, dir).withColumn("embedding", transform(col("embedding"),
-        x => x.cast("double") / Similarity.norm(col("embedding"))))
+    // the norm is evaluated once per row, outside the lambda: zip_with
+    // pairs each element with it. A norm inside the lambda (or a norm
+    // column, which CollapseProject inlines there) is recomputed per
+    // element.
+    def embNorm(s: SparkSession, dir: String): DataFrame = {
+      val v = col("embedding")
+      emb(s, dir).withColumn("embedding", zip_with(v,
+        array_repeat(Similarity.norm(v), size(v)), (x, n) => x.cast("double") / n))
+    }
     def queriesOf(e: DataFrame): DataFrame = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     def brute(e: DataFrame): DataFrame = {
@@ -883,44 +889,25 @@ object SparkEntry {
       // the exhaustive d04 truth (so banding misses COUNT as false
       // negatives at every threshold), then precision/recall/F1 per
       // min-matches cut — all exact counts, three pinned divisions
-      val sh = Dedup.shingles(T(s, dir, "documents")
-        .filter(col("doc_id") < 500), "doc_id", "text", 3)
       // persisted (r19): THREE consumers read the signature frame
       // (bands, and both sides of the match join) — unpersisted, each
       // re-ran the shingle explode + 8-hash aggregate; the frame is
       // |docs|×8 rows. Sealed away by the result below.
-      val sigs = sh
-        .select(col("id"), explode(sequence(lit(0), lit(7))).as("i"),
-          col("shingle"))
-        .groupBy("id", "i")
-        .agg(min(unhex(md5(concat(col("i"), lit(":"), col("shingle")))))
-          .as("sig"))
-        .persist()
-      val bands = sigs.groupBy(col("id"), expr("i div 2").as("band"))
-        .agg(unhex(md5(concat(
-          min(when(col("i") % 2 === 0, col("sig"))),
-          min(when(col("i") % 2 === 1, col("sig")))))).as("bkey"))
-      val cand = bands.as("a").join(bands.as("b"),
-          col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-            col("a.id") < col("b.id"))
-        .select(col("a.id").as("id1"), col("b.id").as("id2")).distinct()
-      val m = cand
-        .join(sigs.select(col("id").as("id1"), col("i"), col("sig").as("_g1")),
-          Seq("id1"))
-        .join(sigs.select(col("id").as("id2"), col("i"), col("sig").as("_g2")),
-          Seq("id2", "i"))
-        .groupBy(col("id1"), col("id2"))
-        .agg(sum(when(col("_g1") === col("_g2"), 1L).otherwise(0L))
-          .cast("long").as("_m"))
+      val sigs = Dedup.portableSignatureStore(
+        T(s, dir, "documents").filter(col("doc_id") < 500), "doc_id", "text").persist()
+      val bands = Dedup.portableBands(sigs)
+      val m = Dedup.sigMatches(
+        Dedup.bucketPairs(bands, bands, Seq("band", "bkey"), self = true),
+        "id1", sigs, "id2", sigs)
       val truth = queries("d04_ngram_jaccard")(s, dir)
         .select(col("id1"), col("id2"), lit(1L).as("_t"))
       val lab = m.join(truth, Seq("id1", "id2"), "full")
-        .na.fill(0L, Seq("_m", "_t"))
-      val tp = sum(when(col("_m") >= col("min_matches")
+        .na.fill(0L, Seq("matches", "_t"))
+      val tp = sum(when(col("matches") >= col("min_matches")
         && col("_t") === 1L, 1L).otherwise(0L)).cast("long")
-      val fp = sum(when(col("_m") >= col("min_matches")
+      val fp = sum(when(col("matches") >= col("min_matches")
         && col("_t") === 0L, 1L).otherwise(0L)).cast("long")
-      val fn = sum(when(col("_m") < col("min_matches")
+      val fn = sum(when(col("matches") < col("min_matches")
         && col("_t") === 1L, 1L).otherwise(0L)).cast("long")
       val pr = col("tp").cast("double") /
         (col("tp") + col("fp")).cast("double")
@@ -928,7 +915,7 @@ object SparkEntry {
         (col("tp") + col("fn")).cast("double")
       graft.operators.Caching.sealOver(lab
         .select(explode(sequence(lit(1L), lit(8L))).as("min_matches"),
-          col("_m"), col("_t"))
+          col("matches"), col("_t"))
         .groupBy(col("min_matches"))
         .agg(tp.as("tp"), fp.as("fp"), fn.as("fn"))
         .withColumn("p_precision",
@@ -945,52 +932,13 @@ object SparkEntry {
       // the d02 MinHash+LSH pipeline re-run on an md5 hash family that
       // DuckDB can evaluate too, so the ENTIRE chain — signatures →
       // banding → candidate pairs → exact-jaccard verify — is
-      // oracle-exact, not just rows-only. k=8 signatures, 4 bands of
-      // r=2; min over hex strings is a valid minhash (uniform order).
-      // Same shuffle shape as the fast variant: one shingle explode,
-      // one (id, i) aggregate, one band self-join, intersections
-      // computed ONLY for candidate pairs.
-      //
-      // INTERNAL stages run on 16-byte unhex'd digests, not 32-char
-      // hex strings — Spark's BinaryType min is unsigned-byte-ordered
-      // and lowercase hex is order-isomorphic to it, so
-      // min(unhex(x)) == unhex(min(x)) and every stage's DECISIONS
-      // (min sigs, band-bucket equality, shingle-intersection counts)
-      // are bitwise the oracle's while the shuffles carry half the
-      // bytes. Nothing binary surfaces: the output is (id1, id2,
-      // jaccard), identical to the hex chain DuckDB runs.
-      val sh = Dedup.shingles(T(s, dir, "documents").filter(col("doc_id") < 500),
-        "doc_id", "text", 3)
-      val sigs = sh
-        .select(col("id"), explode(sequence(lit(0), lit(7))).as("i"), col("shingle"))
-        .groupBy("id", "i")
-        .agg(min(unhex(md5(concat(col("i"), lit(":"), col("shingle"))))).as("sig"))
-      val bands = sigs.groupBy(col("id"), expr("i div 2").as("band"))
-        .agg(unhex(md5(concat(
-          min(when(col("i") % 2 === 0, col("sig"))),
-          min(when(col("i") % 2 === 1, col("sig")))))).as("bkey"))
-      val cand = bands.as("a").join(bands.as("b"),
-          col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-            col("a.id") < col("b.id"))
-        .select(col("a.id").as("id1"), col("b.id").as("id2")).distinct()
-      val sz = sh.groupBy(col("id")).agg(cnt.as("sz"))
-      // the verify join keys on the shingle DIGEST too: candidate
-      // docs' shingle sets meet on 16 bytes a row instead of the
-      // (longer) shingle text; counts agree with the oracle's
-      // text-keyed join absent an md5 collision, which the signature
-      // stages already presuppose
-      val inter = cand
-        .join(sh.select(col("id").as("id1"), unhex(md5(col("shingle"))).as("s1")), "id1")
-        .join(sh.select(col("id").as("id2"), unhex(md5(col("shingle"))).as("s2")), "id2")
-        .filter(col("s1") === col("s2"))
-        .groupBy("id1", "id2").agg(cnt.as("n"))
-      inter
-        .join(sz.select(col("id").as("id1"), col("sz").as("sz1")), "id1")
-        .join(sz.select(col("id").as("id2"), col("sz").as("sz2")), "id2")
-        .withColumn("jaccard",
-          col("n").cast("double") / (col("sz1") + col("sz2") - col("n")).cast("double"))
-        .filter(col("jaccard") >= 0.5)
-        .select(col("id1"), col("id2"), round(col("jaccard"), 6).as("jaccard"))
+      // oracle-exact, not just rows-only: the self-join form of d14's
+      // portable chain (k=8 signatures, 4 bands of r=2, intersections
+      // computed ONLY for candidate pairs). Internal stages run on
+      // 16-byte unhex'd digests whose decisions are bitwise the hex
+      // chain's; nothing binary surfaces in (id1, id2, jaccard).
+      Dedup.portableNearDup(T(s, dir, "documents").filter(col("doc_id") < 500),
+          None, "doc_id", "text", shingleN = 3, tau = 0.5)
         .orderBy("id1", "id2")
     }),
 

@@ -5,21 +5,36 @@ import org.apache.spark.sql.functions._
 
 /** Deduplication operators for document corpora.
   *
-  * Scale notes (the whole point of each design):
-  *  - exact: one shuffle on the text hash; never materializes pairs.
-  *  - MinHash LSH: shingle explode is a narrow map; signatures are a
-  *    single groupBy(doc); candidate pairs come from a self-join on
-  *    (band, bandHash) buckets — O(sum of bucket^2), never O(n^2).
-  *  - SimHash: same banding trick on 16-bit signature quarters.
-  *  - n-gram Jaccard: exact verification, used on candidate pairs or
-  *    pre-partitioned groups, via a token-join (shuffle on shingle)
-  *    rather than array intersection of collected sets.
+  * Every near-dup pair finder is one chain of shared stages,
+  * signature → bucket join → verify, and only the stage choice differs
+  * between entries:
+  *  - signature: word n-gram [[shingles]] feed the portable k=8 md5
+  *    MinHash ([[portableSigs]], persisted as [[portableSignatureStore]]);
+  *    [[minHashLsh]] and its stream twin hash shingles row-locally into
+  *    xxhash64 band arrays ([[bandHashes]]); SimHash and 4-chunk
+  *    fingerprints band their own bits.
+  *  - bucket join: ONE (band, key) join, [[bucketPairs]] — candidates
+  *    form inside buckets, O(sum of bucket²), never O(n²). The portable
+  *    keys come from [[portableBands]] (4 bands of r=2).
+  *  - verify, on candidate pairs only: exact Jaccard over shingle
+  *    digests ([[verifyJaccard]], ratio [[jaccard]]), the signature
+  *    agreement estimate ([[sigMatches]]), popcount Hamming or
+  *    Levenshtein.
+  * The recall-1.0 rungs skip the signature: [[pairOverlaps]] joins on
+  * the shingle itself and [[allPairsJaccard]] on prefix tokens, both
+  * verifying with the same ratio. Exact dedup is one shuffle on the
+  * text hash ([[normalized]] first for the C4 rung).
   *
-  * Sealing semantics: the pair/candidate entry points that cache
-  * intermediates ([[lshCandidates]], [[minHashLsh]], [[jaccardPairs]],
-  * [[containmentPairs]], [[simHashPairs]], [[simHashPortablePairs]])
-  * return an EAGERLY materialized result via [[Caching.sealOver]] —
-  * construction runs a Spark job, unlike a plain lazy DataFrame. With
+  * Sealing semantics: entries that cache intermediates return an
+  * EAGERLY materialized result via [[Caching.sealOver]] — construction
+  * runs a Spark job, unlike a plain lazy DataFrame. They are
+  * [[incrementalComponents]], [[sigStoreDedup]], [[lshCandidates]],
+  * the [[pairOverlaps]] family ([[jaccardPairs]], [[jaccardPairsSweep]],
+  * [[containmentPairs]], [[lshPlan]]), [[allPairsJaccard]],
+  * [[minHashLsh]], [[simHashPairs]], [[chunkedHammingPairs]] (so
+  * [[simHashPortablePairs]]), [[dupSubstringSpans]], [[spanDedup]],
+  * [[cutDupSubstrings]] and [[allPairsCosine]]; [[sourceOverlapKmv]]
+  * seals its sketch frame at construction too. With
   * `SparkContext.setCheckpointDir` set the sealed result is a reliable
   * checkpoint (survives executor loss); without one it lives in
   * executor storage only — set a checkpoint dir on real clusters.
@@ -56,8 +71,7 @@ object Dedup {
     */
   def normalizedExact(df: DataFrame, idCol: String,
                       textCol: String): DataFrame = {
-    val norm = trim(regexp_replace(regexp_replace(
-      lower(col(textCol)), "[^\\p{L}\\p{N}\\s]", ""), "\\s+", " "))
+    val norm = normalized(col(textCol))
     df.groupBy(xxhash64(norm).as("text_hash"),
         md5(norm.cast("binary")).as("text_md5"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
@@ -84,14 +98,18 @@ object Dedup {
     * normalized text, never documents.
     */
   def streamingNormalizedExact(df: DataFrame, tsCol: String,
-                               textCol: String, delay: String): DataFrame = {
-    val norm = trim(regexp_replace(regexp_replace(
-      lower(col(textCol)), "[^\\p{L}\\p{N}\\s]", ""), "\\s+", " "))
-    df.withColumn("_norm_hash", xxhash64(norm))
+                               textCol: String, delay: String): DataFrame =
+    df.withColumn("_norm_hash", xxhash64(normalized(col(textCol))))
       .withWatermark(tsCol, delay)
       .dropDuplicatesWithinWatermark("_norm_hash")
       .drop("_norm_hash")
-  }
+
+  /** The C4 normalization both exact-dedup rungs key on: lower-case,
+    * strip everything but letters, digits and whitespace, collapse
+    * whitespace runs, trim. */
+  private def normalized(text: Column): Column =
+    trim(regexp_replace(regexp_replace(
+      lower(text), "[^\\p{L}\\p{N}\\s]", ""), "\\s+", " "))
 
   /** Streaming NEAR-dup candidates: each arriving document computes
     * its MinHash signature row-locally (shingles → base hashes →
@@ -126,19 +144,16 @@ object Dedup {
                                  shingleN: Int = 3, numHashes: Int = 16,
                                  bands: Int = 4): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    val r = numHashes / bands
-    // same fused shingle_hashes -> minhash_row pipeline as the batch
-    // path, so batch and streaming band hashes are interchangeable;
-    // docs with no shingles are dropped for the same degenerate-bucket
-    // reason as in minHashLsh
+    // same fused shingle_hashes -> minhash_row pipeline and the same
+    // band expression as the batch path, so batch and streaming band
+    // hashes are interchangeable; docs with no shingles are dropped for
+    // the same degenerate-bucket reason as in minHashLsh
     val banded = df
       .withColumn("_hs", graft.functions.ShingleHashes.of(col(textCol), shingleN))
       .filter(size(col("_hs")) > 0)
       .withColumn("_sig", graft.functions.MinHashRow.sig(col("_hs"), numHashes))
       .select(col(idCol).as("id"), col(tsCol).as("ts"),
-        posexplode(array((0 until bands).map { b =>
-          xxhash64((b * r until (b + 1) * r).map(i => element_at(col("_sig"), i + 1)): _*)
-        }: _*)).as(Seq("band", "band_hash")))
+        posexplode(bandHashes(col("_sig"), numHashes, bands)).as(Seq("band", "band_hash")))
       .withWatermark("ts", delay)
 
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -521,20 +536,141 @@ object Dedup {
   /** Multiset variant (no distinct shuffle) — enough for MinHash
     * signatures, whose element-wise min ignores duplicates.
     */
-  def shinglesRaw(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    val toks = split(lower(col(textCol)), "\\s+")
+  def shinglesRaw(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     if (n == 1)
-      df.select(col(idCol).as("id"), explode(toks).as("shingle"))
-    else {
-      // sliding n-gram over the token array via the compiled
-      // shingle_strings expression — the combinator form
-      // (transform + slice + concat_ws) runs interpreted per gram;
-      // gram strings are byte-identical either way
-      df.withColumn("_toks", toks)
+      df.select(col(idCol).as("id"), explode(tokens(col(textCol))).as("shingle"))
+    else
+      df.withColumn("_toks", tokens(col(textCol)))
         .filter(size(col("_toks")) >= n)
-        .select(col(idCol).as("id"),
-          explode(graft.functions.ShingleStrings.of(col("_toks"), n)).as("shingle"))
+        .select(col(idCol).as("id"), explode(shingleArray(col("_toks"), n)).as("shingle"))
+
+  /** A text's word tokens: lower-cased and split on whitespace runs.
+    * Leading or trailing whitespace yields an empty token, and it is
+    * kept: an empty or blank text is the one-shingle set {""}. */
+  private def tokens(text: Column): Column = split(lower(text), "\\s+")
+
+  /** The shingle definition of [[shinglesRaw]] and of the stream
+    * twin's row-local signature: the tokens themselves at n = 1, else
+    * the sliding n-grams of the compiled shingle_strings expression
+    * (the combinator form, transform + slice + concat_ws, runs
+    * interpreted per gram; gram strings are byte-identical either
+    * way). Repeats are kept. */
+  private def shingleArray(toks: Column, n: Int): Column =
+    if (n == 1) toks else graft.functions.ShingleStrings.of(toks, n)
+
+  /** Signature stage of the portable chain: k=8 md5 MinHash
+    * components, sig_i = min over the doc's shingles of
+    * unhex(md5("i:shingle")), as (id, i, sig) from (id, shingle).
+    * Internal digests are the 16-byte unhex'd form: Spark's BinaryType
+    * min is unsigned-byte-ordered and lowercase hex is
+    * order-isomorphic to it, so min(unhex(x)) == unhex(min(x)) and
+    * every decision is bitwise the hex chain's (the one an oracle
+    * replays), at half the shuffle width. */
+  private[graft] def portableSigs(sh: DataFrame): DataFrame = sh
+    .select(col("id"), explode(sequence(lit(0), lit(7))).as("i"), col("shingle"))
+    .groupBy("id", "i")
+    .agg(min(unhex(md5(concat(col("i"), lit(":"), col("shingle"))))).as("sig"))
+
+  /** Bucket keys of the portable chain: 4 bands of r=2 over the k=8
+    * components, bkey = unhex(md5(sig_2b ++ sig_2b+1)), as
+    * (id, band, bkey). */
+  private[graft] def portableBands(sigs: DataFrame): DataFrame = sigs
+    .groupBy(col("id"), expr("i div 2").as("band"))
+    .agg(unhex(md5(concat(
+      min(when(col("i") % 2 === 0, col("sig"))),
+      min(when(col("i") % 2 === 1, col("sig")))))).as("bkey"))
+
+  /** Bucket keys of the fused MinHash chain: `bands` xxhash64 band
+    * hashes over consecutive rows of a `numHashes`-long signature
+    * array. [[minHashLsh]] and [[streamingNearDupCandidates]] both
+    * band through it, so their bucket keys are interchangeable. */
+  private def bandHashes(sig: Column, numHashes: Int, bands: Int): Column = {
+    val r = numHashes / bands
+    array((0 until bands).map { b =>
+      xxhash64((b * r until (b + 1) * r).map(i => element_at(sig, i + 1)): _*)
+    }: _*)
+  }
+
+  /** Bucket stage: every pair of an `a` row and a `b` row that agree
+    * on all `keys` (a band and its bucket key), once. A `self` join
+    * pairs a frame with itself and keeps a.id < b.id only. `out`
+    * selects the pair through the `a.`/`b.` qualifiers; payload
+    * columns (a signature, fingerprint chunks) ride along in it, so
+    * the verify needs no join back. */
+  private[graft] def bucketPairs(a: DataFrame, b: DataFrame, keys: Seq[String],
+                                 self: Boolean,
+                                 out: Seq[Column] = Seq(col("a.id").as("id1"),
+                                   col("b.id").as("id2"))): DataFrame = {
+    val same = keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _)
+    a.as("a").join(b.as("b"), if (self) same && col("a.id") < col("b.id") else same)
+      .select(out: _*)
+      .distinct()
+  }
+
+  /** Jaccard ratio from an intersection count and the two set sizes. */
+  private def jaccard(inter: Column, sz1: Column, sz2: Column): Column =
+    inter.cast("double") / (sz1 + sz2 - inter).cast("double")
+
+  /** Per-id set size (id, sz) of an (id, element) table. */
+  private def setSizes(sh: DataFrame): DataFrame =
+    sh.groupBy(col("id")).agg(count(lit(1)).as("sz"))
+
+  /** (id, tok) 16-byte shingle digests: joins on them agree with a
+    * shingle-keyed join absent an md5 collision, which the signature
+    * stages already presuppose. */
+  private def digests(sh: DataFrame): DataFrame =
+    sh.select(col("id"), unhex(md5(col("shingle"))).as("tok"))
+
+  /** Verify stage: exact Jaccard of the candidate pairs (id1, id2)
+    * only. `d1`/`d2` are each side's (id, tok) element digests and
+    * `sz1`/`sz2` its (id, sz) set sizes; the intersection is a
+    * digest-equality count over candidate docs' elements. Output:
+    * (id1, id2, jaccard) at or above `tau`, jaccard rounded to 6dp
+    * after the cut. */
+  private def verifyJaccard(cand: DataFrame, d1: DataFrame, sz1: DataFrame,
+                            d2: DataFrame, sz2: DataFrame, tau: Double): DataFrame =
+    cand
+      .join(d1.select(col("id").as("id1"), col("tok").as("s1")), "id1")
+      .join(d2.select(col("id").as("id2"), col("tok").as("s2")), "id2")
+      .filter(col("s1") === col("s2"))
+      .groupBy("id1", "id2").agg(count(lit(1)).as("n"))
+      .join(sz1.select(col("id").as("id1"), col("sz").as("sz1")), "id1")
+      .join(sz2.select(col("id").as("id2"), col("sz").as("sz2")), "id2")
+      .withColumn("jaccard", jaccard(col("n"), col("sz1"), col("sz2")))
+      .filter(col("jaccard") >= tau)
+      .select(col("id1"), col("id2"), round(col("jaccard"), 6).as("jaccard"))
+
+  /** Verify stage of the signature store: per candidate pair (`l`,
+    * `r`), how many of the k=8 portable components of `lSigs` and
+    * `rSigs` agree, as `matches` — E[matches/8] = J, the MinHash
+    * unbiased estimator. Touches candidate pairs only, 8 rows each. */
+  private[graft] def sigMatches(cand: DataFrame, l: String, lSigs: DataFrame,
+                                r: String, rSigs: DataFrame): DataFrame =
+    cand
+      .join(lSigs.select(col("id").as(l), col("i"), col("sig").as("_s1")), l)
+      .join(rSigs.select(col("id").as(r), col("i"), col("sig").as("_s2")), Seq(r, "i"))
+      .groupBy(l, r)
+      .agg(sum(when(col("_s1") === col("_s2"), 1L).otherwise(0L)).as("matches"))
+
+  /** The portable MinHash chain, end to end: [[shingles]] →
+    * [[portableSigs]] → [[portableBands]] → [[bucketPairs]] →
+    * [[verifyJaccard]] over shingle digests. `b = None` is the self
+    * form (d11: pairs within `a`, id1 < id2, one shingle frame for
+    * both sides); `Some(b)` pairs `a` rows with `b` rows only (d14).
+    * The md5 family keeps every stage oracle-expressible. Output:
+    * (id1, id2, jaccard) at or above `tau`.
+    */
+  private[graft] def portableNearDup(a: DataFrame, b: Option[DataFrame],
+                                     idCol: String, textCol: String,
+                                     shingleN: Int, tau: Double): DataFrame = {
+    def side(df: DataFrame) = {
+      val sh = shingles(df, idCol, textCol, shingleN)
+      (sh, portableBands(portableSigs(sh)), setSizes(sh))
     }
+    val (shA, bandsA, szA) = side(a)
+    val (shB, bandsB, szB) = b.fold((shA, bandsA, szA))(side)
+    verifyJaccard(bucketPairs(bandsA, bandsB, Seq("band", "bkey"), self = b.isEmpty),
+      digests(shA), szA, digests(shB), szB, tau)
   }
 
   /** Cross-corpus near-dedup: flag INCOMING documents that are near
@@ -543,22 +679,15 @@ object Dedup {
     * self-join is the wrong shape because existing-vs-existing pairs
     * are not wanted.
     *
-    * Same sublinear chain as the portable MinHash self-dedup (k=8 md5
-    * signatures, 4 bands of r=2), but the band join is incoming ×
-    * existing: candidates form only where a band bucket holds docs
-    * from BOTH corpora, then the exact jaccard verifies candidates
-    * only. The md5 family keeps every stage oracle-expressible.
+    * The portable MinHash chain ([[portableNearDup]]: k=8 md5
+    * signatures, 4 bands of r=2) with an incoming × existing band
+    * join: candidates form only where a band bucket holds docs from
+    * BOTH corpora, then the exact jaccard verifies candidates only.
     *
     * At 100 TB: each side shuffles (id, band, bkey) triples — the
     * bkey a 16-byte unhex'd digest, never text; the verify join
     * touches candidate pairs only, keyed on shingle digests (16
-    * bytes) rather than shingle strings. Binary stages make bitwise
-    * the hex chain's decisions: Spark's BinaryType min is
-    * unsigned-byte-ordered and lowercase hex is order-isomorphic to
-    * it, so min(unhex(x)) == unhex(min(x)), band-bucket equality is
-    * digest equality either way, and intersection counts agree with
-    * a text-keyed join absent an md5 collision (which the signature
-    * stages already presuppose). Output: (doc_id, matched_id,
+    * bytes) rather than shingle strings. Output: (doc_id, matched_id,
     * jaccard) for every incoming doc × existing doc pair at or above
     * `minJaccard` — no binary surfaces, so the DuckDB twin runs the
     * hex chain unchanged.
@@ -566,40 +695,9 @@ object Dedup {
   def crossNearDupPortable(incoming: DataFrame, existing: DataFrame,
                            idCol: String, textCol: String,
                            shingleN: Int = 3,
-                           minJaccard: Double = 0.5): DataFrame = {
-    def portableBands(df: DataFrame): (DataFrame, DataFrame) = {
-      val sh = shingles(df, idCol, textCol, shingleN)
-      val sigs = sh
-        .select(col("id"), explode(sequence(lit(0), lit(7))).as("i"), col("shingle"))
-        .groupBy("id", "i")
-        .agg(min(unhex(md5(concat(col("i"), lit(":"), col("shingle"))))).as("sig"))
-      val bands = sigs.groupBy(col("id"), expr("i div 2").as("band"))
-        .agg(unhex(md5(concat(
-          min(when(col("i") % 2 === 0, col("sig"))),
-          min(when(col("i") % 2 === 1, col("sig")))))).as("bkey"))
-      (sh, bands)
-    }
-    val (shIn, bandsIn) = portableBands(incoming)
-    val (shEx, bandsEx) = portableBands(existing)
-    val cand = bandsIn.as("a").join(bandsEx.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey"))
-      .select(col("a.id").as("id1"), col("b.id").as("id2")).distinct()
-    val szIn = shIn.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-    val szEx = shEx.groupBy(col("id")).agg(count(lit(1)).as("sz"))
-    val inter = cand
-      .join(shIn.select(col("id").as("id1"), unhex(md5(col("shingle"))).as("s1")), "id1")
-      .join(shEx.select(col("id").as("id2"), unhex(md5(col("shingle"))).as("s2")), "id2")
-      .filter(col("s1") === col("s2"))
-      .groupBy("id1", "id2").agg(count(lit(1)).as("n"))
-    inter
-      .join(szIn.select(col("id").as("id1"), col("sz").as("sz1")), "id1")
-      .join(szEx.select(col("id").as("id2"), col("sz").as("sz2")), "id2")
-      .withColumn("jaccard",
-        col("n").cast("double") / (col("sz1") + col("sz2") - col("n")).cast("double"))
-      .filter(col("jaccard") >= minJaccard)
-      .select(col("id1").as("doc_id"), col("id2").as("matched_id"),
-        round(col("jaccard"), 6).as("jaccard"))
-  }
+                           minJaccard: Double = 0.5): DataFrame =
+    portableNearDup(incoming, Some(existing), idCol, textCol, shingleN, minJaccard)
+      .toDF("doc_id", "matched_id", "jaccard")
 
   /** EDIT-DISTANCE-verified near-dup pairs — the fuzzy-dedup rung for
     * SHORT documents where shingle Jaccard is coarse (titles, queries,
@@ -624,19 +722,8 @@ object Dedup {
     require(minSim > 0 && minSim <= 1,
       s"editVerifiedPairs: minSim $minSim must be in (0,1]")
     require(clipChars >= 1, s"editVerifiedPairs: clipChars $clipChars must be >= 1")
-    val sh = shingles(docs, idCol, textCol, shingleN)
-    val sigs = sh
-      .select(col("id"), explode(sequence(lit(0), lit(7))).as("i"), col("shingle"))
-      .groupBy("id", "i")
-      .agg(min(unhex(md5(concat(col("i"), lit(":"), col("shingle"))))).as("sig"))
-    val bands = sigs.groupBy(col("id"), expr("i div 2").as("band"))
-      .agg(unhex(md5(concat(
-        min(when(col("i") % 2 === 0, col("sig"))),
-        min(when(col("i") % 2 === 1, col("sig")))))).as("bkey"))
-    val cand = bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id1"), col("b.id").as("id2")).distinct()
+    val bands = portableBands(portableSigs(shingles(docs, idCol, textCol, shingleN)))
+    val cand = bucketPairs(bands, bands, Seq("band", "bkey"), self = true)
     val clipped = docs.select(col(idCol).as("id"),
       substring(col(textCol), 1, clipChars).as("_t"))
     val sim = lit(1.0) - col("lev").cast("double") /
@@ -651,21 +738,17 @@ object Dedup {
   }
 
   /** The "write" half of signature-store dedup: k=8 portable md5
-    * MinHash signatures, one (id, i, sig) row per component — the
-    * ~130-bytes-per-doc artifact a corpus append workflow PERSISTS so
-    * later batches dedup against it without ever re-reading (or even
-    * retaining) the old text. Same family as d11/d14, so the store is
-    * oracle-expressible and any consumer built on those chains can
-    * share it. Internal representation is the 16-byte unhex'd digest
-    * (binary min is order-isomorphic to lowercase hex — the d11
-    * rule); write it out as-is, parquet binary.
+    * MinHash signatures ([[portableSigs]]), one (id, i, sig) row per
+    * component — the ~130-bytes-per-doc artifact a corpus append
+    * workflow PERSISTS so later batches dedup against it without ever
+    * re-reading (or even retaining) the old text. Same family as
+    * d11/d14, so the store is oracle-expressible and any consumer
+    * built on those chains can share it. Internal representation is
+    * the 16-byte unhex'd digest; write it out as-is, parquet binary.
     */
   def portableSignatureStore(df: DataFrame, idCol: String, textCol: String,
                              shingleN: Int = 3): DataFrame =
-    shingles(df, idCol, textCol, shingleN)
-      .select(col("id"), explode(sequence(lit(0), lit(7))).as("i"), col("shingle"))
-      .groupBy("id", "i")
-      .agg(min(unhex(md5(concat(col("i"), lit(":"), col("shingle"))))).as("sig"))
+    portableSigs(shingles(df, idCol, textCol, shingleN))
 
   /** The "read" half: near-dedup INCOMING documents against a
     * [[portableSignatureStore]] with NO access to the stored corpus's
@@ -675,14 +758,13 @@ object Dedup {
     * Candidates form where a band bucket (4 bands of r=2 over the k=8
     * components, the d11/d14 banding) holds an incoming doc and a
     * stored doc; similarity is then ESTIMATED as the fraction of
-    * matching signature components — the standard MinHash unbiased
-    * estimator E[matches/k] = J — because exact verification would
-    * need the cold text. `minMatches` of k=8 gates the output
-    * (default 4 ≈ J 0.5); banding guarantees any pair with 2 adjacent
-    * matching components in one band surfaces, and the estimate is
-    * exact arithmetic on the stored digests, so the whole chain is
-    * oracle-expressible. Output: (doc_id, matched_id, matches,
-    * est_jaccard).
+    * matching signature components ([[sigMatches]]) because exact
+    * verification would need the cold text. `minMatches` of k=8 gates
+    * the output (default 4 ≈ J 0.5); banding guarantees any pair with
+    * 2 adjacent matching components in one band surfaces, and the
+    * estimate is exact arithmetic on the stored digests, so the whole
+    * chain is oracle-expressible. Output: (doc_id, matched_id,
+    * matches, est_jaccard).
     *
     * At scale: incoming side pays one shingle explode + one (id, i)
     * aggregate; the store contributes 9 rows per stored doc (8 sigs
@@ -695,24 +777,13 @@ object Dedup {
                     shingleN: Int = 3, minMatches: Int = 4): DataFrame = {
     require(minMatches >= 1 && minMatches <= 8,
       s"sigStoreDedup: minMatches $minMatches not in [1,8]")
-    def bandsOf(sigs: DataFrame): DataFrame = sigs
-      .groupBy(col("id"), expr("i div 2").as("band"))
-      .agg(unhex(md5(concat(
-        min(when(col("i") % 2 === 0, col("sig"))),
-        min(when(col("i") % 2 === 1, col("sig")))))).as("bkey"))
     val sigIn = portableSignatureStore(incoming, idCol, textCol, shingleN)
       .persist() // band derivation + component-match verify
-    val cand = bandsOf(sigIn).as("a").join(bandsOf(store).as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey"))
-      .select(col("a.id").as("doc_id"), col("b.id").as("matched_id")).distinct()
+    val cand = bucketPairs(portableBands(sigIn), portableBands(store),
+      Seq("band", "bkey"), self = false,
+      Seq(col("a.id").as("doc_id"), col("b.id").as("matched_id")))
     Caching.sealOver(
-      cand
-        .join(sigIn.select(col("id").as("doc_id"), col("i"), col("sig").as("_s1")),
-          "doc_id")
-        .join(store.select(col("id").as("matched_id"), col("i"), col("sig").as("_s2")),
-          Seq("matched_id", "i"))
-        .groupBy("doc_id", "matched_id")
-        .agg(sum(when(col("_s1") === col("_s2"), 1L).otherwise(0L)).as("matches"))
+      sigMatches(cand, "doc_id", sigIn, "matched_id", store)
         .filter(col("matches") >= minMatches)
         .withColumn("est_jaccard", round(col("matches") / lit(8.0d), 6)),
       sigIn)
@@ -724,18 +795,18 @@ object Dedup {
     *
     * The trick is that a doc's whole signature is ROW-LOCAL: sig_i =
     * array_min over its shingle array of md5(i:shingle) — the same
-    * values the batch store aggregates, computed inside one
-    * projection. Bands derive row-locally too, posexplode to 4
-    * (band, bkey) rows, and the ONLY wide op is a stream-static
-    * equi-join against the store's band table. A pair that collides
-    * in several bands would surface once per band; instead of a
-    * stateful distinct, each joined row carries BOTH band arrays and
-    * keeps itself only if its band index is the FIRST index where
-    * the two arrays agree — a row-local tie-break that emits each
-    * pair exactly once. Match counting is a zip_with over the two
-    * sig arrays. Works identically on a batch frame (it is the same
-    * plan minus the micro-batch driver), which is what the parity
-    * spec pins.
+    * values the batch store aggregates over the same shingles
+    * ([[shingleArray]]), computed inside one projection. Bands derive
+    * row-locally too, posexplode to 4 (band, bkey) rows, and the ONLY
+    * wide op is a stream-static equi-join against the store's band
+    * table. A pair that collides in several bands would surface once
+    * per band; instead of a stateful distinct, each joined row carries
+    * BOTH band arrays and keeps itself only if its band index is the
+    * FIRST index where the two arrays agree — a row-local tie-break
+    * that emits each pair exactly once. Match counting is a zip_with
+    * over the two sig arrays. Works identically on a batch frame (it
+    * is the same plan minus the micro-batch driver), which is what the
+    * parity spec pins.
     *
     * State at 100 TB: none on the stream; the static side is the
     * ~130-bytes/doc store, shuffled once per micro-batch by the join
@@ -748,30 +819,26 @@ object Dedup {
                           shingleN: Int = 3, minMatches: Int = 4): DataFrame = {
     require(minMatches >= 1 && minMatches <= 8,
       s"sigStoreDedupStream: minMatches $minMatches not in [1,8]")
+    def bandsOf(sigs: String): Column = expr(
+      s"""transform(sequence(0, 3),
+           b -> md5(concat(element_at($sigs, 2*b + 1), element_at($sigs, 2*b + 2))))""")
     // static side: one row per stored doc with its sig + band arrays
     val storeDocs = store.groupBy(col("id"))
       .agg(expr("transform(array_sort(collect_list(struct(i, sig))), x -> x.sig)")
         .as("_ssigs"))
-      .withColumn("_sbands", expr(
-        """transform(sequence(0, 3),
-             b -> md5(concat(element_at(_ssigs, 2*b + 1), element_at(_ssigs, 2*b + 2))))"""))
+      .withColumn("_sbands", bandsOf("_ssigs"))
     val storeBands = storeDocs.select(col("id").as("matched_id"),
       col("_ssigs"), col("_sbands"),
       posexplode(col("_sbands")).as(Seq("_b", "_bkey")))
     // stream side: fully row-local signature + bands
-    val toks = split(lower(col(textCol)), "\\s+")
-    val shArr = if (shingleN == 1) filter(toks, t => length(t) > 0)
-      else graft.functions.ShingleStrings.of(toks, shingleN)
     val sigExprs = (0 until 8).map(i =>
       array_min(transform(col("_sh"), s => unhex(md5(concat(lit(i + ":"), s))))))
     val streamed = stream
       .filter(col(idCol).isNotNull)
-      .withColumn("_sh", array_distinct(shArr))
+      .withColumn("_sh", array_distinct(shingleArray(tokens(col(textCol)), shingleN)))
       .filter(size(col("_sh")) > 0)
       .withColumn("_sigs", array(sigExprs: _*))
-      .withColumn("_bands", expr(
-        """transform(sequence(0, 3),
-             b -> md5(concat(element_at(_sigs, 2*b + 1), element_at(_sigs, 2*b + 2))))"""))
+      .withColumn("_bands", bandsOf("_sigs"))
       .select(col(idCol).as("doc_id"), col("_sigs"), col("_bands"),
         posexplode(col("_bands")).as(Seq("_qb", "_qkey")))
     streamed.join(storeBands,
@@ -785,32 +852,6 @@ object Dedup {
       .filter(col("matches") >= minMatches)
       .select(col("doc_id"), col("matched_id"), col("matches"),
         round(col("matches") / lit(8.0d), 6).as("est_jaccard"))
-  }
-
-  /** MinHash signatures: the variable-length shingle string is hashed
-    * ONCE (xxhash64), then [[graft.functions.MinHashAgg]] — a custom
-    * mergeable TypedImperativeAggregate — folds the base hash through
-    * k splitmix64 permutations and keeps element-wise minima in one
-    * array buffer. Map-side partial agg does nearly all the work; the
-    * shuffle carries one k-long array per (doc, mapper), not one row
-    * per shingle. Output: (id, sig array<long>[k]).
-    */
-  def minHashSignatures(sh: DataFrame, k: Int): DataFrame =
-    sh.withColumn("_h", xxhash64(col("shingle")))
-      .groupBy(col("id"))
-      .agg(graft.functions.MinHashAgg.sig(col("_h"), k).as("sig"))
-
-  /** LSH banding: b bands of r signature rows (k = b*r). Emits
-    * (band, bandHash, id); docs sharing any band bucket are candidates.
-    */
-  def lshBands(sig: DataFrame, b: Int, r: Int): DataFrame = {
-    val bands = (0 until b).map { band =>
-      val rowCols = (band * r until (band + 1) * r)
-        .map(i => element_at(col("sig"), i + 1))
-      struct(lit(band).as("band"), xxhash64(rowCols: _*).as("band_hash"))
-    }
-    sig.select(col("id"), explode(array(bands: _*)).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.band_hash").as("band_hash"))
   }
 
   /** Candidate pairs from LSH buckets (id1 < id2, distinct). The
@@ -833,24 +874,11 @@ object Dedup {
       case None => bandsDf
     }
     val bands = pruned.persist()
-    val a = bands.as("a")
-    val b = bands.as("b")
     // sealed: the candidate set (tiny, the whole point of LSH) comes
     // back materialized and the band-table cache block is released
-    Caching.sealOver(
-      a.join(b, col("a.band") === col("b.band") &&
-        col("a.band_hash") === col("b.band_hash") &&
-        col("a.id") < col("b.id"))
-        .select(col("a.id").as("id1"), col("b.id").as("id2"))
-        .distinct(),
-      bands)
+    Caching.sealOver(bucketPairs(bands, bands, Seq("band", "band_hash"), self = true), bands)
   }
 
-  /** Exact Jaccard for every pair of docs that shares >= 1 shingle,
-    * computed distributively: join on shingle -> count intersections,
-    * join per-doc sizes -> |A|+|B|-|∩|. Restrict `sh` (e.g. to LSH
-    * candidates or a partition key) before calling at scale.
-    */
   /** Shared overlap core of [[jaccardPairs]] and [[containmentPairs]]:
     * one shuffle on the shingle, yielding (id1, id2, inter, sz1, sz2)
     * for every pair with at least one shared shingle. Persists the
@@ -863,7 +891,7 @@ object Dedup {
     // with a string-keyed join absent an md5 collision (~2^-128/pair)
     val sh = shDf.withColumn("shingle", unhex(md5(col("shingle"))))
       .persist() // used three times: sizes + both join sides
-    val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("sz"))
+    val sizes = setSizes(sh)
     val overlaps = sh.as("a")
       .join(sh.as("b"), col("a.shingle") === col("b.shingle") && col("a.id") < col("b.id"))
       .groupBy(col("a.id").as("id1"), col("b.id").as("id2"))
@@ -918,7 +946,7 @@ object Dedup {
         .toDF("bands", "rows_per_band"))
       val union = col("sz1") + col("sz2") - col("inter")
       val withP = ov.crossJoin(br)
-        .withColumn("_s", col("inter").cast("double") / union.cast("double"))
+        .withColumn("_s", jaccard(col("inter"), col("sz1"), col("sz2")))
         .withColumn("_true",
           col("inter") * lit(tauDen.toLong) >= union * lit(tauNum.toLong))
         .withColumn("_sr",
@@ -943,10 +971,14 @@ object Dedup {
     }
   }
 
+  /** Exact Jaccard for every pair of docs that shares >= 1 shingle,
+    * computed distributively: join on shingle -> count intersections,
+    * join per-doc sizes -> |A|+|B|-|∩|. Restrict `sh` (e.g. to LSH
+    * candidates or a partition key) before calling at scale.
+    */
   def jaccardPairs(shDf: DataFrame, minJaccard: Double): DataFrame =
     pairOverlaps(shDf)(_
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sz1") + col("sz2") - col("inter")).cast("double"))
+      .withColumn("jaccard", jaccard(col("inter"), col("sz1"), col("sz2")))
       .filter(col("jaccard") >= minJaccard)
       .select(col("id1"), col("id2"), round(col("jaccard"), 6).as("jaccard")))
 
@@ -962,8 +994,7 @@ object Dedup {
                         taus: Seq[Double]): Seq[(Double, DataFrame)] = {
     require(taus.nonEmpty, "jaccardPairsSweep: empty tau list")
     val all = pairOverlaps(shDf)(_
-      .withColumn("_jraw",
-        col("inter").cast("double") / (col("sz1") + col("sz2") - col("inter")).cast("double"))
+      .withColumn("_jraw", jaccard(col("inter"), col("sz1"), col("sz2")))
       .filter(col("_jraw") >= taus.min)
       .select(col("id1"), col("id2"), col("_jraw")))
     taus.map(tau => tau -> all.filter(col("_jraw") >= tau)
@@ -1039,8 +1070,7 @@ object Dedup {
     // pair count. Measured, sf0.1 full corpus at tau=0.5: unigrams
     // emit 8.9M of 12.5M possible pairs (degenerate by construction);
     // 3-gram shingles emit the true ~256 near-dup pairs.
-    val toks = shingles(df, idCol, textCol, shingleN)
-      .select(col("id"), unhex(md5(col("shingle"))).as("tok"))
+    val toks = digests(shingles(df, idCol, textCol, shingleN))
       .persist() // df aggregate + ranked build + both verify sides
     val dfreq = toks.groupBy(col("tok")).agg(count(lit(1)).as("_df"))
     val wId = org.apache.spark.sql.expressions.Window.partitionBy(col("id"))
@@ -1077,19 +1107,7 @@ object Dedup {
         c
       case None => rawCand
     }
-    val inter = cand
-      .join(toks.select(col("id").as("id1"), col("tok").as("t1")), "id1")
-      .join(toks.select(col("id").as("id2"), col("tok").as("t2")), "id2")
-      .filter(col("t1") === col("t2"))
-      .groupBy("id1", "id2").agg(count(lit(1)).as("n"))
-    Caching.sealOver(
-      inter
-        .join(sizes.select(col("id").as("id1"), col("sz").as("sz1")), "id1")
-        .join(sizes.select(col("id").as("id2"), col("sz").as("sz2")), "id2")
-        .withColumn("jaccard",
-          col("n").cast("double") / (col("sz1") + col("sz2") - col("n")).cast("double"))
-        .filter(col("jaccard") >= tau)
-        .select(col("id1"), col("id2"), round(col("jaccard"), 6).as("jaccard")),
+    Caching.sealOver(verifyJaccard(cand, toks, sizes, toks, sizes, tau),
       toks, ranked, cand) // cand unpersist is a no-op when the guard is off
   }
 
@@ -1106,7 +1124,6 @@ object Dedup {
                  shingleN: Int = 2, numHashes: Int = 32, bands: Int = 8,
                  threshold: Double = 0.5, maxBucket: Option[Int] = None): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    val r = numHashes / bands
     // The whole signature side is a NARROW map per document:
     // shingle_hashes (fused tokenize+hash, no shingle strings) →
     // MinHashRow (fused k-permutation minima) → band hashes, all in
@@ -1124,10 +1141,7 @@ object Dedup {
         graft.functions.ShingleHashes.of(col(textCol), shingleN).as("_hs"))
       .filter(size(col("_hs")) > 0)
       .select(col("id"), graft.functions.MinHashRow.sig(col("_hs"), numHashes).as("_sig"))
-      .select(col("id"),
-        posexplode(array((0 until bands).map { b =>
-          xxhash64((b * r until (b + 1) * r).map(i => element_at(col("_sig"), i + 1)): _*)
-        }: _*)).as(Seq("band", "band_hash")))
+      .select(col("id"), posexplode(bandHashes(col("_sig"), numHashes, bands)).as(Seq("band", "band_hash")))
     // lshCandidates seals its result (materialized, lineage-free) —
     // no extra persist needed to reuse it on two branches below
     val cand = lshCandidates(bandTable, maxBucket)
@@ -1147,7 +1161,7 @@ object Dedup {
       .select(col(idCol).as("id"),
         explode(graft.functions.ShingleHashes.of(col(textCol), shingleN)).as("shingle"))
       .join(candIdsJ, "id").distinct().persist()
-    val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("sz"))
+    val sizes = setSizes(sh)
     val inter = (if (candFits) broadcast(cand) else cand)
       .join(sh.as("s1"), col("s1.id") === col("id1"))
       .join(sh.as("s2"),
@@ -1158,8 +1172,7 @@ object Dedup {
       inter
         .join(sizes.withColumnRenamed("id", "id1").withColumnRenamed("sz", "sz1"), "id1")
         .join(sizes.withColumnRenamed("id", "id2").withColumnRenamed("sz", "sz2"), "id2")
-        .withColumn("jaccard",
-          col("inter").cast("double") / (col("sz1") + col("sz2") - col("inter")).cast("double"))
+        .withColumn("jaccard", jaccard(col("inter"), col("sz1"), col("sz2")))
         .filter(col("jaccard") >= threshold)
         .select(col("id1"), col("id2"), round(col("jaccard"), 6).as("jaccard")),
       sh)
@@ -1173,8 +1186,7 @@ object Dedup {
     * shuffle beyond the doc-key one.
     */
   def simHash(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(col(idCol).as("id"),
-        explode(split(lower(col(textCol)), "\\s+")).as("tok"))
+    df.select(col(idCol).as("id"), explode(tokens(col(textCol))).as("tok"))
       .withColumn("h", xxhash64(col("tok")))
       .groupBy(col("id"))
       .agg(graft.functions.SimHashAgg.sig(col("h")).as("simhash"))
@@ -1199,12 +1211,9 @@ object Dedup {
           shiftrightunsigned(col("simhash"), b * w).bitwiseAND(mask).as("bh"))
       }: _*)).as("bb"))
       .select(col("id"), col("simhash"), col("bb.band").as("band"), col("bb.bh").as("bh"))
-    val cand = banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-        col("a.id") < col("b.id"))
-      .select(col("a.id").as("id1"), col("a.simhash").as("s1"),
-        col("b.id").as("id2"), col("b.simhash").as("s2"))
-      .distinct()
+    val cand = bucketPairs(banded, banded, Seq("band", "bh"), self = true,
+      Seq(col("a.id").as("id1"), col("a.simhash").as("s1"),
+        col("b.id").as("id2"), col("b.simhash").as("s2")))
     Caching.sealOver(
       cand
         .withColumn("dist", bit_count(col("s1").bitwiseXOR(col("s2"))))
@@ -1224,8 +1233,7 @@ object Dedup {
     * one band self-join.
     */
   def simHashPortablePairs(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val toks = df.select(col(idCol).as("id"),
-        explode(split(lower(col(textCol)), "\\s+")).as("tok"))
+    val toks = df.select(col(idCol).as("id"), explode(tokens(col(textCol))).as("tok"))
       .groupBy("id", "tok").agg(count(lit(1)).as("cnt"))
       .withColumn("h", md5(col("tok")))
     def dg(p: Int) = s"(instr('0123456789abcdef', substr(h, $p, 1)) - 1)"
@@ -1257,20 +1265,15 @@ object Dedup {
     */
   def chunkedHammingPairs(fpsIn: DataFrame): DataFrame = {
     val fps = fpsIn.persist() // self-joined below; don't recompute the fingerprint DAG twice
-    def banded(idAs: String, pre: String) = fps.select(
-      (col("id").as(idAs) +: (0 to 3).map(k => col(s"f$k").as(s"$pre$k"))) :+
+    val fs = (0 to 3).map(k => s"f$k")
+    val banded = fps.select((col("id") +: fs.map(col)) :+
         explode(array((0 to 3).map(k =>
           struct(lit(k).as("band"), col(s"f$k").as("bh"))): _*)).as("bb"): _*)
-      .select(col(idAs) +: (0 to 3).map(k => col(s"$pre$k")) :+
-        col("bb.band").as("band") :+ col("bb.bh").as("bh"): _*)
-    val a = banded("id1", "a").alias("L")
-    val b = banded("id2", "b").alias("R")
+      .select((col("id") +: fs.map(col)) :+ col("bb.band").as("band") :+ col("bb.bh").as("bh"): _*)
     Caching.sealOver(
-      a.join(b, col("L.band") === col("R.band") && col("L.bh") === col("R.bh") &&
-          col("id1") < col("id2"))
-        .select((col("id1") +: col("id2") +:
-          (0 to 3).flatMap(k => Seq(col(s"a$k"), col(s"b$k")))): _*)
-        .distinct()
+      bucketPairs(banded, banded, Seq("band", "bh"), self = true,
+          col("a.id").as("id1") +: col("b.id").as("id2") +: (0 to 3).flatMap(k =>
+            Seq(col(s"a.f$k").as(s"a$k"), col(s"b.f$k").as(s"b$k"))))
         .withColumn("hamming", (0 to 3).map(k =>
           bit_count(col(s"a$k").bitwiseXOR(col(s"b$k")))).reduce(_ + _).cast("long"))
         .filter(col("hamming") <= 3)
@@ -1278,48 +1281,6 @@ object Dedup {
       fps)
   }
 
-  /** PARAGRAPH-level exact cross-corpus dedup (the RefinedWeb /
-    * CCNet-style curation step between line-level C4 scrubbing and
-    * whole-document dedup): every distinct paragraph survives exactly
-    * ONCE in the corpus — in its first occurrence, ordered by
-    * (id, position) — and every other copy is dropped, including
-    * later repeats inside the same document. Documents are then
-    * reassembled from their surviving paragraphs in order; a document
-    * whose every paragraph appeared earlier elsewhere drops out.
-    *
-    * Shape at scale: paragraphs explode narrow; the winner per
-    * paragraph is min(struct(id, pos)) grouped by md5(para) — a hash
-    * aggregate whose map-side partials absorb even a
-    * million-duplicate boilerplate paragraph (no window, no hot
-    * partition). Survivors are selected by an INNER JOIN on the full
-    * (hash, id, pos) triple: the mass of duplicate rows spreads
-    * across partitions by (id, pos), so the join has no hot key
-    * either. Reassembly is one id shuffle. Paragraph text shuffles
-    * exactly twice (join + reassembly), hashes otherwise.
-    * Output: (id, text_clean, n_kept, n_dropped).
-    */
-  /** Exact duplicated-substring SPANS (the Lee et al. 2021
-    * "Deduplicating Training Data Makes Language Models Better"
-    * exact-substring family, arXiv:2107.06499, done the Spark way):
-    * every k-token window whose content appears MORE THAN ONCE in the
-    * corpus — across documents or repeated within one — marks its
-    * token span; per document the overlapping spans merge and the
-    * operator reports how many tokens sit inside duplicated
-    * substrings. The downstream cut/filter decision is the caller's
-    * (Lee et al. cut the spans; a filter drops docs above a
-    * dup_frac).
-    *
-    * Their suffix array is a shared-memory structure; the
-    * distributed equivalent of its "repeated substring of length >= k
-    * exists" predicate is exactly "some k-gram occurs twice", and
-    * k-grams shuffle as md5 hashes with map-side partial counts.
-    * Span merging is a per-document sorted fold (one higher-order
-    * aggregate over gram starts — no k× row blowup, no window).
-    * Shape: gram hashes shuffle once for the count, once for the
-    * dup-mark join (planner/AQE decide broadcast vs shuffle, skew
-    * split absorbs boilerplate grams), plus one id shuffle for the
-    * fold. Output: (id, n_toks, n_dup_toks, dup_frac).
-    */
   /** Shared front of the exact-substring family (d16 spans / d18
     * cut): tokenize, shingle, hash, and mark corpus-duplicated
     * k-grams. Returns (base, grams, dupes); grams comes back
@@ -1363,6 +1324,28 @@ object Dedup {
     (base, grams, dupes)
   }
 
+  /** Exact duplicated-substring SPANS (the Lee et al. 2021
+    * "Deduplicating Training Data Makes Language Models Better"
+    * exact-substring family, arXiv:2107.06499, done the Spark way):
+    * every k-token window whose content appears MORE THAN ONCE in the
+    * corpus — across documents or repeated within one — marks its
+    * token span; per document the overlapping spans merge and the
+    * operator reports how many tokens sit inside duplicated
+    * substrings. The downstream cut/filter decision is the caller's
+    * (Lee et al. cut the spans; a filter drops docs above a
+    * dup_frac).
+    *
+    * Their suffix array is a shared-memory structure; the
+    * distributed equivalent of its "repeated substring of length >= k
+    * exists" predicate is exactly "some k-gram occurs twice", and
+    * k-grams shuffle as md5 hashes with map-side partial counts.
+    * Span merging is a per-document sorted fold (one higher-order
+    * aggregate over gram starts — no k× row blowup, no window).
+    * Shape: gram hashes shuffle once for the count, once for the
+    * dup-mark join (planner/AQE decide broadcast vs shuffle, skew
+    * split absorbs boilerplate grams), plus one id shuffle for the
+    * fold. Output: (id, n_toks, n_dup_toks, dup_frac).
+    */
   def dupSubstringSpans(df: DataFrame, idCol: String, textCol: String,
                         k: Int): DataFrame = {
     val (base, grams, dupes) = dupGrams(df, idCol, textCol, k)
@@ -1387,6 +1370,26 @@ object Dedup {
       grams)
   }
 
+  /** PARAGRAPH-level exact cross-corpus dedup (the RefinedWeb /
+    * CCNet-style curation step between line-level C4 scrubbing and
+    * whole-document dedup): every distinct paragraph survives exactly
+    * ONCE in the corpus — in its first occurrence, ordered by
+    * (id, position) — and every other copy is dropped, including
+    * later repeats inside the same document. Documents are then
+    * reassembled from their surviving paragraphs in order; a document
+    * whose every paragraph appeared earlier elsewhere drops out.
+    *
+    * Shape at scale: paragraphs explode narrow; the winner per
+    * paragraph is min(struct(id, pos)) grouped by md5(para) — a hash
+    * aggregate whose map-side partials absorb even a
+    * million-duplicate boilerplate paragraph (no window, no hot
+    * partition). Survivors are selected by an INNER JOIN on the full
+    * (hash, id, pos) triple: the mass of duplicate rows spreads
+    * across partitions by (id, pos), so the join has no hot key
+    * either. Reassembly is one id shuffle. Paragraph text shuffles
+    * exactly twice (join + reassembly), hashes otherwise.
+    * Output: (id, text_clean, n_kept, n_dropped).
+    */
   def paraDedup(df: DataFrame, idCol: String, textCol: String,
                 sep: String = "\n\n"): DataFrame = {
     val paras = df.select(col(idCol).as("id"),
@@ -1581,7 +1584,7 @@ object Dedup {
                      k: Int = 4, w: Int = 4, minShared: Int = 2,
                      maxBucket: Option[Int] = None): DataFrame = {
     require(k >= 1 && w >= 1, s"winnowingPairs: k=$k, w=$w must be >= 1")
-    val toks = filter(split(lower(col(textCol)), "\\s+"), t => length(t) > 0)
+    val toks = filter(tokens(col(textCol)), t => length(t) > 0)
     val grams = df.select(col(idCol).as("id"), toks.as("_t"))
       .filter(size(col("_t")) >= k)
       .select(col("id"), posexplode(

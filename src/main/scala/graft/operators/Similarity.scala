@@ -1516,11 +1516,11 @@ object Similarity {
       .join(base.as("b"),
         col("a._t") === col("b._t") && col("a._sig") === col("b._sig") &&
           col("a.id") < col("b.id"))
-      .select(col("a.id").as("id1"), col("a.v").as("v1"), col("a._nrm").as("n1"),
-        col("b.id").as("id2"), col("b.v").as("v2"), col("b._nrm").as("n2"))
+      .select(col("a.id").as("id1"), col("a.v").as("_1v"), col("a._nrm").as("_1n"),
+        col("b.id").as("id2"), col("b.v").as("_2v"), col("b._nrm").as("_2n"))
       .dropDuplicates("id1", "id2")
     cand
-      .withColumn("cos", VecDot.dot(col("v1"), col("v2")) / (col("n1") * col("n2")))
+      .withColumn("cos", exactCos("1", "2"))
       .filter(col("cos") >= threshold)
       .select(col("id1"), col("id2"), round(col("cos"), 6).as("cos"))
   }
@@ -1548,8 +1548,7 @@ object Similarity {
     val cb = collectCodebook(cents, centIdCol, centVecCol, "assignNearestCentroid")
     require(cb.length <= 128,
       s"assignNearestCentroid: ${cb.length} centroids exceed the literal-path bound (128)")
-    df.withColumn("_best", when(col(vecCol).isNotNull,
-        nearestCentroid(col(vecCol), norm(col(vecCol)), cb)))
+    df.withColumn("_best", nearestCentroid(col(vecCol), norm(col(vecCol)), cb))
       .withColumn(clusterCol, col("_best").getField("_cid"))
       .withColumn(cosCol, -col("_best").getField("_negcos"))
       .drop("_best")
@@ -1557,12 +1556,18 @@ object Similarity {
 
   /** Round-6 cosine argmax over K literal centroids, row-local: the
     * min (−cos rounded to 6, centroid id) struct — the highest rounded
-    * cosine, ties to the lowest centroid id. */
+    * cosine, ties to the lowest centroid id. Null where the row's norm
+    * is zero or null: with no cosine there is nothing to rank (a null
+    * score would sort first and pick the lowest id). A zero-norm
+    * centroid has no cosine either and is never picked. */
   private def nearestCentroid(vec: Column, nrm: Column,
-                              cb: Array[(Long, Array[Double])]): Column =
-    sort_array(array(cb.map { case (cid, cv) => struct(
-      round(-(VecDot.dot(vec, lit(cv)) / (nrm * lit(l2d(cv)))), 6).as("_negcos"),
-      lit(cid).as("_cid")) }.toSeq: _*)).getItem(0)
+                              cb: Array[(Long, Array[Double])]): Column = {
+    val scored = cb.filter(c => l2d(c._2) > 0).map { case (cid, cv) => struct(
+      round(-try_divide(VecDot.dot(vec, lit(cv)), nrm * lit(l2d(cv))), 6).as("_negcos"),
+      lit(cid).as("_cid")) }
+    require(scored.nonEmpty, "nearestCentroid: every centroid has zero norm")
+    when(nrm > 0, sort_array(array(scored.toSeq: _*)).getItem(0))
+  }
 
   /** SemDeDup-style semantic near-dedup (Abbas et al. 2023,
     * arXiv:2303.09540): assign every vector to its nearest centroid
@@ -1621,9 +1626,12 @@ object Similarity {
         e.withColumn("_rowid", monotonically_increasing_id())
           .crossJoin(broadcast(centDf))
           .withColumn("_negcos", round(
-            -(VecDot.dot(col("v"), col("_cv")) / (col("_nrm") * col("_cnrm"))), 6))
+            -try_divide(VecDot.dot(col("v"), col("_cv")), col("_nrm") * col("_cnrm")), 6))
           .groupBy(col("_rowid"))
-          .agg(min(struct(col("_negcos"), col("_cid"))).as("_best"),
+          // a null score never ranks: a zero-norm row gets no cluster,
+          // as on the literal path
+          .agg(min(when(col("_negcos").isNotNull, struct(col("_negcos"), col("_cid"))))
+            .as("_best"),
             // id/v/_nrm are constant per _rowid — first() is exact here
             first(col("id")).as("id"),
             first(col("v")).as("v"), first(col("_nrm")).as("_nrm"))
@@ -1633,8 +1641,8 @@ object Similarity {
     val assigned = if (literalPath) assigned0 else assigned0.persist()
     val dups = assigned.as("a").join(assigned.as("b"),
         col("a.cluster") === col("b.cluster") && col("a.id") < col("b.id"))
-      .filter(VecDot.dot(col("a.v"), col("b.v")) /
-        (col("a._nrm") * col("b._nrm")) >= threshold)
+      .filter(try_divide(VecDot.dot(col("a.v"), col("b.v")),
+        col("a._nrm") * col("b._nrm")) >= threshold)
       .select(col("b.id").as("id")).distinct()
     val kept = assigned.join(dups, Seq("id"), "left_anti")
       .select(col("id"), col("cluster"))
@@ -2353,14 +2361,12 @@ object Similarity {
     */
   def cosinePairs(df: DataFrame, idCol: String, vecCol: String,
                   threshold: Double): DataFrame = {
-    val a = df.select(col(idCol).as("id1"), col(vecCol).as("v1"),
-      norm(col(vecCol)).as("n1"))
-    val b = df.select(col(idCol).as("id2"), col(vecCol).as("v2"),
-      norm(col(vecCol)).as("n2"))
-    a.join(b, col("id1") < col("id2"))
-      .withColumn("cos", VecDot.dot(col("v1"), col("v2")) / (col("n1") * col("n2")))
+    val a = side(df, col(idCol), vecCol, "1")
+    val b = side(df, col(idCol), vecCol, "2")
+    a.join(b, col("_1id") < col("_2id"))
+      .withColumn("cos", exactCos("1", "2"))
       .filter(col("cos") >= threshold)
-      .select(col("id1"), col("id2"), round(col("cos"), 6).as("cos"))
+      .select(col("_1id").as("id1"), col("_2id").as("id2"), round(col("cos"), 6).as("cos"))
   }
 
   /** FILTERED vector search: top-k cosine neighbors among the corpus

@@ -352,3 +352,46 @@ class SigStoreDedupSpec extends SparkSpec {
     assert(got.isEmpty)
   }
 }
+
+/** Source-text pin of the near-dup stage composition: under src/main
+  * each Dedup stage expression has one copy, and the dead signature
+  * and banding entries stay gone.
+  */
+class DedupStructureSpec extends org.scalatest.funsuite.AnyFunSuite {
+  private lazy val src = {
+    def files(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles).toSeq.flatten.flatMap(f =>
+        if (f.isDirectory) files(f) else Seq(f).filter(_.getName.endsWith(".scala")))
+    files(new java.io.File("src/main/scala")).map(f =>
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).mkString("\n")
+  }
+
+  private def count(re: String): Int = re.r.findAllMatchIn(src).length
+  private def literal(s: String): Int = count(java.util.regex.Pattern.quote(s))
+
+  test("one signature, band key, bucket join, verify and ratio per near-dup stage") {
+    // portable k=8 md5 MinHash signature component
+    assert(literal("""md5(concat(col("i"), lit(":"), col("shingle")))""") == 1)
+    // portable band key (4 bands of r=2)
+    assert(literal("i div 2") == 1)
+    // (band, key) bucket join: the stage's generic key equality, and no
+    // band equality written out anywhere else
+    assert(literal("""col(s"a.$k") === col(s"b.$k")""") == 1)
+    assert(count("""band"\) === col\(""") == 0)
+    // candidate-only exact-Jaccard verify: one intersection count
+    assert(count("""groupBy\("id1", "id2"\)\.agg\((count\(lit\(1\)\)|cnt)\.as\("n"\)\)""") == 1)
+    // Jaccard ratio inter / (sz1 + sz2 - inter)
+    assert(count("""/ \((col\("sz1"\)|sz1) \+ (col\("sz2"\)|sz2) - """) == 1)
+    // signature-match count (the copies compared _s1/_s2 or _g1/_g2)
+    assert(count("""sum\(when\(col\("_[sg]1"\) === col\("_[sg]2"\), 1L\)""") == 1)
+    // xxhash64 band-hash array of the fused MinHash chain
+    assert(literal("xxhash64((b * r until (b + 1) * r)") == 1)
+    // C4 normalization
+    assert(literal("""[^\\p{L}\\p{N}\\s]""") == 1)
+  }
+
+  test("the dead minHashSignatures and lshBands entries are gone") {
+    assert(literal("def minHashSignatures") == 0)
+    assert(literal("def lshBands") == 0)
+  }
+}

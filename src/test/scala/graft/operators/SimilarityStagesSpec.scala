@@ -83,6 +83,77 @@ class SimilarityZeroNormSpec extends SparkSpec {
   }
 }
 
+/** The embedding near-dup paths under the same no-evidence rule: a
+  * zero-norm vector is never paired and never assigned to a centroid,
+  * and neither fails the query (under ANSI a zero norm in a cosine
+  * division raises DIVIDE_BY_ZERO). Two zero rows share every LSH
+  * bucket, so the bucketed pair finders score them too.
+  */
+class NearDupZeroNormSpec extends SparkSpec {
+  import spark.implicits._
+
+  private val dims = 8
+  private val Zeros = Set(0L, 1L)
+  private val Live = 2L
+  private val Twin = 3L // Live scaled by 2: cosine 1
+
+  private lazy val corpus = {
+    val rnd = new scala.util.Random(31)
+    val live = Array.fill(dims)(rnd.nextGaussian().toFloat)
+    (Seq((0L, Array.fill(dims)(0f)), (1L, Array.fill(dims)(0f)),
+      (Live, live), (Twin, live.map(_ * 2f))) ++
+      (4L until 24L).map(i => (i, Array.fill(dims)(rnd.nextGaussian().toFloat))))
+      .toDF("vec_id", "embedding")
+  }
+  private def cents(k: Int): DataFrame = {
+    val rnd = new scala.util.Random(7)
+    (0 until k).map(i => (i.toLong, Array.fill(dims)(rnd.nextGaussian())))
+      .toDF("cid", "cvec")
+  }
+
+  /** Pair finders: no pair touches a zero row; the live twin pairs. */
+  private def pairsOf(df: => DataFrame): () => Unit = () => {
+    val got = df.select(col("id1").cast("long"), col("id2").cast("long"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(!got.exists(p => Zeros(p._1) || Zeros(p._2)), s"zero row paired: $got")
+    assert(got((Live, Twin)), s"live twin pair lost: $got")
+  }
+
+  /** semDedup: zero rows survive with no cluster; the twin is dropped. */
+  private def keptOf(df: => DataFrame): () => Unit = () => {
+    val got = df.select(col("id"), col("cluster").cast("long"))
+      .collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
+    Zeros.foreach(z => assert(got.get(z).contains(None), s"zero row $z: $got"))
+    assert(got.get(Live).exists(_.isDefined), s"live row unassigned: $got")
+    assert(!got.contains(Twin), s"live twin kept: $got")
+  }
+
+  private val entries: Seq[(String, () => Unit)] = Seq(
+    "cosinePairs" -> pairsOf(
+      Similarity.cosinePairs(corpus, "vec_id", "embedding", 0.99)),
+    "cosinePairsLsh" -> pairsOf(Similarity.cosinePairsLsh(corpus, "vec_id",
+      "embedding", 0.99, numPlanes = 4, numTables = 4)),
+    "cosinePairsPortable" -> pairsOf(Similarity.cosinePairsPortable(corpus,
+      "vec_id", "embedding", 0.99, dims = dims, numPlanes = 4, numTables = 4)),
+    "semDedup, literal centroids" -> keptOf(Similarity.semDedup(corpus,
+      "vec_id", "embedding", cents(4), "cid", "cvec", 0.99)),
+    "semDedup, K > 128 centroids" -> keptOf(Similarity.semDedup(corpus,
+      "vec_id", "embedding", cents(130), "cid", "cvec", 0.99)),
+    "assignNearestCentroid" -> (() => {
+      val got = Similarity.assignNearestCentroid(corpus, "embedding",
+          cents(4), "cid", "cvec")
+        .select(col("vec_id"), col("cluster"), col("centroid_cos"))
+        .collect().map(r => r.getLong(0) -> (Option(r.get(1)), Option(r.get(2)))).toMap
+      Zeros.foreach(z => assert(got(z) == ((None, None)), s"zero row $z: ${got(z)}"))
+      assert(got.removedAll(Zeros).values.forall(v => v._1.isDefined && v._2.isDefined),
+        s"live row unassigned: $got")
+    }))
+
+  entries.foreach { case (name, check) =>
+    test(s"$name: a zero-norm vector is never paired or assigned") { check() }
+  }
+}
+
 /** Source-text pin of the stage composition in Similarity.scala: every
   * per-query top-k routes through the one rank stage, every ADC
   * distance through the one DECIMAL(24,8) sum.

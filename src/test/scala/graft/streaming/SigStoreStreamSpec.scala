@@ -19,30 +19,40 @@ class SigStoreStreamSpec extends SparkSpec {
 
     val docs = s.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .filter(col("doc_id") < 500)
-    val store = Dedup.portableSignatureStore(
-      docs.filter(col("doc_id") < 250), "doc_id", "text").persist()
-    val incoming = docs.filter(col("doc_id") >= 250)
-      .select(col("doc_id"), col("text")).as[(Long, String)].collect()
+    // unigram shingles over leading/trailing whitespace and empty
+    // texts: the split keeps the empty token, and both twins must
+    val edge = Seq((1L, " alpha beta gamma delta"), (2L, "alpha beta gamma delta"),
+        (3L, "alpha beta gamma delta "), (4L, ""), (5L, ""))
+      .toDF("doc_id", "text")
+    // (stored docs, incoming docs, shingleN, minMatches)
+    val inputs = Seq(
+      (docs.filter(col("doc_id") < 250), docs.filter(col("doc_id") >= 250), 3, 4),
+      (edge.filter(col("doc_id").isin(1L, 2L, 4L)),
+        edge.filter(col("doc_id").isin(1L, 3L, 5L)), 1, 1))
+    inputs.zipWithIndex.foreach { case ((old, incomingDf, shingleN, minMatches), n) =>
+      val store = Dedup.portableSignatureStore(old, "doc_id", "text", shingleN).persist()
+      val incoming = incomingDf.select(col("doc_id"), col("text")).as[(Long, String)].collect()
 
-    val batch = Dedup.sigStoreDedup(store, docs.filter(col("doc_id") >= 250),
-        "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(batch.nonEmpty, "no cross-half near-dups — test is vacuous")
-
-    val input = MemoryStream[(Long, String)]
-    val q = Dedup.sigStoreDedupStream(store,
-        input.toDF().toDF("doc_id", "text"), "doc_id", "text")
-      .writeStream.format("memory").queryName("sigstream")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      val (a, b) = incoming.splitAt(incoming.length / 2)
-      input.addData(a.toSeq); q.processAllAvailable()
-      input.addData(b.toSeq); q.processAllAvailable()
-      val streamed = s.table("sigstream")
+      val batch = Dedup.sigStoreDedup(store, incomingDf, "doc_id", "text",
+          shingleN, minMatches)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(streamed == batch,
-        s"missing=${(batch -- streamed).take(5)} extra=${(streamed -- batch).take(5)}")
-    } finally { q.stop(); store.unpersist(); () }
+      assert(batch.nonEmpty, s"input $n: no cross-half near-dups — test is vacuous")
+
+      val input = MemoryStream[(Long, String)]
+      val q = Dedup.sigStoreDedupStream(store,
+          input.toDF().toDF("doc_id", "text"), "doc_id", "text", shingleN, minMatches)
+        .writeStream.format("memory").queryName(s"sigstream$n")
+        .outputMode(OutputMode.Append()).start()
+      try {
+        val (a, b) = incoming.splitAt(incoming.length / 2)
+        input.addData(a.toSeq); q.processAllAvailable()
+        input.addData(b.toSeq); q.processAllAvailable()
+        val streamed = s.table(s"sigstream$n")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+        assert(streamed == batch, s"input $n: " +
+          s"missing=${(batch -- streamed).take(5)} extra=${(streamed -- batch).take(5)}")
+      } finally { q.stop(); store.unpersist(); () }
+    }
   }
 
   test("a pair colliding in every band still emits exactly once") {
