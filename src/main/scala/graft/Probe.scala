@@ -22,7 +22,11 @@ import graft.operators.Caching
   * so a sealed query shows the lineage it computes, not the
   * `Scan ExistingRDD` stub its eager checkpoint leaves. Then, per
   * sfDir, it makes one warm call and three measured calls (build,
-  * noop write, release) and prints one JSON record, also written to
+  * noop write, release); every warm call of the run comes before the
+  * first measured call, so no key's record carries the JVM's warm-up.
+  * Spark jobs are described `Probe warm <key> <sfDir>` and
+  * `Probe measured <key> <sfDir> <i>`.
+  * Each (key, sfDir) prints one JSON record, also written to
   * `<outDir>/<key>.<sfDir name>.json`:
   *   - `build_ms`, `eager_jobs`: construction; sealed operators run
   *     jobs before any action (`eager_jobs` counts SQL jobs, so the
@@ -61,19 +65,28 @@ object Probe {
     dir.mkdirs()
     val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try keys.flatMap { key =>
-      val query = SparkEntry.queries(key)
-      val plan = Caching.withoutSeals(
-        query(spark, sfDirs.head).queryExecution.explainString(FormattedMode))
-      release(spark)
-      Files.writeString(new File(dir, s"$key.plan.txt").toPath, plan)
-      sfDirs.map { sf =>
-        call(spark, query(spark, sf)) // warm
-        val rec = mapper.writeValueAsString(
-          record(spark, key, sf, confs, Seq.fill(MeasuredCalls)(call(spark, query(spark, sf)))))
-        println(rec)
-        Files.writeString(new File(dir, s"$key.${new File(sf).getName}.json").toPath, rec + "\n")
-        rec
+    try {
+      val queries = keys.map { key =>
+        val query = SparkEntry.queries(key)
+        val plan = Caching.withoutSeals(
+          query(spark, sfDirs.head).queryExecution.explainString(FormattedMode))
+        release(spark)
+        Files.writeString(new File(dir, s"$key.plan.txt").toPath, plan)
+        key -> query
+      }
+      // every warm call before any measured one: a fresh JVM's JIT and
+      // codegen warm-up would otherwise land on the first key's calls
+      for ((key, query) <- queries; sf <- sfDirs)
+        call(spark, s"Probe warm $key $sf", query(spark, sf))
+      queries.flatMap { case (key, query) =>
+        sfDirs.map { sf =>
+          val calls = (1 to MeasuredCalls).map(i =>
+            call(spark, s"Probe measured $key $sf $i", query(spark, sf)))
+          val rec = mapper.writeValueAsString(record(spark, key, sf, confs, calls))
+          println(rec)
+          Files.writeString(new File(dir, s"$key.${new File(sf).getName}.json").toPath, rec + "\n")
+          rec
+        }
       }
     } finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
@@ -84,10 +97,12 @@ object Probe {
   private final case class Call(buildMs: Long, eagerJobs: Long, phaseMs: Map[String, Long],
                                 execMs: Long, m: Metrics.Snapshot)
 
-  /** One measured call; `build` runs under the meter, so a sealed
-    * query's eager jobs count. Releases everything the call cached. */
-  private def call(spark: SparkSession, build: => DataFrame): Call = {
+  /** One call, its jobs described as `label`; `build` runs under the
+    * meter, so a sealed query's eager jobs count. Releases everything
+    * the call cached. */
+  private def call(spark: SparkSession, label: String, build: => DataFrame): Call = {
     val meter = Metrics.start(spark.sparkContext)
+    spark.sparkContext.setJobDescription(label)
     try {
       val t0 = System.nanoTime()
       val df = build
@@ -99,7 +114,7 @@ object Probe {
       df.write.format("noop").mode("overwrite").save()
       val execMs = (System.nanoTime() - t1) / 1000000L
       Call(buildMs, eagerJobs, phaseMs, execMs, meter.peek())
-    } finally { meter.stop(); release(spark) }
+    } finally { spark.sparkContext.setJobDescription(null); meter.stop(); release(spark) }
   }
 
   /** Drops every cached frame and persisted RDD (sealed results

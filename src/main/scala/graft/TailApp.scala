@@ -60,7 +60,15 @@ import graft.streaming.TailStream
   * `--snapshot` (needs `--ts-field`) switches from the incremental
   * per-batch preview to fire-once-per-complete-window semantics: the
   * SQL runs exactly once per window, over all of the window's rows,
-  * when the watermark closes it.
+  * when the watermark closes it. A decomposable aggregate SQL (count,
+  * min, max, sum, avg grouped by t0 columns) keeps running partials per
+  * (window, group) in state; any other SQL keeps the window's rows.
+  *
+  * `--checkpoint DIR` makes a restart resume where the last run stopped.
+  * With `--snapshot` the checkpoint's state depends on the SQL: a
+  * restart under SQL that needs the other state plan, other grouping
+  * columns or other aggregates fails at start, before any output; use a
+  * new checkpoint for such a change.
   *
   * `--log-level LEVEL` sets the Spark log level (the reference's
   * `-l/--log-level`, logrus levels); default WARN.

@@ -1,6 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -39,6 +44,16 @@ import graft.sources.LogSource
   *
   * State at 100 TB: the watermark bounds window state; the shuffle is
   * on (window, keys) only; parsing stays a narrow map on the source.
+  *
+  * State plan and checkpoints: in snapshot mode the window state depends
+  * on the SQL. Decomposable aggregate SQL holds partials keyed on
+  * (window, its grouping columns); any other SQL holds the window's rows
+  * (see [[TailStream.start]]). The first start writes that state plan
+  * into the checkpoint (`graft_state_plan`), and restarting the
+  * checkpoint under SQL that picks the other plan, other grouping
+  * columns or other aggregates fails at start, before any batch runs or
+  * any sink call. A change above the aggregate (ORDER BY, HAVING on the
+  * same aggregates, the projection) keeps the plan and restarts.
   *
   * Delivery semantics: the SOURCE side is exactly-once (checkpointed
   * file offsets; a restarted query never re-reads processed files),
@@ -204,27 +219,40 @@ object TailStream {
     * `snapshot = true` (COMPLETE WINDOW, needs `tsField` on every
     * source): the SQL fires exactly once per window, over that window's
     * full contents, when the event-time watermark closes it — the
-    * reference's window-snapshot semantics made distributed. Rows are
-    * packed per (window, shard) under the watermark, and in APPEND mode
-    * a (window, shard) group only reaches the batch once the watermark
-    * passes the window end. The batch caches those packed groups (one
-    * row per (window, shard) holding window_start, window_end and the
-    * `_rows` array), reads the closing windows off that small frame, and
-    * fires once per closed window, in window order; each view explodes
-    * only the selected window's groups, so a fire scans the rows of its
-    * window, not of the whole batch. A join feeds the same packing (two
-    * chained stateful operators — join state then window state, both
-    * watermark-bounded).
-    *
-    * Scale shape: buffering a window's rows is inherent to "arbitrary
-    * SQL over the complete window" (the reference holds the window in
-    * an in-memory database on one node); here the buffer lives in the
-    * state store sharded `shards` ways across executors, so no single
-    * task holds a hot window. Aggregations expressible as DataFrame aggs
-    * should prefer [[windowedAgg]], which keeps running partials instead
-    * of rows. A backlog drain from a followed file reads its first batch
-    * as several byte ranges, so the partial packing before the state
-    * shuffle runs on every core.
+    * reference's window-snapshot semantics made distributed. The window
+    * state is a watermarked APPEND-mode aggregate grouped by `window`, so
+    * a group only reaches the batch once the watermark passes the window
+    * end, and every closing window fires once, in window order. What the
+    * state holds is chosen once, at start, from the ANALYZED SQL
+    * ([[WindowPartials.choose]]), never from its text:
+    *  - PARTIALS, when the SQL is Sort/Limit/Project/Filter (HAVING)
+    *    operators over one Aggregate of t0 itself, grouped by plain t0
+    *    columns or by nothing, whose aggregates are all non-DISTINCT,
+    *    un-FILTERed count, min, max, sum or avg, with sums and averages
+    *    over integral or decimal values ([[DefaultSql]] and the usual
+    *    per-window `GROUP BY` qualify). The state is grouped by window
+    *    plus the SQL's grouping columns and holds their running
+    *    aggregates: one row per (window, group), not per line. A closing
+    *    window's partial rows come to the driver, and only the operators
+    *    above the Aggregate run, in one partition, over those few rows.
+    *  - ROWS, for everything else: N-source `_tname` views, joins, a
+    *    WHERE under the aggregate, DISTINCT or FILTER aggregates, float
+    *    sums, percentiles, `first`, window functions, SQL without an
+    *    aggregate. Rows are packed per (window, shard), sharded `shards`
+    *    ways across executors so no single task holds a hot window. The
+    *    batch caches the packed groups (one row per (window, shard)
+    *    holding window_start, window_end and the `_rows` array), reads
+    *    the closing windows off that small frame, and each view explodes
+    *    only the selected window's groups, so a fire scans the rows of its
+    *    window, not of the whole batch. A join feeds the same packing (two
+    *    chained stateful operators — join state then window state, both
+    *    watermark-bounded). Buffering rows is inherent to arbitrary SQL
+    *    over the complete window (the reference holds the window in an
+    *    in-memory database on one node).
+    * Both plans print the same bytes for the same SQL and close each
+    * window on the same batch. A backlog drain from a followed file reads
+    * its first batch as several byte ranges, so the aggregation before the
+    * state shuffle runs on every core.
     *
     * The SQL (default [[DefaultSql]]) and the format come from the first
     * config. `checkpointDir` makes the stream restartable (the
@@ -262,45 +290,94 @@ object TailStream {
     val sql = sources.head.sql.getOrElse(DefaultSql)
     val format = sources.head.format
     val dataCols = stream.columns.filterNot(_ == "window").toSeq
+    val partials =
+      if (!snapshot || !partialsEnabled || views.size != 1 || joinKeys.isDefined) None
+      else WindowPartials.choose(spark, stream.select(dataCols.map(col) ++ bounds: _*).schema, sql)
+    if (snapshot) pinStatePlan(spark, checkpointDir, partials.fold("rows")(_.layout))
     val out =
       if (!snapshot) stream
-      else stream
-        .groupBy(col("window"),
-          pmod(xxhash64(dataCols.map(col): _*), lit(shards)).as("_shard"))
-        .agg(collect_list(struct(dataCols.map(col): _*)).as("_rows"))
+      else partials match {
+        case Some(p) => byWindow(stream.select(col("*") +: bounds: _*), p.keys.map(col), p.aggs)
+        case None => byWindow(stream,
+          Seq(pmod(xxhash64(dataCols.map(col): _*), lit(shards)).as("_shard")),
+          Seq(collect_list(struct(dataCols.map(col): _*)).as("_rows")))
+      }
     out.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!snapshot) fire(flatWindow(batch, dataCols), views, sql, format, sink)
-        else {
-          // one cached row per (window, shard); rows explode per window
-          val packed = flatWindow(batch, Seq("_rows")).persist()
-          try {
-            // the set of windows closing per trigger is small
-            // (trigger/slide bounded)
-            val wins = packed.select("window_start", "window_end").distinct()
-              .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-            wins.foreach { case (ws, we) =>
-              val w = packed.filter(col("window_start") === ws && col("window_end") === we)
-                .select(col("window_start"), col("window_end"), explode(col("_rows")).as("_r"))
-                .select(Seq(col("window_start"), col("window_end")) ++
-                  dataCols.map(c => col(s"_r.$c").as(c)): _*)
-              fire(w, views, sql, format, sink)
-            }
-          } finally { packed.unpersist(); () }
+        else partials match {
+          case Some(p) =>
+            // one row per (window, group): the closing windows' partials
+            // come to the driver once, and each fire reads only its own
+            val rows = flatWindow(batch, p.columns)
+            rows.collect().groupBy(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
+              .foreach { case (_, part) =>
+                val partDf = batch.sparkSession.createDataFrame(part.toSeq.asJava, rows.schema)
+                sink(Formatters.format(p.finish(partDf), format, Some(sql)))
+              }
+          case None =>
+            // one cached row per (window, shard); rows explode per window
+            val packed = flatWindow(batch, Seq("_rows")).persist()
+            try {
+              // the set of windows closing per trigger is small
+              // (trigger/slide bounded)
+              val wins = packed.select("window_start", "window_end").distinct()
+                .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+              wins.foreach { case (ws, we) =>
+                val w = packed.filter(col("window_start") === ws && col("window_end") === we)
+                  .select(col("window_start"), col("window_end"), explode(col("_rows")).as("_r"))
+                  .select(Seq(col("window_start"), col("window_end")) ++
+                    dataCols.map(c => col(s"_r.$c").as(c)): _*)
+                fire(w, views, sql, format, sink)
+              }
+            } finally { packed.unpersist(); () }
         }
       }
       .start()
   }
 
+  /** Test hook: false keeps every snapshot SQL on row packing, the plan
+    * the partial plan must reproduce byte for byte. */
+  @volatile private[streaming] var partialsEnabled: Boolean = true
+
+  /** A snapshot checkpoint's window state depends on the SQL: rows, or
+    * partials keyed on its grouping columns. The first start writes the
+    * state plan into the checkpoint; a restart under SQL that needs
+    * another plan fails here, before the query runs a batch.
+    */
+  private def pinStatePlan(spark: SparkSession, checkpointDir: String, layout: String): Unit = {
+    val path = new Path(checkpointDir, "graft_state_plan")
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(path)) {
+      val in = fs.open(path)
+      val held = try new String(in.readAllBytes(), UTF_8) finally in.close()
+      require(held == layout,
+        s"checkpoint $checkpointDir holds window state as [$held], but this SQL needs [$layout]: " +
+          "restart it with SQL of the same state plan, or from a new checkpoint")
+    } else {
+      val out = fs.create(path, false)
+      try out.write(layout.getBytes(UTF_8)) finally out.close()
+    }
+  }
+
+  /** Groups a windowed stream by `window` plus `keys`: the watermarked
+    * Append-mode aggregate behind both snapshot state plans and
+    * [[windowedAgg]]. */
+  private def byWindow(df: DataFrame, keys: Seq[Column], aggs: Seq[Column]): DataFrame =
+    df.groupBy(col("window") +: keys: _*).agg(aggs.head, aggs.tail: _*)
+
   /** The `window` struct as window_start/window_end epoch seconds,
     * followed by the `rest` columns.
     */
   private def flatWindow(df: DataFrame, rest: Seq[String]): DataFrame =
-    df.select(Seq(unix_timestamp(col("window.start")).as("window_start"),
-      unix_timestamp(col("window.end")).as("window_end")) ++ rest.map(col): _*)
+    df.select(bounds ++ rest.map(col): _*)
+
+  private def bounds: Seq[Column] = Seq(
+    unix_timestamp(col("window.start")).as("window_start"),
+    unix_timestamp(col("window.end")).as("window_end"))
 
   /** One SQL fire: register every view over `rows` (window bounds already
     * flat), run the SQL and hand the formatted result to the sink.
@@ -324,19 +401,14 @@ object TailStream {
                   shards: Int = 32): StreamingQuery =
     start(spark, Seq(cfg), checkpointDir, sink, trigger, snapshot = true, shards = shards)
 
-  /** Continuous event-time windowed aggregation (update-mode state,
-    * watermark-bounded) — the engine-native alternative to per-batch
-    * SQL when the aggregation is expressible as DataFrame aggs.
+  /** Continuous event-time windowed aggregation as a DataFrame: the
+    * watermarked window aggregate snapshot mode runs for decomposable
+    * SQL, for callers that write their own aggregates and sink.
     */
   def windowedAgg(spark: SparkSession, cfg: Config,
-                  keys: Seq[String], aggs: Seq[org.apache.spark.sql.Column]): DataFrame = {
-    val ts = cfg.tsField.getOrElse(
-      throw new IllegalArgumentException("windowedAgg needs an event-time field"))
-    val size = s"${cfg.windowSizeSec} seconds"
-    val slide = s"${cfg.slideSec.getOrElse(cfg.windowSizeSec)} seconds"
-    parsed(spark, cfg)
-      .withWatermark(ts, cfg.watermarkDelay)
-      .groupBy((window(col(ts), size, slide) +: keys.map(col)): _*)
-      .agg(aggs.head, aggs.tail: _*)
+                  keys: Seq[String], aggs: Seq[Column]): DataFrame = {
+    if (cfg.tsField.isEmpty)
+      throw new IllegalArgumentException("windowedAgg needs an event-time field")
+    byWindow(windowed(parsed(spark, cfg), cfg), keys.map(col), aggs)
   }
 }

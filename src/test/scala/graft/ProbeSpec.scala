@@ -3,7 +3,10 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Smoke run of the per-query cost record on the shared session: one
@@ -13,8 +16,25 @@ class ProbeSpec extends SparkSpec {
 
   test("Probe records parse, count eager jobs, and dump pre-seal plans without leaking the scope") {
     val out = Files.createTempDirectory("graft-probe").toFile
-    val recs = Probe.run(spark, out.getAbsolutePath, Seq(sf), Seq("q01_agg", "d02_dedup_minhash"))
+    val described = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .filter(_.startsWith("Probe ")).foreach(described.add)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val recs = try Probe.run(spark, out.getAbsolutePath, Seq(sf), Seq("q01_agg", "d02_dedup_minhash"))
       .map(r => new ObjectMapper().readTree(r))
+    finally {
+      Metrics.start(spark.sparkContext).stop() // drains the listener bus: every job start is seen
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    // every (key, sfDir) is warmed before the first measured call of any key
+    val order = described.asScala.toSeq
+    val (warm, measured) = order.partition(_.startsWith("Probe warm "))
+    assert(warm.distinct == Seq(s"Probe warm q01_agg $sf", s"Probe warm d02_dedup_minhash $sf"), order)
+    assert(measured.distinct.size == 6, order)
+    assert(order.lastIndexWhere(warm.contains) < order.indexWhere(measured.contains), order)
     assert(recs.map(_.get("key").asText) == Seq("q01_agg", "d02_dedup_minhash"))
     val Seq(q01, d02) = recs
     recs.foreach { r =>
